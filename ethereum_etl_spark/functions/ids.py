@@ -8,6 +8,8 @@ Pure column expressions — JVM codegen, no Python.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,10 +27,18 @@ def item_timestamp(epoch_seconds: Column) -> Column:
     )
 
 
+@lru_cache(maxsize=None)
+def _stamp_cols(entity_type: str, ts_col: str | None) -> tuple[Column, Column | None]:
+    """(item_id, item_timestamp) expressions, built once per entity: the
+    streamer stamps every table every cycle."""
+    ts = item_timestamp(F.col(ts_col)) if ts_col else None
+    return item_id(entity_type, *ITEM_ID_FIELDS[entity_type]), ts
+
+
 def stamp(df: DataFrame, entity_type: str, ts_col: str | None = None) -> DataFrame:
     """Add item_id (+ item_timestamp when a timestamp column is present)."""
-    fields = ITEM_ID_FIELDS[entity_type]
-    df = df.withColumn("item_id", item_id(entity_type, *fields))
-    if ts_col and ts_col in df.columns:
-        df = df.withColumn("item_timestamp", item_timestamp(F.col(ts_col)))
-    return df
+    id_col, ts = _stamp_cols(entity_type, ts_col)
+    cols = {"item_id": id_col}
+    if ts is not None and ts_col in df.columns:
+        cols["item_timestamp"] = ts
+    return df.withColumns(cols)

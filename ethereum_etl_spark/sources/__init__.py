@@ -5,4 +5,4 @@ from ethereum_etl_spark.sources.wal import (  # noqa: F401
     generate_repo_wal,
     WalTailer,
 )
-from ethereum_etl_spark.sources.decode import decode_entity  # noqa: F401
+from ethereum_etl_spark.sources.decode import EntityDecoder, decode_entity  # noqa: F401

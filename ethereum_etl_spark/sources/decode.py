@@ -10,7 +10,9 @@ Decimal(38,0) fields. No per-row Python anywhere on this path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import lru_cache
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, StringType, StructField, StructType
 
@@ -50,6 +52,75 @@ def raw_json_schema(entity_type: str, extra_fields=None) -> StructType:
 _SIDECAR_VALUE_ENTITIES = {"transaction", "token_transfer", "internal_transfer"}
 
 
+class EntityDecoder:
+    """One entity's WAL decode, its column expressions built once.
+
+    Building the decode is driver work: ~20 casts per entity and one large
+    ``hex_to_dec38`` CASE tree per uint256 column, each node a py4j round
+    trip. A tail cycle decodes the same entities from a new batch every
+    cycle, so a long-lived caller (``ChainStreamer``) builds one decoder per
+    entity up front and applies it to each batch. The expressions are
+    unresolved column trees; any number of plans may share them.
+
+    Arguments are those of :func:`decode_entity`.
+    """
+
+    def __init__(
+        self,
+        entity_type: str,
+        ops=("upsert",),
+        include_seq: bool = True,
+        extra_fields=None,
+        uint256_sidecar: bool = False,
+    ):
+        schema = StructType(
+            list(ENTITY_SCHEMAS[entity_type].fields) + list(extra_fields or [])
+        )
+        self._include_seq = include_seq
+        self._where = (F.col("entity_type") == entity_type) & F.col("op").isin(*ops)
+        self._parse = F.from_json(
+            "payload", raw_json_schema(entity_type, extra_fields)
+        ).alias("r")
+        self._seq = F.col("seq").alias("_ingest_seq")
+        self._seq_ref = F.col("_ingest_seq")
+        self._typed = []
+        for f in schema.fields:
+            c = F.col(f.name)
+            if isinstance(f.dataType, DecimalType):
+                c = hex_to_dec38(c)
+            elif f.name in _ADDRESS_COLS:
+                c = to_normalized_address(c)
+            self._typed.append(c.cast(f.dataType).alias(f.name))
+        self._sidecar = None
+        if (
+            uint256_sidecar
+            and entity_type in _SIDECAR_VALUE_ENTITIES
+            and "value" in schema.fieldNames()
+        ):
+            # referencing the DECODED value post-projection keeps the
+            # decode single-pass; raw survives only where the decimal lost it
+            self._raw_value = F.col("value").alias("__raw_value")
+            self._out = [F.col(f.name) for f in schema.fields]
+            self._sidecar = F.when(
+                F.col("value").isNull() & F.col("__raw_value").isNotNull(),
+                F.col("__raw_value"),
+            ).alias("value_raw")
+
+    def __call__(self, wal_batch: DataFrame) -> DataFrame:
+        with_seq = self._include_seq and "seq" in wal_batch.columns
+        seq = [self._seq_ref] if with_seq else []
+        df = (
+            wal_batch.filter(self._where)
+            .select(self._parse, *([self._seq] if with_seq else []))
+            .select("r.*", *seq)
+        )
+        if self._sidecar is None:
+            return df.select(*self._typed, *seq)
+        return df.select(*self._typed, *seq, self._raw_value).select(
+            *self._out, *seq, self._sidecar
+        )
+
+
 def decode_entity(
     wal_batch: DataFrame,
     entity_type: str,
@@ -72,46 +143,25 @@ def decode_entity(
     schema stores value as STRING for the same reason,
     docs/limitations.md:9-12). NULL when the decimal is exact, so the column
     compresses to nothing on healthy data.
+
+    One-off form of :class:`EntityDecoder`; callers decoding many batches
+    should build the decoder once and reuse it.
     """
-    schema = StructType(
-        list(ENTITY_SCHEMAS[entity_type].fields) + list(extra_fields or [])
-    )
-    raw = raw_json_schema(entity_type, extra_fields)
-    sel = [F.from_json("payload", raw).alias("r")]
-    if include_seq and "seq" in wal_batch.columns:
-        sel.append(F.col("seq").alias("_ingest_seq"))
-    df = wal_batch.filter(
-        (F.col("entity_type") == entity_type) & F.col("op").isin(*ops)
-    ).select(*sel)
-    df = df.select("r.*", *(["_ingest_seq"] if len(sel) > 1 else []))
-    cols = []
-    for f in schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, DecimalType):
-            c = hex_to_dec38(c)
-        elif f.name in _ADDRESS_COLS:
-            c = to_normalized_address(c)
-        cols.append(c.cast(f.dataType).alias(f.name))
-    if "_ingest_seq" in df.columns:
-        cols.append(F.col("_ingest_seq"))
-    want_sidecar = (
-        uint256_sidecar
-        and entity_type in _SIDECAR_VALUE_ENTITIES
-        and "value" in df.columns
-    )
-    if want_sidecar:
-        # referencing the DECODED value post-projection keeps the Arrow
-        # decode single-pass; raw survives only where the decimal lost it
-        cols.append(F.col("value").alias("__raw_value"))
-        out = df.select(*cols)
-        return out.withColumn(
-            "value_raw",
-            F.when(
-                F.col("value").isNull() & F.col("__raw_value").isNotNull(),
-                F.col("__raw_value"),
-            ),
-        ).drop("__raw_value")
-    return df.select(*cols)
+    return EntityDecoder(
+        entity_type, ops, include_seq, extra_fields, uint256_sidecar
+    )(wal_batch)
+
+
+@lru_cache(maxsize=None)
+def _required_present(entity_type: str) -> Column | None:
+    """AND of ``isNotNull`` over the entity's required fields, built once
+    per entity type."""
+    pred = None
+    for f in ENTITY_SCHEMAS[entity_type].fields:
+        if not f.nullable:
+            c = F.col(f.name).isNotNull()
+            pred = c if pred is None else pred & c
+    return pred
 
 
 def drop_null_keys(decoded: DataFrame, entity_type: str) -> DataFrame:
@@ -121,8 +171,5 @@ def drop_null_keys(decoded: DataFrame, entity_type: str) -> DataFrame:
     the decode plan, Catalyst pushes the predicate below the projection and
     duplicates the from_json parse into the filter (verified on the
     physical plan)."""
-    out = decoded
-    for f in ENTITY_SCHEMAS[entity_type].fields:
-        if not f.nullable:
-            out = out.filter(F.col(f.name).isNotNull())
-    return out
+    pred = _required_present(entity_type)
+    return decoded if pred is None else decoded.filter(pred)

@@ -42,7 +42,7 @@ from ethereum_etl_spark.schemas import (
     ENTITY_SCHEMAS,
     TOKEN_TRANSFER_SCHEMA,
 )
-from ethereum_etl_spark.sources.decode import decode_entity
+from ethereum_etl_spark.sources.decode import EntityDecoder, drop_null_keys
 from ethereum_etl_spark.sources.wal import WalTailer
 
 
@@ -99,6 +99,85 @@ CANDLE_BUCKETS = {
     "1h": ("1 hour", 3600),
     "1d": ("1 day", 86_400),
 }
+
+
+# raw WAL entity → the configured entities whose derivation decodes it (the
+# ``get(...)`` calls of _derive): ChainStreamer builds one decoder per raw
+# entity that any configured entity needs
+_DECODED_FOR = {
+    "block": {"block", "log", "token_transfer"},
+    "transaction": {"transaction", "native_balance"},
+    "receipt": {"transaction", "receipt"},
+    "log": {"log", "token_transfer", "dex_pool", "dex_trade"},
+    "geth_trace": {"geth_trace", "trace", "contract", "internal_transfer"},
+    "token": {"token"},
+}
+
+
+def _release_checkpoints(*frames) -> None:
+    """Unpersist the RDDs behind eager ``localCheckpoint`` frames, found in
+    any nesting of tuples, lists and dicts. A checkpointed frame's plan is a
+    LogicalRDD leaf over its RDD, which ``df.unpersist()`` does not reach
+    (that only drops CacheManager entries); other frames are left alone."""
+    for f in frames:
+        if isinstance(f, (tuple, list)):
+            _release_checkpoints(*f)
+        elif isinstance(f, dict):
+            _release_checkpoints(*f.values())
+        elif isinstance(f, DataFrame):
+            plan = f._jdf.logicalPlan()
+            if plan.nodeName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+
+
+def _batch_stats_aggs() -> list:
+    """The batch-stats aggregates, grouped by entity_type: block span, row
+    count, reorg row count, the distinct log topic0 set and the block rows'
+    (block_number, seq, timestamp).
+
+    The topic0 set rides the same scan via a JSON-prefix probe on the raw
+    payload (no full log decode): it gates the entire dex subgraph in
+    _derive, and extracting it here removes the last executor job from the
+    plan phase — the first full log decode then happens inside the merge
+    threads, overlapped with the independent entity merges. The block rows
+    give etl_delay its block timestamps (_block_timestamps) without a
+    lookup job of its own."""
+    block_row = (F.col("entity_type") == "block") & F.col("op").isin("upsert", "reorg")
+    return [
+        F.min("block_number").alias("lo"),
+        F.max("block_number").alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("op") == "reorg", 1).otherwise(0)).alias("nr"),
+        F.collect_set(
+            F.when(
+                F.col("entity_type") == "log",
+                F.lower(F.get_json_object("payload", "$.topics[0]")),
+            )
+        ).alias("t0s"),
+        F.collect_list(
+            F.when(
+                block_row,
+                F.struct(
+                    "block_number",
+                    "seq",
+                    # the field and type the block decode reads
+                    F.from_json("payload", "timestamp long")["timestamp"].alias("ts"),
+                ),
+            )
+        ).alias("bts"),
+    ]
+
+
+def _block_timestamps(srows) -> dict[int, int | None]:
+    """Block number → timestamp of its latest-seq block row in the batch:
+    the reorg winner, the same row the block decode keeps."""
+    latest: dict[int, tuple[int, int | None]] = {}
+    for r in srows:
+        for b in r["bts"]:
+            bn = int(b["block_number"])
+            if bn not in latest or b["seq"] > latest[bn][0]:
+                latest[bn] = (b["seq"], b["ts"])
+    return {bn: ts for bn, (_seq, ts) in latest.items()}
 
 
 def _cluster_batch(batch: DataFrame) -> DataFrame:
@@ -249,6 +328,27 @@ class ChainStreamer:
         # taking the read+stats latency off the next cycle's critical path
         self._prefetch = None
         self._prefetch_pool = None
+        # per-entity decoders and the stats aggregates, built once: every
+        # cycle applies the same expressions to a new batch. Eager, not on
+        # first use — the prefetch thread decodes too.
+        want = set(cfg.entity_types)
+        self._decoders = {
+            e: EntityDecoder(
+                e,
+                ops=("upsert", "reorg"),
+                extra_fields=cfg.extra_entity_fields.get(e),
+                uint256_sidecar=cfg.uint256_sidecar,
+            )
+            for e, users in _DECODED_FOR.items()
+            if users & want
+        }
+        self._stats_aggs = _batch_stats_aggs()
+        # generated classes compiled so far (cache misses only) — the
+        # per-cycle delta goes to lineage as codegen_compiles
+        self._compiles = (
+            spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME()
+        )
         # scratch spills are always rebuilt from the WAL — drop leftovers
         # from a crashed run before they accumulate
         shutil.rmtree(f"{cfg.warehouse}/_staging", ignore_errors=True)
@@ -319,7 +419,6 @@ class ChainStreamer:
         from ethereum_etl_spark.operators.dex import FACTORY_ABIS
         from ethereum_etl_spark.operators.dex_combined import FAMILY_ABIS
         from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
-        from ethereum_etl_spark.sources.decode import decode_entity, drop_null_keys
 
         present_t0s = {
             t for r in srows for t in (r["t0s"] if "t0s" in r.asDict() else []) if t
@@ -331,14 +430,7 @@ class ChainStreamer:
         ]
         if not factory_hit and not present_families:
             return None
-        logs = drop_null_keys(
-            decode_entity(
-                batch, "log", ops=("upsert", "reorg"),
-                extra_fields=self.cfg.extra_entity_fields.get("log"),
-                uint256_sidecar=self.cfg.uint256_sidecar,
-            ),
-            "log",
-        )
+        logs = drop_null_keys(self._decoders["log"](batch), "log")
         all_abis = list(FACTORY_ABIS) + [
             a for f in present_families for a in FAMILY_ABIS[f]
         ]
@@ -358,7 +450,7 @@ class ChainStreamer:
         return {"parsed": parsed, "marked": marked}
 
     def _take_prefetch(self, watermark: int):
-        """Consume a matching prefetch; discard (and unpersist) a stale one."""
+        """Consume a matching prefetch; release a stale one."""
         pf, self._prefetch = self._prefetch, None
         if pf is None:
             return None
@@ -366,34 +458,19 @@ class ChainStreamer:
         if pre is None:
             return None
         if pre["lo"] != watermark:
-            self._discard_batch(pre["df"])
+            self._release_prefetch(pre)
             return None
         return pre
 
+    def _release_prefetch(self, pre: dict) -> None:
+        """Free everything an unused prefetch pins: the batch (cache or
+        spill) and the eager parsed/marked checkpoints."""
+        self._discard_batch(pre["df"])
+        _release_checkpoints(pre.get("parsed"))
+
     def _batch_stats(self, batch: DataFrame):
-        """One pass over the raw batch: per-entity row counts + block span +
-        reorg presence + the distinct log topic0 set. The topic0 set rides
-        the same scan via a JSON-prefix probe on the raw payload (no full
-        log decode): it gates the entire dex subgraph in _derive, and
-        extracting it here removes the last executor job from the plan
-        phase — the first full log decode then happens inside the merge
-        threads, overlapped with the independent entity merges."""
-        return (
-            batch.groupBy("entity_type")
-            .agg(
-                F.min("block_number").alias("lo"),
-                F.max("block_number").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("op") == "reorg", 1).otherwise(0)).alias("nr"),
-                F.collect_set(
-                    F.when(
-                        F.col("entity_type") == "log",
-                        F.lower(F.get_json_object("payload", "$.topics[0]")),
-                    )
-                ).alias("t0s"),
-            )
-            .collect()
-        )
+        """One pass over the raw batch (see _batch_stats_aggs)."""
+        return batch.groupBy("entity_type").agg(*self._stats_aggs).collect()
 
     def _dim_snapshot(self, name: str, cols: list[str]) -> DataFrame:
         """Committed dimension read, cached ACROSS cycles until the table
@@ -523,23 +600,14 @@ class ChainStreamer:
 
     # ---------- one sync cycle ----------
 
-    def _decode_batch(self, batch: DataFrame, ops=("upsert", "reorg")):
+    def _decode_batch(self, batch: DataFrame):
         """Decode raw entities once, cached — the memoized thunk DAG."""
         cache = {}
-
-        from ethereum_etl_spark.sources.decode import drop_null_keys
-
         views = {}
 
         def get(entity):
             if entity not in cache:
-                cache[entity] = decode_entity(
-                    batch,
-                    entity,
-                    ops=ops,
-                    extra_fields=self.cfg.extra_entity_fields.get(entity),
-                    uint256_sidecar=self.cfg.uint256_sidecar,
-                ).cache()
+                cache[entity] = self._decoders[entity](batch).cache()
                 # null-key guard sits ABOVE the cache boundary so the JSON
                 # parse runs exactly once (see drop_null_keys docstring)
                 views[entity] = drop_null_keys(cache[entity], entity)
@@ -550,6 +618,7 @@ class ChainStreamer:
     def _derive(
         self,
         get,
+        dex_cell: dict,
         aux_cache: list | None = None,
         present_t0s: set | None = None,
         pre_parsed=None,
@@ -557,7 +626,10 @@ class ChainStreamer:
         """Entity name → {df, merge opts} (decode + enrich + stamp).
 
         The demand-driven DAG of eth_streamer_adapter.py:184-260: parents
-        are computed once (cached), children reuse them.
+        are computed once (cached), children reuse them. ``dex_cell``: the
+        per-batch memo shared by dex discovery and trades, filled as merges
+        demand its frames; the caller releases its checkpoints once the
+        batch is done.
         """
         from ethereum_etl_spark.operators.balances import (
             native_balances_from_transactions,
@@ -677,7 +749,6 @@ class ChainStreamer:
                 stamped=False,
             )
         present_families: list = []
-        dex_cell: dict = {}  # per-batch memo shared by discovery + trades
         if pre_parsed is not None:
             # parse (+ marked window frame) pre-built and checkpointed by
             # the prefetch thread, overlapped with the previous batch's
@@ -1280,6 +1351,7 @@ class ChainStreamer:
         self, tailer: WalTailer, watermark: int, allow_skip: bool = False
     ) -> int | None:
         t0 = time.time()
+        compiles0 = self._compiles.getCount()
         pre = self._take_prefetch(watermark)
         pre_srows = None
         pre_parsed = None
@@ -1297,7 +1369,7 @@ class ChainStreamer:
                 pre_parsed = pre.get("parsed")
             else:
                 if pre is not None:
-                    self._discard_batch(pre["df"])
+                    self._release_prefetch(pre)
                 batch = self._prepare_batch(
                     tailer.read_range(watermark, target), watermark, target
                 )
@@ -1313,7 +1385,7 @@ class ChainStreamer:
                 batch, pre_srows = pre["df"], pre["srows"]
                 pre_parsed = pre.get("parsed")
             elif pre is not None:
-                self._discard_batch(pre["df"])
+                self._release_prefetch(pre)
             if target is None:
                 return None
             if pre_srows is None:
@@ -1335,6 +1407,9 @@ class ChainStreamer:
             lo=watermark,
             hi=target,
             duration_s=round(time.time() - t0, 3),
+            # generated classes compiled during the cycle (the prefetch
+            # thread's included): a steady cycle should hit the class cache
+            codegen_compiles=self._compiles.getCount() - compiles0,
             **info,
         )
         return target
@@ -1361,7 +1436,7 @@ class ChainStreamer:
         staged_path = getattr(batch, "_ees_staged", None)
         if not getattr(batch, "_ees_clustered", False):
             batch = _cluster_batch(batch)
-        if staged_path is None:
+        if staged_path is None and not batch.is_cached:
             batch = batch.cache()
 
         # ONE stats pass over the batch, grouped by entity_type: block span
@@ -1434,9 +1509,15 @@ class ChainStreamer:
         present_t0s = {
             t for r in srows for t in (r["t0s"] if "t0s" in r.asDict() else []) if t
         }
+        if has_reorg:
+            # the pre-parse reads the unfiltered batch; the reorg path
+            # parses the winner-filtered one instead
+            _release_checkpoints(pre_parsed)
+            pre_parsed = None
+        dex_cell: dict = {}
         derived = self._derive(
-            get, aux_cache, present_t0s=present_t0s,
-            pre_parsed=None if has_reorg else pre_parsed,
+            get, dex_cell, aux_cache, present_t0s=present_t0s,
+            pre_parsed=pre_parsed,
         )
         phase_secs["plan"] = round(time.time() - __t, 3)
         __t = time.time()
@@ -1644,18 +1725,11 @@ class ChainStreamer:
         # etl_delay (A5, reference etl_delay MVs schema.sql:769-799): one
         # metrics row per entity per batch — indexed_at − block timestamp of
         # the entity's highest merged block, the indexation-delay stream a
-        # monitoring UI reads. Bounded work: #entities block lookups on the
-        # already-cached batch.
+        # monitoring UI reads. The timestamps come from the stats pass.
         etl_delay: dict[str, dict] = {}
         hi_by_entity = {r["entity_type"]: int(r["hi"]) for r in srows}
         if "block" in raw_counts and hi_by_entity:
-            ts_by_block = {
-                int(r["number"]): int(r["timestamp"])
-                for r in get("block")
-                .filter(F.col("number").isin(sorted(set(hi_by_entity.values()))))
-                .select("number", "timestamp")
-                .collect()
-            }
+            ts_by_block = _block_timestamps(srows)
             indexed_at = time.time()
             for e, hi in hi_by_entity.items():
                 ts = ts_by_block.get(hi)
@@ -1668,6 +1742,7 @@ class ChainStreamer:
 
         for cdf in list(cache.values()) + aux_cache:
             cdf.unpersist()
+        _release_checkpoints(dex_cell)
         if staged_path is None:
             batch.unpersist()
         else:
@@ -2230,8 +2305,15 @@ class ChainStreamer:
             raise LookupError(
                 f"{name} incomplete for blocks [{lo_block}, {hi_block}] and no WAL fallback"
             )
-        fallback = decode_entity(
-            wal.filter(F.col("block_number").between(lo_block, hi_block)), entity
+        # the streamer's own decoder when it has one, so the fallback
+        # carries the same evolved and sidecar columns as the table; the
+        # range read takes upserts only, as the node would serve them
+        decode = self._decoders.get(entity) or EntityDecoder(entity)
+        fallback = decode(
+            wal.filter(
+                F.col("block_number").between(lo_block, hi_block)
+                & (F.col("op") == "upsert")
+            )
         )
         return fallback, "wal"
 
@@ -2291,4 +2373,4 @@ class ChainStreamer:
         if pf is not None:
             pre = pf.result()
             if pre is not None:
-                self._discard_batch(pre["df"])
+                self._release_prefetch(pre)

@@ -106,6 +106,47 @@ def test_reorg_replaces_block_state(spark, tmp_path):
     assert {r["block_hash"] for r in txs7.collect()} == {forked[7]}
 
 
+def test_etl_delay_reorg_batch_reads_winning_block(spark, tmp_path):
+    """etl_delay in a batch that reorgs its own last blocks: each entity's
+    row names its highest block, and the timestamp is the one of the block
+    row that won (the fork's, committed to the blocks table), not the
+    orphan's."""
+    fork_ts = 1_700_000_000
+    spec, wal = _wal(spark, tmp_path, reorg_blocks=(18, 19), reorg_lag=0)
+    # give the fork's block rows a timestamp of their own, so the delay row
+    # shows which of the two block rows it read
+    wal = wal.withColumn(
+        "payload",
+        F.when(
+            (F.col("op") == "reorg") & (F.col("entity_type") == "block"),
+            F.regexp_replace("payload", '"timestamp":[0-9]+', f'"timestamp":{fork_ts}'),
+        ).otherwise(F.col("payload")),
+    )
+    cfg = StreamerConfig(warehouse=str(tmp_path / "wh"), batch_size=1000, partition_size=10)
+    s = ChainStreamer(spark, cfg)
+    s.run(WalTailer(wal, batch_size=1000))
+
+    ts = {r["number"]: r["timestamp"] for r in s.tables["blocks"].read().collect()}
+    assert ts[19] == fork_ts
+    his = {
+        r["entity_type"]: r["hi"]
+        for r in wal.groupBy("entity_type").agg(F.max("block_number").alias("hi")).collect()
+    }
+    (entry,) = [e for e in s.lineage.entries() if e.get("etl_delay")]
+    assert entry["reorg"]
+    delay = entry["etl_delay"]
+    assert set(delay) == set(his)
+    for ent, row in delay.items():
+        assert row["block_number"] == his[ent], ent
+        # an entity whose highest block has no block row gets no timestamp
+        assert row["timestamp"] == ts.get(row["block_number"]), ent
+        if row["timestamp"] is None:
+            assert row["delay_s"] is None
+            continue
+        assert abs(row["delay_s"] - (row["indexed_at"] - row["timestamp"])) < 0.002
+    assert delay["block"]["timestamp"] == fork_ts
+
+
 def test_repo_file_wal_generic_cdc(spark, tmp_path):
     """north_rule shape: (repo, path, commit, lang, content) replay →
     latest-file table keyed (repo, path)."""
