@@ -56,6 +56,12 @@ def hex_to_dec38(c: Column) -> Column:
       touches big arithmetic: value = −(complement + 1);
     - plain decimal strings (dex parsed_event contract) → try_cast.
 
+    Input contract: machine-generated words. Hex input must be exactly
+    '0x'/'~0x' followed by hex digits, so whitespace padding or '_'
+    grouping ('0x1f ', ' 0x1f', '0x1_f') yields NULL, as does '_' in a
+    decimal string ('1_000'). Decimal strings go through Spark's cast,
+    which trims surrounding whitespace: ' 42' and '42 ' both yield 42.
+
     Charset gate via translate-to-empty: one linear scan per word inside
     codegen — the r2 rlike + regexp_replace pair ran the regex engine twice
     per word and dominated q23 (VERDICT r2 'what's wrong #4').

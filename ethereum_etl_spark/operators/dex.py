@@ -1,26 +1,24 @@
-"""DEX trade assembly (J6/J7, A8-A10 surface) — Uniswap-V2-family semantics.
+"""DEX vocabulary: event ABIs per AMM family, pool discovery, dimension DDLs.
 
-Re-expresses the reference's dex subsystem on DataFrames:
-- trade assembly joins: parsed_logs × broadcast(dex_pools) on pool address ×
-  broadcast(tokens) per pool token (jobs/export_dex_trades.py:44-80 builds
-  the same three hash maps in Python dicts).
-- amounts: Swap → (amountIn − amountOut)/10^decimals per token; Mint/Burn →
-  ±amounts (service/dex/uniswap_v2/uniswap_v2.py:166-230 family).
-- reserves/prices: the reference point-calls getReserves at block−1
-  (uniswap_v2.py:124-135); a lake engine reads them from the Sync event the
-  pair emits in the SAME transaction before every Swap/Mint/Burn — an
-  as-of lookup within (pool, tx) ordered by log_index, done with a window,
-  no RPC. price0 = reserve1/reserve0 with the infinite-price clamp → 0
-  (uniswap_v2.py:151-156, misc/info.py INFINITE_PRICE_THRESHOLD).
-- enrichment (J7): trades × blocks via the shared broadcast enrich.
+The reference prices each AMM family with its own resolver class
+(service/dex/*/, dispatched by dex_client_factory.py). Here one extractor,
+:func:`ethereum_etl_spark.operators.dex_combined.extract_dex_trades_combined`,
+assembles trades for every family; this module holds what it and the
+streamer share:
 
-Scale shape: pools/tokens are broadcast dims; the only shuffle is the
-within-tx window (keyed by pool+tx — bounded groups).
+- the ``*_ABIS`` event lists, one per family namespace (parsed by
+  :func:`ethereum_etl_spark.operators.parsed_logs.parse_logs`);
+- :func:`discover_pools`: factory create events → the dex_pools dimension
+  (export_dex_pools_job's RPC introspection, done from the event stream);
+- the pool/token/trade DDLs, ``_pe`` (a parsed-event field as double) and
+  ``_asof_pool_reserves`` (uniswap_v3 reserves from pool balance history);
+- the J7/A8/A10 helpers over assembled trades: ``enrich_dex_trades``,
+  ``liquidity_merge`` and ``latest_price_per_token``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ethereum_etl_spark.operators.parsed_logs import EventAbi
@@ -88,140 +86,6 @@ def _pe(name):
     return hex_to_dec38(F.col("parsed_event")[name]).cast("double")
 
 
-def extract_dex_trades(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """parsed uniswap-v2 logs → dex_trades rows (EthDexTrade shape:
-    token_amounts, pool, tx, log_index, event_type, reserves, prices,
-    token_addresses, wallet).
-
-    v2-FORK coverage (solidly/sushiswap/meshswap/canto_dex — reference
-    subclasses of UniswapV2Amm with identical event shapes): the Swap/Sync/
-    Mint/Burn decode is byte-identical across forks; what differs is the
-    NAMESPACE attribution, which the reference derives from the creating
-    factory. When the ``pools`` dimension carries an ``amm`` column (as
-    discover_pools emits), the trade inherits the pool's label instead of
-    the hardcoded 'uniswap_v2'.
-
-    Kyber DMM pools (namespace "dmm") reuse v2's Mint/Burn topic0s but have
-    their OWN Swap and 4-word Sync — those Mint/Burn rows flow through THIS
-    extractor (attributed "dmm" via the pool dim), so DMM Sync rows are
-    admitted as reserve marks here (their reserve0/reserve1 fields are the
-    REAL reserves, words 3-4; the reference's DMMAmm inherits v2's
-    getReserves math, dmm/dmm.py:14-18 + uniswap_v2.py:121-135). DMM Swaps
-    output from extract_dex_trades_dmm."""
-    return _extract_v2_family(
-        parsed_logs, pools, tokens,
-        namespace="uniswap_v2", default_amm="uniswap_v2",
-        extra_sync_namespaces=("dmm",),
-    )
-
-
-def _extract_v2_family(
-    parsed_logs: DataFrame,
-    pools: DataFrame,
-    tokens: DataFrame,
-    namespace: str,
-    default_amm: str,
-    extra_sync_namespaces: tuple[str, ...] = (),
-) -> DataFrame:
-    pcols = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        "token_addresses",
-        F.element_at("token_addresses", 1).alias("__t0"),
-        F.element_at("token_addresses", 2).alias("__t1"),
-    ]
-    if "amm" in pools.columns:
-        pcols.append(F.col("amm").alias("__pool_amm"))
-    p = F.broadcast(pools.select(*pcols))
-    tok = tokens.select("address", "decimals")
-    admit = F.array_contains(F.col("namespace"), namespace) & F.col(
-        "event_name"
-    ).isin("Swap", "Sync", "Mint", "Burn")
-    for ns in extra_sync_namespaces:
-        # foreign-namespace Sync marks (e.g. DMM's 4-word Sync feeding the
-        # reserves of v2-topic0 Mint/Burn on the same pool): mark-only —
-        # the output filter drops every Sync row
-        admit = admit | (
-            F.array_contains(F.col("namespace"), ns)
-            & (F.col("event_name") == "Sync")
-        )
-    events = parsed_logs.filter(admit)
-    ev = (
-        events.join(p, on="contract_address", how="inner")
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t0"), F.col("decimals").alias("__d0"))),
-            on="__t0", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t1"), F.col("decimals").alias("__d1"))),
-            on="__t1", how="left",
-        )
-        .withColumn("__s0", F.pow(F.lit(10.0), F.coalesce("__d0", F.lit(18))))
-        .withColumn("__s1", F.pow(F.lit(10.0), F.coalesce("__d1", F.lit(18))))
-    )
-
-    # reserves as-of: last Sync in the same (pool, tx) before this log —
-    # the no-RPC rendering of getReserves(block-1) + same-tx state updates
-    w = (
-        Window.partitionBy("contract_address", "transaction_hash")
-        .orderBy("log_index")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ev = (
-        ev.withColumn("__sync_r0", F.when(F.col("event_name") == "Sync", _pe("reserve0")))
-        .withColumn("__sync_r1", F.when(F.col("event_name") == "Sync", _pe("reserve1")))
-        .withColumn("reserve0", F.last("__sync_r0", ignorenulls=True).over(w) / F.col("__s0"))
-        .withColumn("reserve1", F.last("__sync_r1", ignorenulls=True).over(w) / F.col("__s1"))
-    )
-    price0 = F.when(F.col("reserve0") > 0, F.col("reserve1") / F.col("reserve0")).otherwise(F.lit(0.0))
-    price1 = F.when(F.col("reserve1") > 0, F.col("reserve0") / F.col("reserve1")).otherwise(F.lit(0.0))
-    clamp = lambda c: F.when(c >= INFINITE_PRICE_THRESHOLD, F.lit(0.0)).otherwise(c)  # noqa: E731
-
-    amount0 = (
-        F.when(F.col("event_name") == "Swap", (_pe("amount0In") - _pe("amount0Out")) / F.col("__s0"))
-        .when(F.col("event_name") == "Mint", _pe("amount0") / F.col("__s0"))
-        .when(F.col("event_name") == "Burn", -_pe("amount0") / F.col("__s0"))
-    )
-    amount1 = (
-        F.when(F.col("event_name") == "Swap", (_pe("amount1In") - _pe("amount1Out")) / F.col("__s1"))
-        .when(F.col("event_name") == "Mint", _pe("amount1") / F.col("__s1"))
-        .when(F.col("event_name") == "Burn", -_pe("amount1") / F.col("__s1"))
-    )
-    wallet = F.coalesce(F.col("parsed_event")["to"], F.col("parsed_event")["sender"])
-
-    return (
-        ev.filter(F.col("event_name") != "Sync")  # Sync only feeds reserves
-        .select(
-            F.array(amount0, amount1).alias("token_amounts"),
-            F.col("contract_address").alias("pool_address"),
-            "transaction_hash",
-            "log_index",
-            "block_number",
-            F.lower(F.col("event_name")).alias("event_type"),
-            F.array(
-                F.coalesce("reserve0", F.lit(0.0)), F.coalesce("reserve1", F.lit(0.0))
-            ).alias("token_reserves"),
-            F.array(clamp(price0), clamp(price1)).alias("token_prices"),
-            "token_addresses",
-            "factory_address",
-            wallet.alias("wallet_address"),
-            (
-                F.coalesce(F.col("__pool_amm"), F.lit(default_amm))
-                if "amm" in pools.columns
-                else F.lit(default_amm)
-            ).alias("amm"),
-        )
-        .withColumn(
-            "event_type",
-            F.when(F.col("event_type") == "swap", "swap")
-            .when(F.col("event_type") == "mint", "mint")
-            .otherwise("burn"),
-        )
-    )
-
-
 # Kyber DMM (reference service/dex/dmm/dmm.py — a UniswapV2Amm subclass
 # ENABLED in the live factory, dex_client_factory.py:46): v2 semantics under
 # DMM's own signatures — Swap carries a trailing feeInPrecision word and
@@ -256,18 +120,6 @@ DMM_ABIS = [
         contract_name="pool",
     ),
 ]
-
-
-def extract_dex_trades_dmm(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Kyber DMM Swap → dex_trades rows: v2 amount/price/reserve math over
-    DMM's own topic0s (the 4-word Sync's reserve0/reserve1 trailing pair).
-    Mint/Burn live in extract_dex_trades (shared v2 topic0s — see its
-    docstring); this extractor emits Swaps only."""
-    return _extract_v2_family(
-        parsed_logs, pools, tokens, namespace="dmm", default_amm="dmm"
-    )
 
 
 def enrich_dex_trades(trades: DataFrame, blocks: DataFrame, tokens: DataFrame) -> DataFrame:
@@ -382,140 +234,6 @@ UNISWAP_V3_ABIS = [
         contract_name="pool",
     ),
 ]
-
-
-def extract_dex_trades_v3(
-    parsed_logs: DataFrame,
-    pools: DataFrame,
-    tokens: DataFrame,
-    pool_balances: DataFrame | None = None,
-    namespace: str = "uniswap_v3",
-    amm: str | None = None,
-    amount0_key: str = "amount0",
-    amount1_key: str = "amount1",
-    sqrtp_key: str = "sqrtPriceX96",
-    event_names: tuple[str, ...] = ("Swap", "Mint", "Burn", "Collect"),
-) -> DataFrame:
-    """parsed uniswap-v3 pool logs → dex_trades rows.
-
-    Reference semantics (uniswap_v3.py:134-226):
-    - token_amounts = [amount0/10^d0, amount1/10^d1] for Swap/Mint/Burn and
-      Collect (Collect resolves through the burn path → event_type 'burn');
-      v3 Swap amounts are SIGNED int256 (out-token negative) — decoded by
-      the signed static-ABI path.
-    - price0 = (sqrtPriceX96² / 2¹⁹²) / (10^d1 / 10^d0); price1 = 1/price0
-      (uniswap_v3.py:288-295). Non-Swap events carry no sqrtPriceX96 and the
-      reference point-calls slot0; the lake rendering takes the last Swap's
-      sqrtPriceX96 in the same (pool, tx) window, else 0 (the reference's
-      error fallback).
-    - reserves: the reference point-calls balanceOf(pool) per token at the
-      trade block (uniswap_v3.py:123-132); here an AS-OF join against the
-      ``pool_balances`` table (token_address, holder_address, block_number,
-      value) — latest balance ≤ trade block, scaled by token decimals.
-      Without it reserves are 0 (the reference's fallback).
-
-    v3-FORK coverage: KyberSwap Elastic's Swap
-    (service/dex/kyberswap_elastic/Pool.json — deltaQty0/deltaQty1/sqrtP)
-    has the IDENTICAL canonical signature Swap(address,address,int256,
-    int256,uint160,uint128,int24), hence the SAME topic0 as uniswap v3 —
-    indistinguishable at the log level. Fork pools therefore decode through
-    the v3 inventory and are ATTRIBUTED via the ``amm`` column of the pool
-    dimension (the creating factory), the same mechanism as the v2 forks;
-    the namespace/field-key parameters remain for forks that DO rename the
-    event. quickswap_v3 (Algebra) swaps share this shape minus the fee
-    field ordering and ride the same path.
-    """
-    pcols3 = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        "token_addresses",
-        F.element_at("token_addresses", 1).alias("__t0"),
-        F.element_at("token_addresses", 2).alias("__t1"),
-    ]
-    if "amm" in pools.columns:
-        pcols3.append(F.col("amm").alias("__pool_amm"))
-    p = F.broadcast(pools.select(*pcols3))
-    tok = tokens.select("address", "decimals")
-    events = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), namespace)
-        & F.col("event_name").isin(*event_names)
-    )
-    ev = (
-        events.join(p, on="contract_address", how="inner")
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t0"), F.col("decimals").alias("__d0"))),
-            on="__t0", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t1"), F.col("decimals").alias("__d1"))),
-            on="__t1", how="left",
-        )
-        .withColumn("__s0", F.pow(F.lit(10.0), F.coalesce("__d0", F.lit(18))))
-        .withColumn("__s1", F.pow(F.lit(10.0), F.coalesce("__d1", F.lit(18))))
-    )
-
-    # sqrtPriceX96 as-of within (pool, tx): Swap rows carry it; Mint/Burn/
-    # Collect take the latest preceding one (same shape as the v2 Sync
-    # window — no RPC)
-    w = (
-        Window.partitionBy("contract_address", "transaction_hash")
-        .orderBy("log_index")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # sqrtPriceX96 is uint160 (max ~1.46e48): decode straight to double —
-    # routing it through hex_to_dec38 NULLs above Decimal(38,0) and extreme
-    # decimal-skew pairs would silently price at 0 / a stale mark (ADVICE r2)
-    from ethereum_etl_spark.functions.hex import hex_to_double
-
-    sqrtp = F.when(
-        F.col("event_name") == "Swap",
-        hex_to_double(F.col("parsed_event")[sqrtp_key]),
-    )
-    ev = ev.withColumn("__sqrtp", F.last(sqrtp, ignorenulls=True).over(w))
-    scalars_diff = F.col("__s1") / F.col("__s0")
-    price0 = F.when(
-        F.col("__sqrtp").isNotNull(),
-        (F.col("__sqrtp") * F.col("__sqrtp") / F.lit(float(2**192))) / scalars_diff,
-    ).otherwise(F.lit(0.0))
-    price1 = F.when(price0 > 0, F.lit(1.0) / price0).otherwise(F.lit(0.0))
-
-    amount0 = _pe(amount0_key) / F.col("__s0")
-    amount1 = _pe(amount1_key) / F.col("__s1")
-    wallet = F.coalesce(
-        F.col("parsed_event")["recipient"],
-        F.col("parsed_event")["owner"],
-        F.col("parsed_event")["sender"],
-    )
-
-    trades = ev.select(
-        F.array(amount0, amount1).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.when(F.col("event_name") == "Swap", "swap")
-        .when(F.col("event_name") == "Mint", "mint")
-        .otherwise("burn")  # Burn and Collect both resolve as burns
-        .alias("event_type"),
-        F.array(price0, price1).alias("token_prices"),
-        "token_addresses",
-        "factory_address",
-        wallet.alias("wallet_address"),
-        (
-            F.coalesce(F.col("__pool_amm"), F.lit(amm or namespace))
-            if "amm" in pools.columns
-            else F.lit(amm or namespace)
-        ).alias("amm"),
-        F.col("__t0"), F.col("__t1"), F.col("__s0"), F.col("__s1"),
-    )
-
-    if pool_balances is None:
-        trades = trades.withColumn(
-            "token_reserves", F.array(F.lit(0.0), F.lit(0.0))
-        )
-    else:
-        trades = _asof_pool_reserves(trades, pool_balances)
-    return trades.drop("__t0", "__t1", "__s0", "__s1")
 
 
 def _asof_pool_reserves(
@@ -769,7 +487,7 @@ DISCOVERED_POOL_DDL = (
     "underlying_token_addresses array<string>, amm string, block_number long"
 )
 
-# the per-family extractor output projection the streamer unions — an empty
+# extract_dex_trades_combined's output projection — an empty
 # frame of this shape stands in when a batch touches no AMM family at all
 TRADE_SHAPE_DDL = (
     "block_number long, transaction_hash string, log_index int,"
@@ -1021,64 +739,6 @@ BALANCER_V2_ABIS = [
 ]
 
 
-def extract_dex_trades_balancer(parsed_logs: DataFrame, tokens: DataFrame) -> DataFrame:
-    """Balancer-V2 Vault swaps → dex_trades rows (balancer.py:448-481).
-
-    The ONE Vault contract emits every pool's Swap; the pool address is the
-    first 20 bytes of the indexed poolId (balancer.py:129-133), so trade
-    assembly needs no pool dimension at all — only token decimals.
-    token_amounts = [amountIn/s_in, -amountOut/s_out] over
-    token_addresses = [tokenIn, tokenOut]; prices = amountOut/amountIn and
-    its reciprocal; reserves are RPC point-reads in the reference → 0 here
-    (same fallback as its error path)."""
-    pe = F.col("parsed_event")
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "balancer_v2")
-        & (F.col("event_name") == "Swap")
-    ).select(
-        "block_number", "transaction_hash", "log_index",
-        F.lower(F.substring(pe["poolId"], 1, 42)).alias("pool_address"),
-        F.lower(pe["tokenIn"]).alias("__tin"),
-        F.lower(pe["tokenOut"]).alias("__tout"),
-        pe["amountIn"].alias("__ain_raw"),
-        pe["amountOut"].alias("__aout_raw"),
-        F.col("contract_address").alias("factory_address"),  # the Vault
-    )
-    from ethereum_etl_spark.functions.hex import hex_to_dec38
-
-    tok = tokens.select("address", "decimals")
-    ev = (
-        ev.join(
-            F.broadcast(tok.select(F.col("address").alias("__tin"), F.col("decimals").alias("__din"))),
-            on="__tin", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__tout"), F.col("decimals").alias("__dout"))),
-            on="__tout", how="left",
-        )
-        .withColumn("__ain", hex_to_dec38(F.col("__ain_raw")).cast("double")
-                    / F.pow(F.lit(10.0), F.coalesce("__din", F.lit(18))))
-        .withColumn("__aout", hex_to_dec38(F.col("__aout_raw")).cast("double")
-                    / F.pow(F.lit(10.0), F.coalesce("__dout", F.lit(18))))
-    )
-    p0 = F.when(F.col("__ain") != 0, F.abs(F.col("__aout") / F.col("__ain"))).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("__aout") != 0, F.abs(F.col("__ain") / F.col("__aout"))).otherwise(F.lit(0.0))
-    return ev.select(
-        F.array(F.col("__ain"), -F.col("__aout")).alias("token_amounts"),
-        "pool_address",
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.array(F.col("__tin"), F.col("__tout")).alias("token_addresses"),
-        "factory_address",
-        F.lit(None).cast("string").alias("wallet_address"),
-        F.lit("balancer_v2").alias("amm"),
-    )
-
-
 # Curve stable-swap pools (reference service/dex/curve/curve.py:36-47 event
 # enum; CurvePoolv1.json ABI): N-coin pools address their legs by COIN INDEX
 # (int128 sold_id/bought_id), resolved against the pool's coin array —
@@ -1109,107 +769,6 @@ CURVE_ABIS = [
         contract_name="pool",
     ),
 ]
-
-
-def extract_dex_trades_curve(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Curve TokenExchange / TokenExchangeUnderlying → dex_trades rows
-    (curve.py get_swap_from_exchange_event :514-556 /
-    get_swap_from_underlying_event :558-603):
-
-    - tokens = [coins[sold_id], coins[bought_id]] where coins is the pool's
-      N-coin array — token_addresses for TokenExchange, the pool's
-      underlying coin array for TokenExchangeUnderlying (falling back to
-      token_addresses when the pool has no underlying set, the reference's
-      non-metapool fallback :214-224);
-    - amounts = [tokens_sold/10^d_i, -tokens_bought/10^d_j];
-    - prices = [|a1/a0|, |a0/a1|] (the two-token price pair the reference
-      derives from the swap itself); reserves = 0 (its RPC-error fallback —
-      get_pool_finances point-calls get_dy per coin pair, unavailable to a
-      lake engine);
-    - an out-of-range coin index yields NULL legs and the row is dropped,
-      mirroring the reference's resolve failure skip.
-
-    ``pools`` may carry an optional ``underlying_token_addresses``
-    array column next to the POOL_DDL shape."""
-    pool_cols = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        "token_addresses",
-    ]
-    has_underlying = "underlying_token_addresses" in pools.columns
-    if has_underlying:
-        pool_cols.append("underlying_token_addresses")
-    if "amm" in pools.columns:
-        # curve forks (ellipsis/saddle — reference ships them as separate,
-        # factory-commented clients with the same pool events) attribute
-        # through the pool dimension, like the v2/v3 fork families
-        pool_cols.append(F.col("amm").alias("__pool_amm"))
-    p = F.broadcast(pools.select(*pool_cols))
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "curve")
-        & F.col("event_name").isin("TokenExchange", "TokenExchangeUnderlying")
-    ).join(p, on="contract_address", how="inner")
-    if not has_underlying:
-        ev = ev.withColumn(
-            "underlying_token_addresses", F.lit(None).cast("array<string>")
-        )
-    coins = F.when(
-        (F.col("event_name") == "TokenExchangeUnderlying")
-        & F.col("underlying_token_addresses").isNotNull()
-        & (F.size("underlying_token_addresses") > 0),
-        F.col("underlying_token_addresses"),
-    ).otherwise(F.col("token_addresses"))
-    # sold_id/bought_id are tiny int128 → decimal strings from the signed
-    # static decode; try_cast guards crafted giants under ANSI
-    i = F.col("parsed_event")["sold_id"].try_cast("int")
-    j = F.col("parsed_event")["bought_id"].try_cast("int")
-    ev = (
-        ev.withColumn("__coins", coins)
-        .withColumn("__ti", F.when((i >= 0) & (i < F.size("__coins")), F.get("__coins", i)))
-        .withColumn("__tj", F.when((j >= 0) & (j < F.size("__coins")), F.get("__coins", j)))
-        .filter(F.col("__ti").isNotNull() & F.col("__tj").isNotNull())
-    )
-    tok = tokens.select("address", "decimals")
-    ev = (
-        ev.join(
-            F.broadcast(tok.select(F.col("address").alias("__ti"), F.col("decimals").alias("__di"))),
-            on="__ti", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__tj"), F.col("decimals").alias("__dj"))),
-            on="__tj", how="left",
-        )
-        .withColumn(
-            "__a0",
-            _pe("tokens_sold") / F.pow(F.lit(10.0), F.coalesce("__di", F.lit(18))),
-        )
-        .withColumn(
-            "__a1",
-            -_pe("tokens_bought") / F.pow(F.lit(10.0), F.coalesce("__dj", F.lit(18))),
-        )
-    )
-    p0 = F.when(F.col("__a0") != 0, F.abs(F.col("__a1") / F.col("__a0"))).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("__a1") != 0, F.abs(F.col("__a0") / F.col("__a1"))).otherwise(F.lit(0.0))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.array(F.col("__ti"), F.col("__tj")).alias("token_addresses"),
-        "factory_address",
-        F.col("parsed_event")["buyer"].alias("wallet_address"),
-        (
-            F.coalesce(F.col("__pool_amm"), F.lit("curve"))
-            if "amm" in pools.columns
-            else F.lit("curve")
-        ).alias("amm"),
-    )
 
 
 # Saddle stable-swap pools (reference service/dex/saddle/saddle.py:77-129,
@@ -1248,90 +807,6 @@ SADDLE_ABIS = [
 ]
 
 
-def extract_dex_trades_saddle(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Saddle TokenSwap / TokenSwapUnderlying → dex_trades rows
-    (saddle.py:87-105 resolve_receipt_log swap branches): curve semantics —
-    tokens = [coins[soldId], coins[boughtId]] against the pool's coin array
-    (the underlying array for TokenSwapUnderlying when set), amounts =
-    [tokensSold/10^d_i, -tokensBought/10^d_j], ratio prices, zero reserves
-    (the reference's get_pool_finances RPC fallback). Out-of-range indices
-    drop the row, mirroring the resolve-failure skip."""
-    pool_cols = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        "token_addresses",
-    ]
-    has_underlying = "underlying_token_addresses" in pools.columns
-    if has_underlying:
-        pool_cols.append("underlying_token_addresses")
-    if "amm" in pools.columns:
-        pool_cols.append(F.col("amm").alias("__pool_amm"))
-    p = F.broadcast(pools.select(*pool_cols))
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "saddle")
-        & F.col("event_name").isin("TokenSwap", "TokenSwapUnderlying")
-    ).join(p, on="contract_address", how="inner")
-    if not has_underlying:
-        ev = ev.withColumn(
-            "underlying_token_addresses", F.lit(None).cast("array<string>")
-        )
-    coins = F.when(
-        (F.col("event_name") == "TokenSwapUnderlying")
-        & F.col("underlying_token_addresses").isNotNull()
-        & (F.size("underlying_token_addresses") > 0),
-        F.col("underlying_token_addresses"),
-    ).otherwise(F.col("token_addresses"))
-    i = F.col("parsed_event")["soldId"].try_cast("int")
-    j = F.col("parsed_event")["boughtId"].try_cast("int")
-    ev = (
-        ev.withColumn("__coins", coins)
-        .withColumn("__ti", F.when((i >= 0) & (i < F.size("__coins")), F.get("__coins", i)))
-        .withColumn("__tj", F.when((j >= 0) & (j < F.size("__coins")), F.get("__coins", j)))
-        .filter(F.col("__ti").isNotNull() & F.col("__tj").isNotNull())
-    )
-    tok = tokens.select("address", "decimals")
-    ev = (
-        ev.join(
-            F.broadcast(tok.select(F.col("address").alias("__ti"), F.col("decimals").alias("__di"))),
-            on="__ti", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__tj"), F.col("decimals").alias("__dj"))),
-            on="__tj", how="left",
-        )
-        .withColumn(
-            "__a0",
-            _pe("tokensSold") / F.pow(F.lit(10.0), F.coalesce("__di", F.lit(18))),
-        )
-        .withColumn(
-            "__a1",
-            -_pe("tokensBought") / F.pow(F.lit(10.0), F.coalesce("__dj", F.lit(18))),
-        )
-    )
-    p0 = F.when(F.col("__a0") != 0, F.abs(F.col("__a1") / F.col("__a0"))).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("__a1") != 0, F.abs(F.col("__a0") / F.col("__a1"))).otherwise(F.lit(0.0))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.array(F.col("__ti"), F.col("__tj")).alias("token_addresses"),
-        "factory_address",
-        F.col("parsed_event")["buyer"].alias("wallet_address"),
-        (
-            F.coalesce(F.col("__pool_amm"), F.lit("saddle"))
-            if "amm" in pools.columns
-            else F.lit("saddle")
-        ).alias("amm"),
-    )
-
-
 # DODO v1 pools (reference service/dex/dodo/contracts_v1.py:19-31,195-214):
 # the pool holds an ordered [base, quote] pair and swaps are expressed as
 # buy/sell of the BASE token rather than in/out amounts.
@@ -1359,104 +834,6 @@ DODO_ABIS = [
 ]
 
 
-def extract_dex_trades_dodo(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """DODO v1 BuyBaseToken / SellBaseToken → dex_trades rows
-    (contracts_v1.py:195-214): amounts over [base, quote] =
-    [-receiveBase/s0, +payQuote/s1] for buys and [+payBase/s0,
-    -receiveQuote/s1] for sells. Prices are the swap's own ratio pair
-    (the reference point-reads pool midprice over RPC; the trade-ratio
-    fallback is the curve/balancer lake rendering); reserves 0 for the
-    same reason."""
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "dodo")
-        & F.col("event_name").isin("BuyBaseToken", "SellBaseToken")
-    ).join(p, on="contract_address", how="inner")
-    tok = tokens.select("address", "decimals")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t0"), F.col("decimals").alias("__d0"))),
-            on="__t0", how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias("__t1"), F.col("decimals").alias("__d1"))),
-            on="__t1", how="left",
-        )
-        .withColumn("__s0", F.pow(F.lit(10.0), F.coalesce("__d0", F.lit(18))))
-        .withColumn("__s1", F.pow(F.lit(10.0), F.coalesce("__d1", F.lit(18))))
-    )
-    is_buy = F.col("event_name") == "BuyBaseToken"
-    a0 = F.when(is_buy, -_pe("receiveBase")).otherwise(_pe("payBase")) / F.col("__s0")
-    a1 = F.when(is_buy, _pe("payQuote")).otherwise(-_pe("receiveQuote")) / F.col("__s1")
-    ev = ev.withColumn("__a0", a0).withColumn("__a1", a1)
-    p0 = F.when(F.col("__a0") != 0, F.abs(F.col("__a1") / F.col("__a0"))).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("__a1") != 0, F.abs(F.col("__a0") / F.col("__a1"))).otherwise(F.lit(0.0))
-    wallet = F.coalesce(
-        F.col("parsed_event")["buyer"], F.col("parsed_event")["seller"]
-    )
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.slice("token_addresses", 1, 2).alias("token_addresses"),
-        "factory_address",
-        wallet.alias("wallet_address"),
-        F.lit("dodo").alias("amm"),
-    )
-
-
-
-# ---------------------------------------------------------------------------
-# Round-4 AMM families: DODO v2, TraderJoe v2.1 LB, 1inch, SushiSwap-Bento,
-# Wombat, CarbonDeFi, Fjord LBP — the remaining event-decodable namespaces of
-# the reference's service/dex tree, re-expressed as columnar extractors over
-# the SAME single parse pass (VERDICT r3 items 2, 4, 5).
-# ---------------------------------------------------------------------------
-
-
-def _join_pair_decimals(ev: DataFrame, tokens: DataFrame, c0: str, c1: str) -> DataFrame:
-    """Broadcast-join token decimals for two address columns → __s0/__s1
-    scalars (the reference's _get_scalars_for_tokens, done once per leg
-    column instead of once per trade row)."""
-    tok = tokens.select("address", "decimals")
-    return (
-        ev.join(
-            F.broadcast(tok.select(F.col("address").alias(c0), F.col("decimals").alias("__d0"))),
-            on=c0, how="left",
-        )
-        .join(
-            F.broadcast(tok.select(F.col("address").alias(c1), F.col("decimals").alias("__d1"))),
-            on=c1, how="left",
-        )
-        .withColumn("__s0", F.pow(F.lit(10.0), F.coalesce("__d0", F.lit(18))))
-        .withColumn("__s1", F.pow(F.lit(10.0), F.coalesce("__d1", F.lit(18))))
-    )
-
-
-def _ratio_prices(a0, a1):
-    """The two-token price pair derived from the swap's own amounts — the
-    lake rendering wherever the reference point-calls RPC state for prices
-    (its error fallback is 0; the trade ratio is strictly more faithful)."""
-    p0 = F.when(a0 != 0, F.abs(a1 / a0)).otherwise(F.lit(0.0))
-    p1 = F.when(a1 != 0, F.abs(a0 / a1)).otherwise(F.lit(0.0))
-    return p0, p1
-
-
 DODO_V2_ABIS = [
     # reference service/dex/dodo/contracts_v2.py:20-24 + DVM.json: DVM/DPP/
     # DSP pools share the DODOSwap shape; topic0 matches the reference's
@@ -1475,53 +852,6 @@ DODO_V2_ABIS = [
         contract_name="pool",
     ),
 ]
-
-
-def extract_dex_trades_dodo_v2(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """DODO v2 DODOSwap → dex_trades rows (contracts_v2.py:146-156
-    get_swap_from_event): fromToken/toToken live IN the event; the pool
-    dimension only fixes the leg ORDER — from_token_index = 0 when
-    fromToken == pool.token0 else 1, +fromAmount on the from leg,
-    -toAmount on the other. Prices are the swap's own ratio pair and
-    reserves 0 (the reference RPC-reads both; see _ratio_prices)."""
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "dodo_v2")
-        & (F.col("event_name") == "DODOSwap")
-    ).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    from0 = F.lower(pe["fromToken"]) == F.col("__t0")
-    a0 = F.when(from0, _pe("fromAmount")).otherwise(-_pe("toAmount")) / F.col("__s0")
-    a1 = F.when(from0, -_pe("toAmount")).otherwise(_pe("fromAmount")) / F.col("__s1")
-    ev = ev.withColumn("__a0", a0).withColumn("__a1", a1)
-    p0, p1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.slice("token_addresses", 1, 2).alias("token_addresses"),
-        "factory_address",
-        F.lower(pe["trader"]).alias("wallet_address"),
-        F.lit("dodo_v2").alias("amm"),
-    )
 
 
 # TraderJoe v2.1 Liquidity-Book pairs (reference traderjoe_v2_1.py +
@@ -1570,91 +900,6 @@ TRADERJOE_ABIS = [
 ]
 
 
-def _lb_half(word, high: bool):
-    """One uint128 half of a packed-amounts bytes32 ('0x' + 64 hex) →
-    double. Left 32 hex chars = token Y (high bits), right 32 = token X
-    (traderjoe_v2_1.py decode_amounts)."""
-    from ethereum_etl_spark.functions.hex import hex_to_double
-
-    h = F.substring(word, 3, 64)
-    half = F.substring(h, 1, 32) if high else F.substring(h, 33, 32)
-    return hex_to_double(F.concat(F.lit("0x"), half))
-
-
-def extract_dex_trades_traderjoe(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """TraderJoe LB Swap/DepositedToBins/WithdrawnFromBins → dex_trades
-    (traderjoe_v2_1.py:85-221):
-
-    - Swap: amount_k = (in_k − out_k)/s_k per packed half (X = token0 slot,
-      Y = token1);
-    - DepositedToBins → mint, WithdrawnFromBins → burn: per-bin bytes32[]
-      amounts, each unpacked and summed — the reference loops in Python
-      (:211-221); here an F.aggregate fold over the decoded word array.
-      Amounts stay POSITIVE for both mint and burn, exactly as the
-      reference returns them;
-    - prices: the reference derives price0 from RPC getBinStep + the active
-      bin ((1+binStep/1e4)^(id−8388608), :200-202, docs.traderjoexyz.com
-      price-from-id) and 0s everything on RPC failure; the lake rendering
-      uses the swap's own ratio pair for swaps and 0 for mint/burn (no
-      in-event price source);
-    - reserves: RPC getReserves in the reference → 0 here (its error path).
-    """
-    pcols = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        "token_addresses",
-    ]
-    p = F.broadcast(pools.select(*pcols))
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "traderjoe_v2_1")
-        & F.col("event_name").isin("Swap", "DepositedToBins", "WithdrawnFromBins")
-    ).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    is_swap = F.col("event_name") == "Swap"
-    swap_a0 = (_lb_half(pe["amountsIn"], False) - _lb_half(pe["amountsOut"], False)) / F.col("__s0")
-    swap_a1 = (_lb_half(pe["amountsIn"], True) - _lb_half(pe["amountsOut"], True)) / F.col("__s1")
-    # bytes32[] decodes to a JSON array of '0x'-words (parsed_logs dynamic
-    # path); fold each half across the bins
-    arr = F.from_json(pe["amounts"], "array<string>")
-    bin_a0 = F.aggregate(
-        arr, F.lit(0.0), lambda acc, w: acc + _lb_half(w, False)
-    ) / F.col("__s0")
-    bin_a1 = F.aggregate(
-        arr, F.lit(0.0), lambda acc, w: acc + _lb_half(w, True)
-    ) / F.col("__s1")
-    ev = (
-        ev.withColumn("__a0", F.when(is_swap, swap_a0).otherwise(bin_a0))
-        .withColumn("__a1", F.when(is_swap, swap_a1).otherwise(bin_a1))
-    )
-    rp0, rp1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    p0 = F.when(is_swap, rp0).otherwise(F.lit(0.0))
-    p1 = F.when(is_swap, rp1).otherwise(F.lit(0.0))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.when(is_swap, "swap")
-        .when(F.col("event_name") == "DepositedToBins", "mint")
-        .otherwise("burn")
-        .alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.slice("token_addresses", 1, 2).alias("token_addresses"),
-        "factory_address",
-        F.coalesce(pe["to"], pe["sender"]).alias("wallet_address"),
-        F.lit("traderjoe_v2_1").alias("amm"),
-    )
-
-
 ONE_INCH_ABIS = [
     # reference one_inch/OneInchPool.json Swapped
     EventAbi(
@@ -1674,58 +919,6 @@ ONE_INCH_ABIS = [
         contract_name="pool",
     ),
 ]
-
-
-def extract_dex_trades_one_inch(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """1inch (Mooniswap) Swapped → dex_trades (oneinch.py:145-173
-    _parse_swapped): when pool.token1 == dst the legs are
-    [−amount/s0, +result/s1], else [+result/s0, −amount/s1] — the
-    reference's exact sign convention. Unlike its siblings the event CARRIES
-    the post-trade pool balances (srcBalance/dstBalance), so reserves come
-    straight from the log — no RPC, no as-of join — mapped to the pool's
-    slot order and scaled; prices are the v2-style reserve ratio with the
-    infinite-price clamp."""
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "one_inch")
-        & (F.col("event_name") == "Swapped")
-    ).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    dst1 = F.lower(pe["dst"]) == F.col("__t1")
-    a0 = F.when(dst1, -_pe("amount")).otherwise(_pe("result")) / F.col("__s0")
-    a1 = F.when(dst1, _pe("result")).otherwise(-_pe("amount")) / F.col("__s1")
-    r0 = F.when(dst1, _pe("srcBalance")).otherwise(_pe("dstBalance")) / F.col("__s0")
-    r1 = F.when(dst1, _pe("dstBalance")).otherwise(_pe("srcBalance")) / F.col("__s1")
-    clamp = lambda c: F.when(c >= INFINITE_PRICE_THRESHOLD, F.lit(0.0)).otherwise(c)  # noqa: E731
-    p0 = F.when(r0 > 0, r1 / r0).otherwise(F.lit(0.0))
-    p1 = F.when(r1 > 0, r0 / r1).otherwise(F.lit(0.0))
-    return ev.select(
-        F.array(a0, a1).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(r0, r1).alias("token_reserves"),
-        F.array(clamp(p0), clamp(p1)).alias("token_prices"),
-        F.slice("token_addresses", 1, 2).alias("token_addresses"),
-        "factory_address",
-        F.lower(pe["account"]).alias("wallet_address"),
-        F.lit("one_inch").alias("amm"),
-    )
 
 
 SUSHI_BENTO_ABIS = [
@@ -1772,82 +965,6 @@ SUSHI_BENTO_ABIS = [
 ]
 
 
-def extract_dex_trades_bento(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """SushiSwap Trident/Bento pool events → dex_trades
-    (sushiswap_bento.py:16-41, inheriting v2 semantics): Swap legs keyed by
-    tokenIn — [+in/s0, −out/s1] when tokenIn == token0 else
-    [−out/s0, +in/s1]; Mint/Burn are ±[amount0/s0, amount1/s1] via the
-    inherited v2 path — bento Burns share uniswap v2's exact topic0 (see
-    the ABI list note) so they flow through the v2 extractor with fork
-    attribution from the pool dim. Reserves/prices: same-tx Sync window
-    (the v2 no-RPC rendering — the reference point-calls getReserves)."""
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "sushiswap_bento")
-        & F.col("event_name").isin("Swap", "Sync", "Mint")
-    ).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    w = (
-        Window.partitionBy("contract_address", "transaction_hash")
-        .orderBy("log_index")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ev = (
-        ev.withColumn("__sync_r0", F.when(F.col("event_name") == "Sync", _pe("reserve0")))
-        .withColumn("__sync_r1", F.when(F.col("event_name") == "Sync", _pe("reserve1")))
-        .withColumn("reserve0", F.last("__sync_r0", ignorenulls=True).over(w) / F.col("__s0"))
-        .withColumn("reserve1", F.last("__sync_r1", ignorenulls=True).over(w) / F.col("__s1"))
-    )
-    in0 = F.lower(pe["tokenIn"]) == F.col("__t0")
-    is_swap = F.col("event_name") == "Swap"
-    is_mint = F.col("event_name") == "Mint"
-    a0 = (
-        F.when(is_swap, F.when(in0, _pe("amountIn")).otherwise(-_pe("amountOut")))
-        .when(is_mint, _pe("amount0"))
-        .otherwise(-_pe("amount0"))
-    ) / F.col("__s0")
-    a1 = (
-        F.when(is_swap, F.when(in0, -_pe("amountOut")).otherwise(_pe("amountIn")))
-        .when(is_mint, _pe("amount1"))
-        .otherwise(-_pe("amount1"))
-    ) / F.col("__s1")
-    clamp = lambda c: F.when(c >= INFINITE_PRICE_THRESHOLD, F.lit(0.0)).otherwise(c)  # noqa: E731
-    p0 = F.when(F.col("reserve0") > 0, F.col("reserve1") / F.col("reserve0")).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("reserve1") > 0, F.col("reserve0") / F.col("reserve1")).otherwise(F.lit(0.0))
-    return (
-        ev.filter(F.col("event_name") != "Sync")
-        .select(
-            F.array(a0, a1).alias("token_amounts"),
-            F.col("contract_address").alias("pool_address"),
-            "transaction_hash",
-            "log_index",
-            "block_number",
-            F.when(is_swap, "swap").when(is_mint, "mint").otherwise("burn").alias("event_type"),
-            F.array(
-                F.coalesce("reserve0", F.lit(0.0)), F.coalesce("reserve1", F.lit(0.0))
-            ).alias("token_reserves"),
-            F.array(clamp(p0), clamp(p1)).alias("token_prices"),
-            F.slice("token_addresses", 1, 2).alias("token_addresses"),
-            "factory_address",
-            F.coalesce(pe["recipient"], pe["sender"]).alias("wallet_address"),
-            F.lit("sushiswap_bento").alias("amm"),
-        )
-    )
-
-
 _WOMBAT_LIQ_INPUTS = [
     {"name": "sender", "type": "address", "indexed": True},
     {"name": "token", "type": "address", "indexed": False},
@@ -1880,129 +997,6 @@ WOMBAT_ABIS = [
     EventAbi(name="Withdraw", inputs=_WOMBAT_LIQ_INPUTS,
              namespace="wombat", contract_name="pool"),
 ]
-
-
-def extract_dex_trades_wombat(parsed_logs: DataFrame, tokens: DataFrame) -> DataFrame:
-    """Wombat N-token pool Swap → dex_trades (wombat.py:224-253
-    _get_trade_from_swap_event): the traded pair comes from the EVENT
-    (fromToken/toToken) — like balancer, no pool dimension needed, only
-    decimals. Legs [+from/s_from, −to/s_to]; prices: the reference solves
-    the amp-factor coverage-ratio formula from RPC liability/cash reads
-    (:189-222) with a 0 fallback — the lake rendering is the swap's ratio
-    pair; reserves likewise RPC → 0."""
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "wombat")
-        & (F.col("event_name") == "Swap")
-    )
-    pe = F.col("parsed_event")
-    ev = ev.select(
-        "block_number", "transaction_hash", "log_index",
-        F.col("contract_address").alias("pool_address"),
-        F.lower(pe["fromToken"]).alias("__t0"),
-        F.lower(pe["toToken"]).alias("__t1"),
-        pe["fromAmount"].alias("__fa"),
-        pe["toAmount"].alias("__ta"),
-        F.lower(pe["to"]).alias("__wallet"),
-        F.col("contract_address").alias("factory_address"),
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    from ethereum_etl_spark.functions.hex import hex_to_dec38
-
-    a0 = hex_to_dec38(F.col("__fa")).cast("double") / F.col("__s0")
-    a1 = -hex_to_dec38(F.col("__ta")).cast("double") / F.col("__s1")
-    ev = ev.withColumn("__a0", a0).withColumn("__a1", a1)
-    p0, p1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        "pool_address",
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.array(F.col("__t0"), F.col("__t1")).alias("token_addresses"),
-        "factory_address",
-        F.col("__wallet").alias("wallet_address"),
-        F.lit("wombat").alias("amm"),
-    )
-
-
-def extract_dex_trades_wombat_liquidity(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Wombat/platypus Deposit/Withdraw → one-sided liquidity rows
-    (wombat.py:115-129 resolve_receipt_log, :256-302
-    _get_mint_burn_from_events): the event names its token; the amount
-    lands at that token's POSITION in the pool's N-coin order, the other
-    legs are 0. event_type = the lowercased event name ("deposit"/
-    "withdraw"), exactly the reference's rendering (:295 — these are NOT
-    folded into mint/burn, so the liquidity-event enrichment skips them
-    there too). Reserves/prices: the reference point-calls asset cash/
-    liability per coin (:137-171) — RPC state, 0-fallback here. The
-    reference's lp_token_address side-channel (burned-underlying scan)
-    has no column in this schema and is dropped.
-
-    Platypus pools (PoolSecondary.json — byte-identical events) attribute
-    through the pool dimension's ``amm`` label."""
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "wombat")
-        & F.col("event_name").isin("Deposit", "Withdraw")
-    )
-    pe = F.col("parsed_event")
-    pcols = [
-        F.col("address").alias("contract_address"),
-        F.col("factory_address").alias("__pfactory"),
-        F.transform("token_addresses", F.lower).alias("__ptoks"),
-    ]
-    if "amm" in pools.columns:
-        pcols.append(F.col("amm").alias("__pamm"))
-    ev = ev.join(F.broadcast(pools.select(*pcols)), on="contract_address", how="inner")
-    ev = ev.withColumns(
-        {
-            "__tok": F.lower(pe["token"]),
-            "__pos": F.array_position(F.col("__ptoks"), F.lower(pe["token"])),
-        }
-    ).filter(F.col("__pos") > 0)
-    ev = ev.join(
-        F.broadcast(
-            tokens.select(
-                F.lower(F.col("address")).alias("__tok"),
-                F.col("decimals").alias("__dec"),
-            )
-        ),
-        on="__tok",
-        how="left",
-    )
-    # hoisted out of the transform lambda: the giant-hex fallback of the
-    # decode is a Python UDF, which Spark rejects inside a lambda function
-    ev = ev.withColumn(
-        "__amt", _pe("amount") / F.pow(F.lit(10.0), F.coalesce("__dec", F.lit(18)))
-    )
-    pos = F.col("__pos")
-    zeros = F.transform("__ptoks", lambda _: F.lit(0.0))
-    amounts = F.transform(
-        "__ptoks",
-        lambda _, i: F.when(i + 1 == pos, F.col("__amt")).otherwise(F.lit(0.0)),
-    )
-    return ev.select(
-        amounts.alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lower(F.col("event_name")).alias("event_type"),
-        zeros.alias("token_reserves"),
-        zeros.alias("token_prices"),
-        F.col("__ptoks").alias("token_addresses"),
-        F.col("__pfactory").alias("factory_address"),
-        F.lower(pe["to"]).alias("wallet_address"),
-        (
-            F.coalesce(F.col("__pamm"), F.lit("wombat"))
-            if "amm" in pools.columns
-            else F.lit("wombat")
-        ).alias("amm"),
-    )
 
 
 # Bancor v2 converters (reference service/dex/bancor_v2/bancor_v2.py —
@@ -2049,94 +1043,6 @@ BANCOR_V2_ABIS = [
 ]
 
 
-def extract_dex_trades_bancor_v2(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Bancor v2 converter events → dex_trades (bancor_v2.py
-    get_data_from_swap_event / get_data_from_mint_burn_event):
-
-    - Conversion: amounts mapped onto the converter's reserve-token order —
-      −_amount at the _fromToken leg, +_return at the _toToken leg; wallet
-      = _trader; prices = the swap's own ratio pair (the reference's
-      TokenRateUpdate sync handler is itself commented out).
-    - LiquidityAdded → mint, LiquidityRemoved → burn: one-sided _amount at
-      the _reserveToken leg (burn legs negative, this repo's uniform
-      rendering); wallet = _provider. The event's _newBalance IS the
-      post-event reserve of that leg, so it lands in token_reserves where
-      the reference would point-call reserveBalance (strictly the same
-      value, no RPC).
-
-    Converters have no factory event (registry RPC introspection) — pools
-    come from the configured/seeded dimension, like curve."""
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "bancor_v2")
-        & F.col("event_name").isin("Conversion", "LiquidityAdded", "LiquidityRemoved")
-    )
-    pe = F.col("parsed_event")
-    pcols = [
-        F.col("address").alias("contract_address"),
-        "factory_address",
-        F.element_at("token_addresses", 1).alias("__t0"),
-        F.element_at("token_addresses", 2).alias("__t1"),
-    ]
-    if "amm" in pools.columns:
-        pcols.append(F.col("amm").alias("__pool_amm"))
-    ev = ev.join(F.broadcast(pools.select(*pcols)), on="contract_address", how="inner")
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    en = F.col("event_name")
-    conv = en == "Conversion"
-    liq_sign = F.when(en == "LiquidityAdded", F.lit(1.0)).otherwise(F.lit(-1.0))
-    frm, to, rt = F.lower(pe["_fromToken"]), F.lower(pe["_toToken"]), F.lower(pe["_reserveToken"])
-
-    def leg(t, scale):
-        return (
-            F.when(
-                conv,
-                F.when(frm == t, -_pe("_amount"))
-                .when(to == t, _pe("_return"))
-                .otherwise(F.lit(0.0)),
-            ).otherwise(
-                F.when(rt == t, liq_sign * _pe("_amount")).otherwise(F.lit(0.0))
-            )
-            / scale
-        )
-
-    def res(t, scale):
-        return F.when(
-            ~conv & (rt == t), _pe("_newBalance") / scale
-        ).otherwise(F.lit(0.0))
-
-    a0 = leg(F.col("__t0"), F.col("__s0"))
-    a1 = leg(F.col("__t1"), F.col("__s1"))
-    ev = ev.withColumns({"__a0": a0, "__a1": a1})
-    p0, p1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    swap_p = conv
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.when(conv, "swap")
-        .when(en == "LiquidityAdded", "mint")
-        .otherwise("burn")
-        .alias("event_type"),
-        F.array(res(F.col("__t0"), F.col("__s0")), res(F.col("__t1"), F.col("__s1"))).alias("token_reserves"),
-        F.array(
-            F.when(swap_p, p0).otherwise(F.lit(0.0)),
-            F.when(swap_p, p1).otherwise(F.lit(0.0)),
-        ).alias("token_prices"),
-        F.array(F.col("__t0"), F.col("__t1")).alias("token_addresses"),
-        "factory_address",
-        F.lower(F.coalesce(pe["_trader"], pe["_provider"])).alias("wallet_address"),
-        (
-            F.coalesce(F.col("__pool_amm"), F.lit("bancor_v2"))
-            if "amm" in pools.columns
-            else F.lit("bancor_v2")
-        ).alias("amm"),
-    )
-
-
 CARBON_ABIS = [
     # reference carbondefi/CarbonController.json TokensTraded
     EventAbi(
@@ -2154,50 +1060,6 @@ CARBON_ABIS = [
         contract_name="controller",
     ),
 ]
-
-
-def extract_dex_trades_carbon(parsed_logs: DataFrame, tokens: DataFrame) -> DataFrame:
-    """CarbonDeFi TokensTraded → dex_trades (carbondefi.py:110-155): the ONE
-    CarbonController emits every trade; pool_address = the controller,
-    tokens from the event, legs [+source/s0, −target/s1], prices =
-    |out/in| / |in/out| — the exact formula the reference computes inline;
-    reserves are controller-wide RPC balances there → 0 here."""
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "carbondefi")
-        & (F.col("event_name") == "TokensTraded")
-    )
-    pe = F.col("parsed_event")
-    ev = ev.select(
-        "block_number", "transaction_hash", "log_index",
-        F.col("contract_address").alias("pool_address"),
-        F.lower(pe["sourceToken"]).alias("__t0"),
-        F.lower(pe["targetToken"]).alias("__t1"),
-        pe["sourceAmount"].alias("__sa"),
-        pe["targetAmount"].alias("__ta"),
-        F.lower(pe["trader"]).alias("__wallet"),
-        F.col("contract_address").alias("factory_address"),
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    from ethereum_etl_spark.functions.hex import hex_to_dec38
-
-    a0 = hex_to_dec38(F.col("__sa")).cast("double") / F.col("__s0")
-    a1 = -hex_to_dec38(F.col("__ta")).cast("double") / F.col("__s1")
-    ev = ev.withColumn("__a0", a0).withColumn("__a1", a1)
-    p0, p1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        "pool_address",
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.array(F.col("__t0"), F.col("__t1")).alias("token_addresses"),
-        "factory_address",
-        F.col("__wallet").alias("wallet_address"),
-        F.lit("carbondefi").alias("amm"),
-    )
 
 
 FJORD_ABIS = [
@@ -2225,53 +1087,6 @@ FJORD_ABIS = [
         contract_name="lbp",
     ),
 ]
-
-
-def extract_dex_trades_fjord(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Fjord LBP Buy/Sell → dex_trades (fjord.py:125-174): the pool pair is
-    [asset, share] (ASSET_INDEX=0, SHARE_INDEX=1); Buy = the caller pays
-    assets for shares → [−assets/s0, +shares/s1]; Sell the reverse.
-    Prices: the reference reads reserves+weights via RPC for the LBP
-    weighted-math price (:98-123) — lake rendering is the trade's own
-    ratio; reserves → 0 (its failure default)."""
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    ev = parsed_logs.filter(
-        F.array_contains(F.col("namespace"), "fjord")
-        & F.col("event_name").isin("Buy", "Sell")
-    ).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    is_buy = F.col("event_name") == "Buy"
-    a0 = F.when(is_buy, -_pe("assets")).otherwise(_pe("assets")) / F.col("__s0")
-    a1 = F.when(is_buy, _pe("shares")).otherwise(-_pe("shares")) / F.col("__s1")
-    ev = ev.withColumn("__a0", a0).withColumn("__a1", a1)
-    p0, p1 = _ratio_prices(F.col("__a0"), F.col("__a1"))
-    return ev.select(
-        F.array(F.col("__a0"), F.col("__a1")).alias("token_amounts"),
-        F.col("contract_address").alias("pool_address"),
-        "transaction_hash",
-        "log_index",
-        "block_number",
-        F.lit("swap").alias("event_type"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("token_reserves"),
-        F.array(p0, p1).alias("token_prices"),
-        F.slice("token_addresses", 1, 2).alias("token_addresses"),
-        "factory_address",
-        F.lower(pe["caller"]).alias("wallet_address"),
-        F.lit("fjord").alias("amm"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2333,92 +1148,6 @@ MESHSWAP_ABIS = [
     ),
     # NO Sync ABI: meshswap's Sync(uint112,uint112) is byte-identical to
     # uniswap v2's Sync -> SAME topic0/topic_count (the bento-Burn rule).
-    # Meshswap Syncs decode through the v2 inventory row; the extractors
-    # read them via the uniswap_v2 namespace.
+    # Meshswap Syncs decode through the v2 inventory row; the combined
+    # extractor reads them via the uniswap_v2 namespace.
 ]
-
-
-def extract_dex_trades_meshswap(
-    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
-) -> DataFrame:
-    """Meshswap pair events → dex_trades (meshswap.py:45-76 + inherited v2
-    mint/burn handlers):
-
-    - ExchangePos/ExchangeNeg carry the SOLD token address: when event
-      token0 == pool token0 the legs are [+amount0/s0, −amount1/s1], else
-      the sold amount lands on the pool's token1 leg —
-      [−amount1/s0, +amount0/s1] (meshswap.py:59-64).
-    - AddLiquidity/RemoveLiquidity resolve through the inherited v2
-      mint/burn handlers, which read amount0/amount1 in POOL token order
-      and ignore the event's own token fields (uniswap_v2.py:166-230).
-    - Reserves/prices: same-tx Sync window (the v2 no-RPC rendering — the
-      reference point-calls getReserves at block−1). Meshswap Syncs share
-      uniswap v2's exact topic0, so the marks arrive under the uniswap_v2
-      namespace (see MESHSWAP_ABIS note).
-    """
-    p = F.broadcast(
-        pools.select(
-            F.col("address").alias("contract_address"),
-            "factory_address",
-            "token_addresses",
-        )
-    )
-    mesh = F.array_contains(F.col("namespace"), "meshswap") & F.col("event_name").isin(
-        "ExchangePos", "ExchangeNeg", "AddLiquidity", "RemoveLiquidity"
-    )
-    v2_sync = F.array_contains(F.col("namespace"), "uniswap_v2") & (
-        F.col("event_name") == "Sync"
-    )
-    ev = parsed_logs.filter(mesh | v2_sync).join(p, on="contract_address", how="inner")
-    ev = (
-        ev.withColumn("__t0", F.element_at("token_addresses", 1))
-        .withColumn("__t1", F.element_at("token_addresses", 2))
-    )
-    ev = _join_pair_decimals(ev, tokens, "__t0", "__t1")
-    pe = F.col("parsed_event")
-    w = (
-        Window.partitionBy("contract_address", "transaction_hash")
-        .orderBy("log_index")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ev = (
-        ev.withColumn("__sync_r0", F.when(F.col("event_name") == "Sync", _pe("reserve0")))
-        .withColumn("__sync_r1", F.when(F.col("event_name") == "Sync", _pe("reserve1")))
-        .withColumn("reserve0", F.last("__sync_r0", ignorenulls=True).over(w) / F.col("__s0"))
-        .withColumn("reserve1", F.last("__sync_r1", ignorenulls=True).over(w) / F.col("__s1"))
-    )
-    is_swap = F.col("event_name").isin("ExchangePos", "ExchangeNeg")
-    is_mint = F.col("event_name") == "AddLiquidity"
-    sold_is_t0 = F.lower(pe["token0"]) == F.col("__t0")
-    a0 = (
-        F.when(is_swap, F.when(sold_is_t0, _pe("amount0")).otherwise(-_pe("amount1")))
-        .when(is_mint, _pe("amount0"))
-        .otherwise(-_pe("amount0"))
-    ) / F.col("__s0")
-    a1 = (
-        F.when(is_swap, F.when(sold_is_t0, -_pe("amount1")).otherwise(_pe("amount0")))
-        .when(is_mint, _pe("amount1"))
-        .otherwise(-_pe("amount1"))
-    ) / F.col("__s1")
-    clamp = lambda c: F.when(c >= INFINITE_PRICE_THRESHOLD, F.lit(0.0)).otherwise(c)  # noqa: E731
-    p0 = F.when(F.col("reserve0") > 0, F.col("reserve1") / F.col("reserve0")).otherwise(F.lit(0.0))
-    p1 = F.when(F.col("reserve1") > 0, F.col("reserve0") / F.col("reserve1")).otherwise(F.lit(0.0))
-    return (
-        ev.filter(F.col("event_name") != "Sync")
-        .select(
-            F.array(a0, a1).alias("token_amounts"),
-            F.col("contract_address").alias("pool_address"),
-            "transaction_hash",
-            "log_index",
-            "block_number",
-            F.when(is_swap, "swap").when(is_mint, "mint").otherwise("burn").alias("event_type"),
-            F.array(
-                F.coalesce("reserve0", F.lit(0.0)), F.coalesce("reserve1", F.lit(0.0))
-            ).alias("token_reserves"),
-            F.array(clamp(p0), clamp(p1)).alias("token_prices"),
-            F.slice("token_addresses", 1, 2).alias("token_addresses"),
-            "factory_address",
-            F.lower(pe["user"]).alias("wallet_address"),
-            F.lit("meshswap").alias("amm"),
-        )
-    )

@@ -1,22 +1,15 @@
-"""Single-tree multi-family DEX trade assembly for the streaming hot path.
+"""DEX trade assembly: every AMM family in one join tree.
 
-The per-family extractors in :mod:`ethereum_etl_spark.operators.dex` are the
-documented, oracle-checked renderings of the reference's per-namespace AMM
-clients (service/dex/*/ — one resolver class per family, dispatched by
-dex_client_factory.py). Unioning them inside the CDC loop builds ~12
-independent join trees per batch — each with its own pools broadcast, two
-token-decimals broadcasts, and (for v2/v3/bento) a window — ~30 broadcast
-exchanges and a Catalyst tree whose analysis alone is a measurable serial
-per-cycle cost (profiled: the dex subgraph added ~60-100 s/cycle of mostly
-fixed cost at small batch sizes).
-
-Every family shares one skeleton: filter parsed logs → attach the pool row →
-resolve the two traded legs → attach decimals → family-specific amount/price
-arithmetic. This module runs that skeleton ONCE for all families:
+The reference prices each family with its own resolver class
+(service/dex/*/, dispatched by dex_client_factory.py). Every family shares
+one skeleton: filter parsed logs → attach the pool row → resolve the two
+traded legs → attach decimals → family-specific amount/price arithmetic.
+:func:`extract_dex_trades_combined` runs that skeleton once for all the
+requested families:
 
 - ONE broadcast join against the pools dimension (LEFT; families whose pair
-  is in the event — balancer_v2, wombat, carbondefi — ignore it, and the
-  per-family inner-join semantics are restored by a post-filter);
+  is in the event — balancer_v2, wombat, carbondefi — ignore it, and inner
+  semantics for the rest are restored by a post-filter);
 - ONE pair of token-decimals broadcast joins on the resolved leg addresses;
 - ONE window shuffle over (contract_address, transaction_hash) computing both
   the v2/bento same-tx Sync reserves (exclusive frame) and the v3 last-Swap
@@ -24,16 +17,11 @@ arithmetic. This module runs that skeleton ONCE for all families:
   exchange because partitioning and ordering agree;
 - per-family arithmetic as one CASE chain on the resolved ``__fam`` column.
 
-Equivalence with the individual extractors is pinned by
-tests/test_dex_combined.py (sorted full-row comparison on a WAL fixture that
-emits every family), so the combined path inherits their oracle checks.
-
-Family semantics are documented on the individual extractors; reference
-citations live there (uniswap_v2 v2.py, uniswap_v3.py:134-226, curve.py:
-514-603, saddle/saddle.py:87-105, contracts_v1.py:195-214,
-contracts_v2.py:146-156, traderjoe_v2_1.py:68-221, oneinch.py:145-173,
-sushiswap_bento.py:16-41, wombat.py:224-253, carbondefi.py:110-155,
-fjord.py:125-174, balancer.py:448-481).
+Each family's semantics and reference citation sit beside FAMILY_EVENTS.
+``families=[...]`` restricts the tree to a subset; the streamer passes the
+families present in a batch, and the harness queries pass one family each,
+so every family's DuckDB oracle checks this extractor. Golden rows for a
+fixture that emits every family are pinned by tests/test_dex_combined.py.
 """
 
 from __future__ import annotations
@@ -60,9 +48,7 @@ from ethereum_etl_spark.operators.dex import (
     UNISWAP_V3_ABIS,
     WOMBAT_ABIS,
     _asof_pool_reserves,
-    _lb_half,
     _pe,
-    _ratio_prices,
 )
 
 # family key → its event-ABI list (one import point for the streamer: the
@@ -87,33 +73,67 @@ FAMILY_ABIS = {
     "bancor_v2": BANCOR_V2_ABIS,
 }
 
-# family key → event names, in the SAME order the streamer's union ran the
-# individual extractors (a hypothetical row matching two families resolves to
-# the first — today no two families share a (topic0, event-name) pair, which
-# the equivalence test would catch if an ABI change ever broke it)
+# family key → event names. A row matching two families resolves to the
+# first; no two families share a (topic0, event-name) pair today. Each
+# family's rendering of its reference resolver: where the reference
+# point-calls RPC state, prices fall back to the swap's own ratio pair and
+# reserves to 0 (its error path) unless noted.
 FAMILY_EVENTS: dict[str, tuple[str, ...]] = {
+    # uniswap_v2.py:166-230 amounts; reserves from the last same-tx Sync
+    # (getReserves at block-1, :124-135), price = reserve ratio clamped at
+    # INFINITE_PRICE_THRESHOLD (:151-156). v2 forks (sushiswap, solidly,
+    # canto_dex, ...) share the events and take the pool dim's amm label.
     "uniswap_v2": ("Swap", "Sync", "Mint", "Burn"),
-    # DMM Mint/Burn share v2's topic0s and ride the uniswap_v2 branch
-    # (attributed "dmm" via the pool dim); DMM's own Sync is mark-only
+    # dmm/dmm.py:14-18: v2 math over DMM's own Swap and 4-word Sync (the
+    # trailing reserve pair). DMM Mint/Burn share v2's topic0s and ride
+    # the uniswap_v2 branch (amm "dmm" via the pool dim); DMM's Sync is
+    # mark-only
     "dmm": ("Swap", "Sync"),
+    # meshswap.py:45-76: ExchangePos/Neg name the SOLD token (:59-64);
+    # liquidity reads amounts in pool order (inherited v2 handlers);
+    # reserves from v2-topic0 Syncs (MESHSWAP_ABIS note)
     "meshswap": ("ExchangePos", "ExchangeNeg", "AddLiquidity", "RemoveLiquidity"),
+    # uniswap_v3.py:134-226: signed amounts, Collect → burn; price from the
+    # last same-tx Swap's sqrtPriceX96 (:288-295); reserves as-of the
+    # pool_balances history (balanceOf, :123-132). KyberSwap Elastic has
+    # the same Swap topic0 and attributes through the pool dim
     "uniswap_v3": ("Swap", "Mint", "Burn", "Collect"),
+    # balancer.py:448-481: the Vault emits; pool = first 20 bytes of
+    # poolId (:129-133), pair = (tokenIn, tokenOut) from the event
     "balancer_v2": ("Swap",),
+    # curve.py:514-603: legs by coin index into the pool's coins (the
+    # underlying array for *Underlying, :214-224); bad index drops the row
     "curve": ("TokenExchange", "TokenExchangeUnderlying"),
+    # saddle/saddle.py:87-105: curve semantics, own event layout
     "saddle": ("TokenSwap", "TokenSwapUnderlying"),
+    # dodo/contracts_v1.py:195-214: buy/sell of the base token
     "dodo": ("BuyBaseToken", "SellBaseToken"),
+    # dodo/contracts_v2.py:146-156: leg order from pool token0
     "dodo_v2": ("DODOSwap",),
+    # traderjoe_v2_1.py:68-221: packed uint128 pairs; bins folded for
+    # mint/burn (amounts stay positive), mint/burn prices 0
     "traderjoe_v2_1": ("Swap", "DepositedToBins", "WithdrawnFromBins"),
+    # oneinch.py:145-173: dst == token1 sign rule; reserves from the
+    # event's srcBalance/dstBalance, clamped reserve-ratio prices
     "one_inch": ("Swapped",),
+    # sushiswap_bento.py:16-41: tokenIn-keyed Swap, v2 Sync reserves;
+    # Burns share v2's topic0 and ride the uniswap_v2 branch
     "sushiswap_bento": ("Swap", "Sync", "Mint"),
-    "wombat": ("Swap",),  # Deposit/Withdraw ride the aux N-leg union below
+    # wombat.py:224-253: pair from the event. Deposit/Withdraw (:115-129,
+    # :256-302) ride the N-leg side branch (_wombat_liquidity); platypus
+    # pools attribute through the pool dim
+    "wombat": ("Swap",),
+    # carbondefi.py:110-155: the controller emits; pair from the event
     "carbondefi": ("TokensTraded",),
+    # fjord.py:125-174: pool pair [asset, share]
     "fjord": ("Buy", "Sell"),
+    # bancor_v2.py get_data_from_swap_event / _mint_burn_event: Conversion
+    # legs in reserve order; Liquidity* one-sided with _newBalance reserves
     "bancor_v2": ("Conversion", "LiquidityAdded", "LiquidityRemoved"),
 }
 
 # families that resolve their traded pair from the event itself and need no
-# pool-dimension row (their per-family extractors take no ``pools`` argument)
+# pool-dimension row
 _IN_EVENT_FAMILIES = {"balancer_v2", "wombat", "carbondefi"}
 
 
@@ -169,9 +189,8 @@ def prepare_marked(parsed_logs: DataFrame, families: list[str] | None = None) ->
         events_map["uniswap_v2"] = ("Sync",)
     if "uniswap_v2" in fams and "dmm" not in fams:
         # the mirror case: v2-topic0 Mint/Burn on a Kyber DMM pool read
-        # their reserves from DMM's OWN 4-word Sync (extract_dex_trades
-        # admits those marks unconditionally) — keep the subset equivalent
-        # with a mark-only dmm pseudo-branch
+        # their reserves from DMM's OWN 4-word Sync — keep those marks with
+        # a mark-only dmm pseudo-branch
         events_map["dmm"] = ("Sync",)
     ev = parsed_logs.withColumn(
         "__fam", _fam_case(list(events_map), events_map)
@@ -228,8 +247,7 @@ def extract_dex_trades_combined(
     stay as small as the batch needs. ``marked`` (optional) is a pre-built
     :func:`prepare_marked` frame for the SAME (parsed_logs, families) —
     the streamer hands in a prefetched checkpoint so the window/dispatch
-    half runs off the critical path. Output schema = TRADE_SHAPE_DDL, row
-    set identical to unioning the individual extractors.
+    half runs off the critical path. Output schema = TRADE_SHAPE_DDL.
     """
     families = _norm_families(families)
     fams = set(families)
@@ -340,48 +358,63 @@ def extract_dex_trades_combined(
     ev = ev.withColumns(scale_cols)
 
     # ---- per-family arithmetic ----
+    # Each case is a thunk, built only when its family is requested: one
+    # parsed-field decode (_pe) is a ~70-node expression, one py4j round trip
+    # per node, so building every family's cases for a one-family call cost
+    # seconds of Python-side plan building.
     en = F.col("event_name")
     clamp = lambda c: F.when(c >= INFINITE_PRICE_THRESHOLD, F.lit(0.0)).otherwise(c)  # noqa: E731
 
-    def chain(cases, default=F.lit(None)):
+    def chain(cases, default=None):
         expr = None
-        for f, e in cases:
+        for f, build in cases:
             if f in fams:
+                e = build()
                 expr = F.when(fam == f, e) if expr is None else expr.when(fam == f, e)
-        return default if expr is None else expr.otherwise(default)
+        if expr is None:
+            return F.lit(None) if default is None else default
+        # every output row's __fam is a requested family, so with a case for
+        # each of them the default is unreachable; leaving it out keeps a
+        # filter pushed down through this projection (a price > 0 test, say)
+        # from inlining the default's amount decodes
+        if default is None or fams <= {f for f, _ in cases}:
+            return expr
+        return expr.otherwise(default)
 
     # amounts
-    v2_a0 = (
-        F.when(en == "Swap", (_pe("amount0In") - _pe("amount0Out")) / s0)
-        .when(en == "Mint", _pe("amount0") / s0)
-        .when(en == "Burn", -_pe("amount0") / s0)
-    )
-    v2_a1 = (
-        F.when(en == "Swap", (_pe("amount1In") - _pe("amount1Out")) / s1)
-        .when(en == "Mint", _pe("amount1") / s1)
-        .when(en == "Burn", -_pe("amount1") / s1)
-    )
+    def v2_leg(i, s_):
+        return (
+            F.when(en == "Swap", (_pe(f"amount{i}In") - _pe(f"amount{i}Out")) / s_)
+            .when(en == "Mint", _pe(f"amount{i}") / s_)
+            .when(en == "Burn", -_pe(f"amount{i}") / s_)
+        )
+
     mesh_sw = en.isin("ExchangePos", "ExchangeNeg")
     mesh_sold0 = F.lower(pe["token0"]) == F.col("__t0")
-    mesh_a0 = (
-        F.when(mesh_sw, F.when(mesh_sold0, _pe("amount0")).otherwise(-_pe("amount1")))
-        .when(en == "AddLiquidity", _pe("amount0"))
-        .otherwise(-_pe("amount0"))
-    )
-    mesh_a1 = (
-        F.when(mesh_sw, F.when(mesh_sold0, -_pe("amount1")).otherwise(_pe("amount0")))
-        .when(en == "AddLiquidity", _pe("amount1"))
-        .otherwise(-_pe("amount1"))
-    )
+
+    def mesh_a0():
+        return (
+            F.when(mesh_sw, F.when(mesh_sold0, _pe("amount0")).otherwise(-_pe("amount1")))
+            .when(en == "AddLiquidity", _pe("amount0"))
+            .otherwise(-_pe("amount0"))
+        )
+
+    def mesh_a1():
+        return (
+            F.when(mesh_sw, F.when(mesh_sold0, -_pe("amount1")).otherwise(_pe("amount0")))
+            .when(en == "AddLiquidity", _pe("amount1"))
+            .otherwise(-_pe("amount1"))
+        )
+
     dodo_buy = en == "BuyBaseToken"
     tj_swap = en == "Swap"
-    tj_arr = F.from_json(pe["amounts"], "array<string>")
-    tj_a0 = F.when(
-        tj_swap, _lb_half(pe["amountsIn"], False) - _lb_half(pe["amountsOut"], False)
-    ).otherwise(F.aggregate(tj_arr, F.lit(0.0), lambda acc, w: acc + _lb_half(w, False)))
-    tj_a1 = F.when(
-        tj_swap, _lb_half(pe["amountsIn"], True) - _lb_half(pe["amountsOut"], True)
-    ).otherwise(F.aggregate(tj_arr, F.lit(0.0), lambda acc, w: acc + _lb_half(w, True)))
+
+    def tj_leg(high: bool):
+        tj_arr = F.from_json(pe["amounts"], "array<string>")
+        return F.when(
+            tj_swap, _lb_half(pe["amountsIn"], high) - _lb_half(pe["amountsOut"], high)
+        ).otherwise(F.aggregate(tj_arr, F.lit(0.0), lambda acc, w: acc + _lb_half(w, high)))
+
     oi_dst1 = F.lower(pe["dst"]) == F.col("__t1")
     bento_in0 = F.lower(pe["tokenIn"]) == F.col("__t0")
     dv2_from0 = F.lower(pe["fromToken"]) == F.col("__t0")
@@ -414,48 +447,48 @@ def extract_dex_trades_combined(
         ).otherwise(F.lit(0.0))
 
     a0 = chain([
-        ("uniswap_v2", v2_a0),
-        ("dmm", v2_a0),
-        ("meshswap", mesh_a0 / s0),
-        ("uniswap_v3", _pe("amount0") / s0),
-        ("balancer_v2", _pe("amountIn") / s0),
-        ("curve", _pe("tokens_sold") / s0),
-        ("saddle", _pe("tokensSold") / s0),
-        ("dodo", (F.when(dodo_buy, -_pe("receiveBase")).otherwise(_pe("payBase"))) / s0),
-        ("dodo_v2", (F.when(dv2_from0, _pe("fromAmount")).otherwise(-_pe("toAmount"))) / s0),
-        ("traderjoe_v2_1", tj_a0 / s0),
-        ("one_inch", (F.when(oi_dst1, -_pe("amount")).otherwise(_pe("result"))) / s0),
-        ("sushiswap_bento", (
+        ("uniswap_v2", lambda: v2_leg(0, s0)),
+        ("dmm", lambda: v2_leg(0, s0)),
+        ("meshswap", lambda: mesh_a0() / s0),
+        ("uniswap_v3", lambda: _pe("amount0") / s0),
+        ("balancer_v2", lambda: _pe("amountIn") / s0),
+        ("curve", lambda: _pe("tokens_sold") / s0),
+        ("saddle", lambda: _pe("tokensSold") / s0),
+        ("dodo", lambda: (F.when(dodo_buy, -_pe("receiveBase")).otherwise(_pe("payBase"))) / s0),
+        ("dodo_v2", lambda: (F.when(dv2_from0, _pe("fromAmount")).otherwise(-_pe("toAmount"))) / s0),
+        ("traderjoe_v2_1", lambda: tj_leg(False) / s0),
+        ("one_inch", lambda: (F.when(oi_dst1, -_pe("amount")).otherwise(_pe("result"))) / s0),
+        ("sushiswap_bento", lambda: (
             F.when(en == "Swap", F.when(bento_in0, _pe("amountIn")).otherwise(-_pe("amountOut")))
             .when(en == "Mint", _pe("amount0"))
             .otherwise(-_pe("amount0"))
         ) / s0),
-        ("wombat", _pe("fromAmount") / s0),
-        ("carbondefi", _pe("sourceAmount") / s0),
-        ("fjord", (F.when(fj_buy, -_pe("assets")).otherwise(_pe("assets"))) / s0),
-        ("bancor_v2", _bc_leg(F.col("__t0"), s0)),
+        ("wombat", lambda: _pe("fromAmount") / s0),
+        ("carbondefi", lambda: _pe("sourceAmount") / s0),
+        ("fjord", lambda: (F.when(fj_buy, -_pe("assets")).otherwise(_pe("assets"))) / s0),
+        ("bancor_v2", lambda: _bc_leg(F.col("__t0"), s0)),
     ])
     a1 = chain([
-        ("uniswap_v2", v2_a1),
-        ("dmm", v2_a1),
-        ("meshswap", mesh_a1 / s1),
-        ("uniswap_v3", _pe("amount1") / s1),
-        ("balancer_v2", -_pe("amountOut") / s1),
-        ("curve", -_pe("tokens_bought") / s1),
-        ("saddle", -_pe("tokensBought") / s1),
-        ("dodo", (F.when(dodo_buy, _pe("payQuote")).otherwise(-_pe("receiveQuote"))) / s1),
-        ("dodo_v2", (F.when(dv2_from0, -_pe("toAmount")).otherwise(_pe("fromAmount"))) / s1),
-        ("traderjoe_v2_1", tj_a1 / s1),
-        ("one_inch", (F.when(oi_dst1, _pe("result")).otherwise(-_pe("amount"))) / s1),
-        ("sushiswap_bento", (
+        ("uniswap_v2", lambda: v2_leg(1, s1)),
+        ("dmm", lambda: v2_leg(1, s1)),
+        ("meshswap", lambda: mesh_a1() / s1),
+        ("uniswap_v3", lambda: _pe("amount1") / s1),
+        ("balancer_v2", lambda: -_pe("amountOut") / s1),
+        ("curve", lambda: -_pe("tokens_bought") / s1),
+        ("saddle", lambda: -_pe("tokensBought") / s1),
+        ("dodo", lambda: (F.when(dodo_buy, _pe("payQuote")).otherwise(-_pe("receiveQuote"))) / s1),
+        ("dodo_v2", lambda: (F.when(dv2_from0, -_pe("toAmount")).otherwise(_pe("fromAmount"))) / s1),
+        ("traderjoe_v2_1", lambda: tj_leg(True) / s1),
+        ("one_inch", lambda: (F.when(oi_dst1, _pe("result")).otherwise(-_pe("amount"))) / s1),
+        ("sushiswap_bento", lambda: (
             F.when(en == "Swap", F.when(bento_in0, -_pe("amountOut")).otherwise(_pe("amountIn")))
             .when(en == "Mint", _pe("amount1"))
             .otherwise(-_pe("amount1"))
         ) / s1),
-        ("wombat", -_pe("toAmount") / s1),
-        ("carbondefi", -_pe("targetAmount") / s1),
-        ("fjord", (F.when(fj_buy, _pe("shares")).otherwise(-_pe("shares"))) / s1),
-        ("bancor_v2", _bc_leg(F.col("__t1"), s1)),
+        ("wombat", lambda: -_pe("toAmount") / s1),
+        ("carbondefi", lambda: -_pe("targetAmount") / s1),
+        ("fjord", lambda: (F.when(fj_buy, _pe("shares")).otherwise(-_pe("shares"))) / s1),
+        ("bancor_v2", lambda: _bc_leg(F.col("__t1"), s1)),
     ])
     ev = ev.withColumns({"__a0": a0, "__a1": a1})
     ra0, ra1 = F.col("__a0"), F.col("__a1")
@@ -472,31 +505,38 @@ def extract_dex_trades_combined(
         v3_p1 = F.when(v3_p0 > 0, F.lit(1.0) / v3_p0).otherwise(F.lit(0.0))
     else:
         v3_p0 = v3_p1 = F.lit(0.0)
-    oi_r0 = (F.when(oi_dst1, _pe("srcBalance")).otherwise(_pe("dstBalance"))) / s0
-    oi_r1 = (F.when(oi_dst1, _pe("dstBalance")).otherwise(_pe("srcBalance"))) / s1
-    oi_p0 = F.when(oi_r0 > 0, oi_r1 / oi_r0).otherwise(F.lit(0.0))
-    oi_p1 = F.when(oi_r1 > 0, oi_r0 / oi_r1).otherwise(F.lit(0.0))
+
+    def oi_reserves():
+        return (
+            (F.when(oi_dst1, _pe("srcBalance")).otherwise(_pe("dstBalance"))) / s0,
+            (F.when(oi_dst1, _pe("dstBalance")).otherwise(_pe("srcBalance"))) / s1,
+        )
+
+    def oi_price(i):
+        r = oi_reserves()
+        return clamp(F.when(r[i] > 0, r[1 - i] / r[i]).otherwise(F.lit(0.0)))
+
     tj_p0 = F.when(tj_swap, rat0).otherwise(F.lit(0.0))
     tj_p1 = F.when(tj_swap, rat1).otherwise(F.lit(0.0))
     p0 = chain([
-        ("uniswap_v2", clamp(res_p0)),
-        ("dmm", clamp(res_p0)),
-        ("meshswap", clamp(res_p0)),
-        ("uniswap_v3", v3_p0),
-        ("one_inch", clamp(oi_p0)),
-        ("sushiswap_bento", clamp(res_p0)),
-        ("traderjoe_v2_1", tj_p0),
-        ("bancor_v2", F.when(bc_conv, rat0).otherwise(F.lit(0.0))),
+        ("uniswap_v2", lambda: clamp(res_p0)),
+        ("dmm", lambda: clamp(res_p0)),
+        ("meshswap", lambda: clamp(res_p0)),
+        ("uniswap_v3", lambda: v3_p0),
+        ("one_inch", lambda: oi_price(0)),
+        ("sushiswap_bento", lambda: clamp(res_p0)),
+        ("traderjoe_v2_1", lambda: tj_p0),
+        ("bancor_v2", lambda: F.when(bc_conv, rat0).otherwise(F.lit(0.0))),
     ], default=rat0)
     p1 = chain([
-        ("uniswap_v2", clamp(res_p1)),
-        ("dmm", clamp(res_p1)),
-        ("meshswap", clamp(res_p1)),
-        ("uniswap_v3", v3_p1),
-        ("one_inch", clamp(oi_p1)),
-        ("sushiswap_bento", clamp(res_p1)),
-        ("traderjoe_v2_1", tj_p1),
-        ("bancor_v2", F.when(bc_conv, rat1).otherwise(F.lit(0.0))),
+        ("uniswap_v2", lambda: clamp(res_p1)),
+        ("dmm", lambda: clamp(res_p1)),
+        ("meshswap", lambda: clamp(res_p1)),
+        ("uniswap_v3", lambda: v3_p1),
+        ("one_inch", lambda: oi_price(1)),
+        ("sushiswap_bento", lambda: clamp(res_p1)),
+        ("traderjoe_v2_1", lambda: tj_p1),
+        ("bancor_v2", lambda: F.when(bc_conv, rat1).otherwise(F.lit(0.0))),
     ], default=rat1)
 
     # reserves (v3's as-of branch attaches after the select)
@@ -505,54 +545,62 @@ def extract_dex_trades_combined(
         F.coalesce("__res0", F.lit(0.0)), F.coalesce("__res1", F.lit(0.0))
     )
     reserves = chain([
-        ("uniswap_v2", sync_res),
-        ("dmm", sync_res),
-        ("meshswap", sync_res),
-        ("sushiswap_bento", sync_res),
-        ("one_inch", F.array(oi_r0, oi_r1)),
-        ("bancor_v2", F.array(_bc_res(F.col("__t0"), s0), _bc_res(F.col("__t1"), s1))),
+        ("uniswap_v2", lambda: sync_res),
+        ("dmm", lambda: sync_res),
+        ("meshswap", lambda: sync_res),
+        ("sushiswap_bento", lambda: sync_res),
+        ("one_inch", lambda: F.array(*oi_reserves())),
+        ("bancor_v2", lambda: F.array(_bc_res(F.col("__t0"), s0), _bc_res(F.col("__t1"), s1))),
     ], default=zero2)
 
     # event_type / wallet / amm / addresses / identity columns
+    def mint_burn(swap, mint):
+        return F.when(swap, "swap").when(mint, "mint").otherwise("burn")
+
     event_type = chain([
-        ("uniswap_v2", F.when(en == "Swap", "swap").when(en == "Mint", "mint").otherwise("burn")),
-        ("meshswap", F.when(mesh_sw, "swap").when(en == "AddLiquidity", "mint").otherwise("burn")),
-        ("uniswap_v3", F.when(en == "Swap", "swap").when(en == "Mint", "mint").otherwise("burn")),
-        ("traderjoe_v2_1", F.when(tj_swap, "swap").when(en == "DepositedToBins", "mint").otherwise("burn")),
-        ("sushiswap_bento", F.when(en == "Swap", "swap").when(en == "Mint", "mint").otherwise("burn")),
-        ("bancor_v2", F.when(bc_conv, "swap").when(en == "LiquidityAdded", "mint").otherwise("burn")),
+        ("uniswap_v2", lambda: mint_burn(en == "Swap", en == "Mint")),
+        ("meshswap", lambda: mint_burn(mesh_sw, en == "AddLiquidity")),
+        ("uniswap_v3", lambda: mint_burn(en == "Swap", en == "Mint")),
+        ("traderjoe_v2_1", lambda: mint_burn(tj_swap, en == "DepositedToBins")),
+        ("sushiswap_bento", lambda: mint_burn(en == "Swap", en == "Mint")),
+        ("bancor_v2", lambda: mint_burn(bc_conv, en == "LiquidityAdded")),
     ], default=F.lit("swap"))
     wallet = chain([
-        ("uniswap_v2", F.coalesce(pe["to"], pe["sender"])),
-        ("dmm", F.coalesce(pe["to"], pe["sender"])),
-        ("meshswap", F.lower(pe["user"])),
-        ("uniswap_v3", F.coalesce(pe["recipient"], pe["owner"], pe["sender"])),
-        ("balancer_v2", F.lit(None).cast("string")),
-        ("curve", pe["buyer"]),
-        ("saddle", pe["buyer"]),
-        ("dodo", F.coalesce(pe["buyer"], pe["seller"])),
-        ("dodo_v2", F.lower(pe["trader"])),
-        ("traderjoe_v2_1", F.coalesce(pe["to"], pe["sender"])),
-        ("one_inch", F.lower(pe["account"])),
-        ("sushiswap_bento", F.coalesce(pe["recipient"], pe["sender"])),
-        ("wombat", F.lower(pe["to"])),
-        ("carbondefi", F.lower(pe["trader"])),
-        ("fjord", F.lower(pe["caller"])),
-        ("bancor_v2", F.lower(F.coalesce(pe["_trader"], pe["_provider"]))),
+        ("uniswap_v2", lambda: F.coalesce(pe["to"], pe["sender"])),
+        ("dmm", lambda: F.coalesce(pe["to"], pe["sender"])),
+        ("meshswap", lambda: F.lower(pe["user"])),
+        ("uniswap_v3", lambda: F.coalesce(pe["recipient"], pe["owner"], pe["sender"])),
+        ("balancer_v2", lambda: F.lit(None).cast("string")),
+        ("curve", lambda: pe["buyer"]),
+        ("saddle", lambda: pe["buyer"]),
+        ("dodo", lambda: F.coalesce(pe["buyer"], pe["seller"])),
+        ("dodo_v2", lambda: F.lower(pe["trader"])),
+        ("traderjoe_v2_1", lambda: F.coalesce(pe["to"], pe["sender"])),
+        ("one_inch", lambda: F.lower(pe["account"])),
+        ("sushiswap_bento", lambda: F.coalesce(pe["recipient"], pe["sender"])),
+        ("wombat", lambda: F.lower(pe["to"])),
+        ("carbondefi", lambda: F.lower(pe["trader"])),
+        ("fjord", lambda: F.lower(pe["caller"])),
+        ("bancor_v2", lambda: F.lower(F.coalesce(pe["_trader"], pe["_provider"]))),
     ])
+
+    def amm_label(default):
+        return F.coalesce(F.col("__pamm"), default) if has_amm else default
+
     amm = chain([
-        ("uniswap_v2", F.coalesce(F.col("__pamm"), F.lit("uniswap_v2")) if has_amm else F.lit("uniswap_v2")),
-        ("uniswap_v3", F.coalesce(F.col("__pamm"), F.lit("uniswap_v3")) if has_amm else F.lit("uniswap_v3")),
-    ], default=F.coalesce(F.col("__pamm"), fam) if has_amm else fam)
+        ("uniswap_v2", lambda: amm_label(F.lit("uniswap_v2"))),
+        ("uniswap_v3", lambda: amm_label(F.lit("uniswap_v3"))),
+    ], default=amm_label(fam))
+    pair = lambda: F.array(F.col("__t0"), F.col("__t1"))  # noqa: E731
     out_tokens = chain([
-        ("uniswap_v2", F.col("__ptoks")),
-        ("dmm", F.col("__ptoks")),
-        ("uniswap_v3", F.col("__ptoks")),
-        ("curve", F.array(F.col("__t0"), F.col("__t1"))),
-        ("saddle", F.array(F.col("__t0"), F.col("__t1"))),
-        ("balancer_v2", F.array(F.col("__t0"), F.col("__t1"))),
-        ("wombat", F.array(F.col("__t0"), F.col("__t1"))),
-        ("carbondefi", F.array(F.col("__t0"), F.col("__t1"))),
+        ("uniswap_v2", lambda: F.col("__ptoks")),
+        ("dmm", lambda: F.col("__ptoks")),
+        ("uniswap_v3", lambda: F.col("__ptoks")),
+        ("curve", pair),
+        ("saddle", pair),
+        ("balancer_v2", pair),
+        ("wombat", pair),
+        ("carbondefi", pair),
     ], default=F.slice("__ptoks", 1, 2))
     pool_address = (
         F.when(fam == "balancer_v2", F.lower(F.substring(pe["poolId"], 1, 42)))
@@ -600,11 +648,101 @@ def extract_dex_trades_combined(
         # wombat/platypus Deposit/Withdraw emit N-leg one-sided rows in pool
         # token order — a different row shape than the pair tree, unioned as
         # a (tiny) side branch only when the family is present in the batch
-        from ethereum_etl_spark.operators.dex import (
-            extract_dex_trades_wombat_liquidity,
-        )
-
-        out = out.unionByName(
-            extract_dex_trades_wombat_liquidity(parsed_logs, pools, tokens)
-        )
+        out = out.unionByName(_wombat_liquidity(parsed_logs, pools, tokens))
     return out
+
+
+def _lb_half(word, high: bool):
+    """One uint128 half of a packed-amounts bytes32 ('0x' + 64 hex) →
+    double. Left 32 hex chars = token Y (high bits), right 32 = token X
+    (traderjoe_v2_1.py decode_amounts)."""
+    from ethereum_etl_spark.functions.hex import hex_to_double
+
+    h = F.substring(word, 3, 64)
+    half = F.substring(h, 1, 32) if high else F.substring(h, 33, 32)
+    return hex_to_double(F.concat(F.lit("0x"), half))
+
+
+def _ratio_prices(a0, a1):
+    """The two-token price pair derived from the swap's own amounts — the
+    lake rendering wherever the reference point-calls RPC state for prices
+    (its error fallback is 0; the trade ratio is strictly more faithful)."""
+    p0 = F.when(a0 != 0, F.abs(a1 / a0)).otherwise(F.lit(0.0))
+    p1 = F.when(a1 != 0, F.abs(a0 / a1)).otherwise(F.lit(0.0))
+    return p0, p1
+
+
+def _wombat_liquidity(
+    parsed_logs: DataFrame, pools: DataFrame, tokens: DataFrame
+) -> DataFrame:
+    """Wombat/platypus Deposit/Withdraw → one-sided liquidity rows
+    (wombat.py:115-129 resolve_receipt_log, :256-302
+    _get_mint_burn_from_events): the event names its token; the amount
+    lands at that token's POSITION in the pool's N-coin order, the other
+    legs are 0. event_type = the lowercased event name ("deposit"/
+    "withdraw"), exactly the reference's rendering (:295 — these are NOT
+    folded into mint/burn, so the liquidity-event enrichment skips them
+    there too). Reserves/prices: the reference point-calls asset cash/
+    liability per coin (:137-171) — RPC state, 0-fallback here. The
+    reference's lp_token_address side-channel (burned-underlying scan)
+    has no column in this schema and is dropped.
+
+    Platypus pools (PoolSecondary.json — byte-identical events) attribute
+    through the pool dimension's ``amm`` label."""
+    ev = parsed_logs.filter(
+        F.array_contains(F.col("namespace"), "wombat")
+        & F.col("event_name").isin("Deposit", "Withdraw")
+    )
+    pe = F.col("parsed_event")
+    pcols = [
+        F.col("address").alias("contract_address"),
+        F.col("factory_address").alias("__pfactory"),
+        F.transform("token_addresses", F.lower).alias("__ptoks"),
+    ]
+    if "amm" in pools.columns:
+        pcols.append(F.col("amm").alias("__pamm"))
+    ev = ev.join(F.broadcast(pools.select(*pcols)), on="contract_address", how="inner")
+    ev = ev.withColumns(
+        {
+            "__tok": F.lower(pe["token"]),
+            "__pos": F.array_position(F.col("__ptoks"), F.lower(pe["token"])),
+        }
+    ).filter(F.col("__pos") > 0)
+    ev = ev.join(
+        F.broadcast(
+            tokens.select(
+                F.lower(F.col("address")).alias("__tok"),
+                F.col("decimals").alias("__dec"),
+            )
+        ),
+        on="__tok",
+        how="left",
+    )
+    # scaled once per row, outside the per-leg transform lambda
+    ev = ev.withColumn(
+        "__amt", _pe("amount") / F.pow(F.lit(10.0), F.coalesce("__dec", F.lit(18)))
+    )
+    pos = F.col("__pos")
+    zeros = F.transform("__ptoks", lambda _: F.lit(0.0))
+    amounts = F.transform(
+        "__ptoks",
+        lambda _, i: F.when(i + 1 == pos, F.col("__amt")).otherwise(F.lit(0.0)),
+    )
+    return ev.select(
+        amounts.alias("token_amounts"),
+        F.col("contract_address").alias("pool_address"),
+        "transaction_hash",
+        "log_index",
+        "block_number",
+        F.lower(F.col("event_name")).alias("event_type"),
+        zeros.alias("token_reserves"),
+        zeros.alias("token_prices"),
+        F.col("__ptoks").alias("token_addresses"),
+        F.col("__pfactory").alias("factory_address"),
+        F.lower(pe["to"]).alias("wallet_address"),
+        (
+            F.coalesce(F.col("__pamm"), F.lit("wombat"))
+            if "amm" in pools.columns
+            else F.lit("wombat")
+        ).alias("amm"),
+    )

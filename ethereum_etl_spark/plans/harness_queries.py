@@ -1155,8 +1155,8 @@ def q37(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V2_ABIS,
-        extract_dex_trades,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP, SYNC = UNISWAP_V2_ABIS[0], UNISWAP_V2_ABIS[1]
@@ -1210,7 +1210,7 @@ def q37(spark, sf):
     tokens = spark.createDataFrame(
         [("0x" + "2" * 40, "AAA", 6), ("0x" + "3" * 40, "BBB", 18)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v2"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -1314,8 +1314,8 @@ def q38(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V3_ABIS,
-        extract_dex_trades_v3,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP = UNISWAP_V3_ABIS[0]
@@ -1386,7 +1386,9 @@ def q38(spark, sf):
         ).alias("b"),
         F.lit(0).cast("long").alias("block_number"),
     ).select("holder_address", "b.token_address", "b.value", "block_number")
-    t = extract_dex_trades_v3(parsed, pools, tokens, pool_balances=pool_balances)
+    t = extract_dex_trades_combined(
+        parsed, pools, tokens, pool_balances=pool_balances, families=["uniswap_v3"]
+    )
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -1545,8 +1547,8 @@ def q39(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V2_ABIS,
-        extract_dex_trades,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
     from ethereum_etl_spark.operators.pricing import enrich_trades_usd
 
@@ -1601,7 +1603,7 @@ def q39(spark, sf):
     tokens = spark.createDataFrame(
         [("0x" + "2" * 40, "AAA", 6), ("0x" + "3" * 40, "BBB", 6)], TOKEN_DIM_DDL
     )
-    trades = extract_dex_trades(parsed, pools, tokens)
+    trades = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v2"])
     priced = enrich_trades_usd(trades, stablecoins=["0x" + "2" * 40])
     return priced.select(
         "pool_address",
@@ -1796,9 +1798,10 @@ def q44(spark, sf):
     prices = the in/out ratio pair."""
     from ethereum_etl_spark.operators.dex import (
         BALANCER_V2_ABIS,
+        POOL_DDL,
         TOKEN_DIM_DDL,
-        extract_dex_trades_balancer,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP = BALANCER_V2_ABIS[0]
@@ -1833,7 +1836,9 @@ def q44(spark, sf):
     tokens = spark.createDataFrame(
         [("0x" + "2" * 40, "AAA", 6), ("0x" + "3" * 40, "BBB", 6)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades_balancer(parsed, tokens)
+    # balancer_v2 reads its pair from the event: no pool rows needed
+    no_pools = spark.createDataFrame([], POOL_DDL)
+    t = extract_dex_trades_combined(parsed, no_pools, tokens, families=["balancer_v2"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -1957,8 +1962,8 @@ def q47(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V2_ABIS,
-        extract_dex_trades,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
     from ethereum_etl_spark.operators.pricing import enrich_trades_usd
     from ethereum_etl_spark.operators.swap_owner import detect_swap_owners
@@ -2013,7 +2018,7 @@ def q47(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_s, "AAA", 6), (tok_t, "BBB", 6)], TOKEN_DIM_DDL
     )
-    trades = extract_dex_trades(parsed, pools, tokens)
+    trades = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v2"])
     priced = enrich_trades_usd(trades, stablecoins=[tok_s])
 
     wallet = F.concat(F.lit("0x"), F.lpad(F.lower(F.hex(F.lit(7000) + k % 600)), 40, "0"))
@@ -2163,8 +2168,8 @@ def q48(spark, sf):
     from ethereum_etl_spark.operators.dex import (
         CURVE_ABIS,
         TOKEN_DIM_DDL,
-        extract_dex_trades_curve,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     EXCH, EXCH_U = CURVE_ABIS
@@ -2217,7 +2222,7 @@ def q48(spark, sf):
         + [(addr(1000 + b), f"U{b}", b % 3) for b in range(60)],
         TOKEN_DIM_DDL,
     )
-    t = extract_dex_trades_curve(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["curve"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -2421,8 +2426,8 @@ def q53(spark, sf):
         DODO_ABIS,
         POOL_DDL,
         TOKEN_DIM_DDL,
-        extract_dex_trades_dodo,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     BUY, SELL = DODO_ABIS
@@ -2461,7 +2466,7 @@ def q53(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_b, "BASE", 6), (tok_q, "QUOTE", 9)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades_dodo(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["dodo"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -2516,8 +2521,8 @@ def q54(spark, sf):
         DODO_V2_ABIS,
         POOL_DDL,
         TOKEN_DIM_DDL,
-        extract_dex_trades_dodo_v2,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     o = ld(spark, sf, "orders").filter("o_orderkey <= 4096")
@@ -2557,7 +2562,7 @@ def q54(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_a, "BASE", 6), (tok_b, "QUOTE", 9)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades_dodo_v2(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["dodo_v2"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -2618,8 +2623,8 @@ def q55(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         TRADERJOE_ABIS,
-        extract_dex_trades_traderjoe,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP, DEPOSIT, WITHDRAW = TRADERJOE_ABIS
@@ -2683,7 +2688,7 @@ def q55(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_x, "X", 6), (tok_y, "Y", 9)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades_traderjoe(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["traderjoe_v2_1"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -2772,7 +2777,7 @@ def q55(spark, sf):
     """,
 )
 def q56(spark, sf):
-    """Five AMM families in ONE parse pass + one extractor union each
+    """Five AMM families in ONE parse pass and one combined extractor call
     (VERDICT r3 item 5): 1inch Swapped (src-negative convention, in-event
     reserves), sushiswap_bento in/out-keyed Swap with same-tx uint256 Sync
     reserves, wombat event-token Swap, carbondefi controller-emitted
@@ -2911,10 +2916,9 @@ def q56(spark, sf):
         "pool_address", "transaction_hash", "block_number", "event_type",
         "amm", "token_amounts", "token_reserves", "token_prices",
     ]
-    # the STREAMING hot path: one combined join tree for all five families
-    # (operators/dex_combined.py) — oracle-checking it here pins the exact
-    # per-family semantics the per-extractor tests pin individually, and
-    # tests/test_dex_combined.py pins full equivalence to those extractors
+    # one combined join tree for all five families (operators/dex_combined.py,
+    # the extractor the streamer runs) — this oracle pins each family's
+    # semantics, and several families sharing one tree
     from ethereum_etl_spark.operators.dex_combined import (
         extract_dex_trades_combined,
     )
@@ -3211,8 +3215,8 @@ def q59(spark, sf):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V2_ABIS,
-        extract_dex_trades_meshswap,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SYNC = UNISWAP_V2_ABIS[1]
@@ -3276,7 +3280,7 @@ def q59(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_a, "AAA", 6), (tok_b, "BBB", 18)], TOKEN_DIM_DDL
     )
-    t = extract_dex_trades_meshswap(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["meshswap"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -3455,8 +3459,8 @@ def q61(spark, sf):
     attribute through the pool dimension's amm label."""
     from ethereum_etl_spark.operators.dex import (
         WOMBAT_ABIS,
-        extract_dex_trades_wombat_liquidity,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     DEP, WDR = WOMBAT_ABIS[1], WOMBAT_ABIS[2]
@@ -3523,7 +3527,9 @@ def q61(spark, sf):
             )
         ).alias("t")
     ).select("t.address", F.lit("X").alias("symbol"), "t.decimals")
-    out = extract_dex_trades_wombat_liquidity(parsed, pools, tokens)
+    # the fixture holds only Deposit/Withdraw logs, so the wombat family
+    # yields exactly its liquidity rows
+    out = extract_dex_trades_combined(parsed, pools, tokens, families=["wombat"])
     return out.select(
         "transaction_hash", "log_index", "pool_address", "event_type", "amm",
         "wallet_address",
@@ -3567,8 +3573,8 @@ def q62(spark, sf):
         BANCOR_V2_ABIS,
         POOL_DDL,
         TOKEN_DIM_DDL,
-        extract_dex_trades_bancor_v2,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     CONV, ADD, REM = BANCOR_V2_ABIS
@@ -3638,7 +3644,7 @@ def q62(spark, sf):
     tokens = spark.createDataFrame(
         [(tok_a, "AAA", 6), (tok_b, "BBB", 18)], TOKEN_DIM_DDL
     )
-    out = extract_dex_trades_bancor_v2(parsed, pools, tokens)
+    out = extract_dex_trades_combined(parsed, pools, tokens, families=["bancor_v2"])
     return out.select(
         "transaction_hash", "log_index", "pool_address", "event_type",
         "wallet_address",
@@ -3694,8 +3700,8 @@ def q63(spark, sf):
     from ethereum_etl_spark.operators.dex import (
         SADDLE_ABIS,
         TOKEN_DIM_DDL,
-        extract_dex_trades_saddle,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP, SWAP_U = SADDLE_ABIS
@@ -3748,7 +3754,7 @@ def q63(spark, sf):
         + [(addr(1000 + b), f"U{b}", b % 3) for b in range(60)],
         TOKEN_DIM_DDL,
     )
-    t = extract_dex_trades_saddle(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["saddle"])
     return t.select(
         "pool_address",
         "transaction_hash",
@@ -3817,8 +3823,8 @@ def q65(spark, sf):
         DMM_ABIS,
         POOL_DDL,
         TOKEN_DIM_DDL,
-        extract_dex_trades_dmm,
     )
+    from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
     from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
     SWAP, SYNC = DMM_ABIS
@@ -3882,7 +3888,7 @@ def q65(spark, sf):
         + [(addr(2001 + 2 * p), "T1", 18) for p in range(20)],
         TOKEN_DIM_DDL,
     )
-    t = extract_dex_trades_dmm(parsed, pools, tokens)
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["dmm"])
     return t.select(
         "pool_address",
         "transaction_hash",

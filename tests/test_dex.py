@@ -7,10 +7,10 @@ from ethereum_etl_spark.operators.dex import (
     TOKEN_DIM_DDL,
     UNISWAP_V2_ABIS,
     enrich_dex_trades,
-    extract_dex_trades,
     latest_price_per_token,
     liquidity_merge,
 )
+from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
 from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 from ethereum_etl_spark.schemas import LOG_SCHEMA
 
@@ -60,7 +60,11 @@ def test_extract_swap_with_as_of_reserves(spark):
     pools, tokens = _dims(spark)
     inv = build_inventory(spark, UNISWAP_V2_ABIS)
     parsed = parse_logs(_logs(spark), inv, UNISWAP_V2_ABIS)
-    trades = extract_dex_trades(parsed, pools, tokens).orderBy("log_index").collect()
+    trades = (
+        extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v2"])
+        .orderBy("log_index")
+        .collect()
+    )
     assert [t["event_type"] for t in trades] == ["swap", "mint"]
     swap = trades[0]
     assert swap["token_amounts"] == [1.0, -4.0]
@@ -77,7 +81,7 @@ def test_enrich_liquidity_and_latest_price(spark):
     pools, tokens = _dims(spark)
     inv = build_inventory(spark, UNISWAP_V2_ABIS)
     parsed = parse_logs(_logs(spark), inv, UNISWAP_V2_ABIS)
-    trades = extract_dex_trades(parsed, pools, tokens)
+    trades = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v2"])
     blocks = spark.createDataFrame(
         [(50, "0xb", 1_600_000_000)], "number long, hash string, timestamp long"
     )
@@ -102,7 +106,6 @@ def test_v3_extreme_sqrtprice_beyond_dec38(spark):
         POOL_DDL,
         TOKEN_DIM_DDL,
         UNISWAP_V3_ABIS,
-        extract_dex_trades_v3,
     )
 
     SWAP3 = UNISWAP_V3_ABIS[0]
@@ -117,7 +120,7 @@ def test_v3_extreme_sqrtprice_beyond_dec38(spark):
     inv = build_inventory(spark, UNISWAP_V3_ABIS)
     parsed = parse_logs(logs, inv, UNISWAP_V3_ABIS)
     pools, tokens = _dims(spark)
-    t = extract_dex_trades_v3(parsed, pools, tokens).first()
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v3"]).first()
     # price0 = (sqrtp^2 / 2^192) / (10^18 / 10^6)
     want = (float(sqrtp) ** 2 / 2**192) / 1e12
     assert t["token_prices"][0] == pytest.approx(want, rel=1e-12)
@@ -129,10 +132,7 @@ def test_v3_fork_amm_attribution_from_pool_dim(spark):
     (same topic0) — fork trades are indistinguishable at the log level and
     must inherit their amm label from the pool dimension (the creating
     factory), like the v2 forks."""
-    from ethereum_etl_spark.operators.dex import (
-        UNISWAP_V3_ABIS,
-        extract_dex_trades_v3,
-    )
+    from ethereum_etl_spark.operators.dex import UNISWAP_V3_ABIS
 
     SWAP3 = UNISWAP_V3_ABIS[0]
     rows = [
@@ -149,6 +149,6 @@ def test_v3_fork_amm_attribution_from_pool_dim(spark):
         "fee int, lp_token_addresses array<string>, amm string",
     )
     tokens = spark.createDataFrame([(T0, "AAA", 6), (T1, "BBB", 18)], TOKEN_DIM_DDL)
-    t = extract_dex_trades_v3(parsed, pools, tokens).first()
+    t = extract_dex_trades_combined(parsed, pools, tokens, families=["uniswap_v3"]).first()
     assert t["amm"] == "kyberswap_elastic"
     assert t["token_amounts"][0] == 1.0

@@ -1,21 +1,20 @@
-"""extract_dex_trades_combined ≡ union of the per-family extractors.
+"""extract_dex_trades_combined: golden rows for every AMM family at once.
 
-The combined single-tree extractor (operators/dex_combined.py) is the
-streaming hot path; the per-family extractors remain the documented,
-oracle-checked reference renderings. This test pins full-row equivalence on
-a fixture that emits EVERY family — including the window-dependent shapes
-(v2 Sync reserves, v3 last-Swap sqrtPriceX96, bento Sync), curve coin-index
-indirection + metapool underlying fallback, traderjoe packed/bin-fold
-amounts, fork amm attribution from the pool dim, inner-join drop of unknown
-pools, and missing-decimals 18-fallback — so the combined path inherits the
-per-family oracle coverage.
+The fixture emits every family, including the window-dependent shapes (v2
+Sync reserves, v3 last-Swap sqrtPriceX96, bento Sync), curve coin-index
+indirection with the metapool underlying fallback, traderjoe packed and
+bin-folded amounts, fork amm attribution from the pool dim, the inner-join
+drop of unknown pools, and the 18-decimals fallback for a token with no
+decimals row. The expected rows are literals; each family's arithmetic is
+also checked against its own DuckDB oracle by the harness queries
+(test_family_oracle_coverage).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
+from pyspark.sql import Row
 
 from ethereum_etl_spark.operators.dex import (
     BALANCER_V2_ABIS,
@@ -36,23 +35,6 @@ from ethereum_etl_spark.operators.dex import (
     UNISWAP_V2_ABIS,
     UNISWAP_V3_ABIS,
     WOMBAT_ABIS,
-    extract_dex_trades,
-    extract_dex_trades_balancer,
-    extract_dex_trades_bancor_v2,
-    extract_dex_trades_bento,
-    extract_dex_trades_carbon,
-    extract_dex_trades_curve,
-    extract_dex_trades_dmm,
-    extract_dex_trades_dodo,
-    extract_dex_trades_dodo_v2,
-    extract_dex_trades_fjord,
-    extract_dex_trades_meshswap,
-    extract_dex_trades_one_inch,
-    extract_dex_trades_saddle,
-    extract_dex_trades_traderjoe,
-    extract_dex_trades_v3,
-    extract_dex_trades_wombat,
-    extract_dex_trades_wombat_liquidity,
 )
 from ethereum_etl_spark.operators.dex_combined import (
     FAMILY_EVENTS,
@@ -312,37 +294,138 @@ def _dims(spark):
     return pools, tokens
 
 
-def _union_of_individual(parsed, pools, tokens, pool_balances=None):
-    shape = [
-        "block_number", "transaction_hash",
-        F.col("log_index").cast("int").alias("log_index"),
-        "pool_address", "event_type", "token_amounts", "token_reserves",
-        "token_prices", "token_addresses", "factory_address",
-        "wallet_address", "amm",
-    ]
-    parts = [
-        extract_dex_trades(parsed, pools, tokens),
-        extract_dex_trades_v3(parsed, pools, tokens, pool_balances=pool_balances),
-        extract_dex_trades_balancer(parsed, tokens),
-        extract_dex_trades_curve(parsed, pools, tokens),
-        extract_dex_trades_dodo(parsed, pools, tokens),
-        extract_dex_trades_dodo_v2(parsed, pools, tokens),
-        extract_dex_trades_traderjoe(parsed, pools, tokens),
-        extract_dex_trades_one_inch(parsed, pools, tokens),
-        extract_dex_trades_bento(parsed, pools, tokens),
-        extract_dex_trades_wombat(parsed, tokens),
-        extract_dex_trades_carbon(parsed, tokens),
-        extract_dex_trades_fjord(parsed, pools, tokens),
-        extract_dex_trades_meshswap(parsed, pools, tokens),
-        extract_dex_trades_wombat_liquidity(parsed, pools, tokens),
-        extract_dex_trades_bancor_v2(parsed, pools, tokens),
-        extract_dex_trades_saddle(parsed, pools, tokens),
-        extract_dex_trades_dmm(parsed, pools, tokens),
-    ]
-    out = parts[0].select(*shape)
-    for p in parts[1:]:
-        out = out.unionByName(p.select(*shape))
-    return out
+GOLDEN_COLUMNS = (
+    "token_amounts", "pool_address", "transaction_hash", "log_index",
+    "block_number", "event_type", "token_reserves", "token_prices",
+    "token_addresses", "factory_address", "wallet_address", "amm",
+)
+
+# extract_dex_trades_combined(parsed, *_dims(spark)) on this fixture, in
+# GOLDEN_COLUMNS order (three lines per row), sorted by _key
+GOLDEN_ROWS = [
+    ([4.0, -3.0], ADDR("21"), "0xbal", 1, 7, "swap",
+     [0.0, 0.0], [0.75, 1.3333333333333333],
+     [TA, TB], VAULT, None, "balancer_v2"),
+    ([-2.0, 3.0], P_BC, "0xbc", 1, 7, "swap",
+     [0.0, 0.0], [1.5, 0.6666666666666666],
+     [TA, TB], "0xfac", WALLET1, "bancor_v2"),
+    ([0.0, 1.0], P_BC, "0xbc", 2, 7, "mint",
+     [0.0, 4.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET2, "bancor_v2"),
+    ([-0.7, 0.0], P_BC, "0xbc", 3, 7, "burn",
+     [1.2, 0.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET1, "bancor_v2"),
+    ([1.5, -1.0], CTRL, "0xcb", 1, 7, "swap",
+     [0.0, 0.0], [0.6666666666666666, 1.5],
+     [TA, TB], CTRL, WALLET1, "carbondefi"),
+    ([2.5, -1.0], P_CRV, "0xcrv", 1, 7, "swap",
+     [0.0, 0.0], [0.4, 2.5],
+     [TA, TC], "0xfac", WALLET1, "curve"),
+    ([500000000.0, -3e-12], P_META, "0xcrvu", 1, 7, "swap",
+     [0.0, 0.0], [6.0000000000000006e-21, 1.6666666666666666e+20],
+     [TU, TB], "0xfac", WALLET2, "curve"),
+    ([2.5, -0.8], P_DMM, "0xdm", 2, 7, "swap",
+     [8.0, 2.0], [0.25, 4.0],
+     [TA, TB], "0xfac", WALLET2, "dmm"),
+    ([1.2, 0.3], P_DMM, "0xdm", 3, 7, "mint",
+     [8.0, 2.0], [0.25, 4.0],
+     [TA, TB], "0xfac", WALLET1, "dmm"),
+    ([-2.0, 1.0], P_DODO, "0xdd1", 1, 7, "swap",
+     [0.0, 0.0], [0.5, 2.0],
+     [TA, TB], "0xfac", WALLET1, "dodo"),
+    ([3.0, -2.0], P_DODO, "0xdd1", 2, 7, "swap",
+     [0.0, 0.0], [0.6666666666666666, 1.5],
+     [TA, TB], "0xfac", WALLET2, "dodo"),
+    ([-5.0, 4.0], P_DV2, "0xdd2", 1, 7, "swap",
+     [0.0, 0.0], [0.8, 1.25],
+     [TA, TB], "0xfac", WALLET1, "dodo_v2"),
+    ([-2.0, 1.0], P_FJ, "0xfj", 1, 7, "swap",
+     [0.0, 0.0], [0.5, 2.0],
+     [TA, TB], "0xfac", WALLET1, "fjord"),
+    ([1.8, -1.0], P_FJ, "0xfj", 2, 7, "swap",
+     [0.0, 0.0], [0.5555555555555556, 1.8],
+     [TA, TB], "0xfac", WALLET2, "fjord"),
+    ([-1.9, 2.0], P_MESH, "0xms", 2, 7, "swap",
+     [9.0, 4.0], [0.4444444444444444, 2.25],
+     [TA, TB], "0xfac", None, "meshswap"),
+    ([1.0, -0.5], P_MESH, "0xms", 3, 7, "swap",
+     [9.0, 4.0], [0.4444444444444444, 2.25],
+     [TA, TB], "0xfac", None, "meshswap"),
+    ([2.0, 1.0], P_MESH, "0xms", 4, 7, "mint",
+     [9.0, 4.0], [0.4444444444444444, 2.25],
+     [TA, TB], "0xfac", WALLET1, "meshswap"),
+    ([-0.5, -0.2], P_MESH, "0xms", 5, 7, "burn",
+     [9.0, 4.0], [0.4444444444444444, 2.25],
+     [TA, TB], "0xfac", WALLET2, "meshswap"),
+    ([-2.0, 1.0], P_OI, "0xoi", 1, 7, "swap",
+     [9.0, 4.0], [0.4444444444444444, 2.25],
+     [TA, TB], "0xfac", WALLET1, "one_inch"),
+    ([0.9, 0.0], P_PLAT, "0xpl", 1, 7, "withdraw",
+     [0.0, 0.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET1, "platypus"),
+    ([2.2, -3.0], P_SAD, "0xsd", 1, 7, "swap",
+     [0.0, 0.0], [1.3636363636363635, 0.7333333333333334],
+     [TA, TC], "0xfac", WALLET1, "saddle"),
+    ([700000000.0, -2.6e-12], P_SADU, "0xsdu", 1, 7, "swap",
+     [0.0, 0.0], [3.714285714285714e-21, 2.6923076923076926e+20],
+     [TU, TB], "0xfac", WALLET2, "saddle"),
+    ([1.0, -0.5], P_V2, "0xv2", 2, 7, "swap",
+     [5.0, 2.0], [0.4, 2.5],
+     [TA, TB], "0xfac", WALLET2, "sushiswap"),
+    ([2.0, 1.0], P_V2, "0xv2", 3, 7, "mint",
+     [5.0, 2.0], [0.4, 2.5],
+     [TA, TB], "0xfac", WALLET1, "sushiswap"),
+    ([-0.5, -0.1], P_V2, "0xv2", 5, 7, "burn",
+     [7.0, 3.0], [0.42857142857142855, 2.3333333333333335],
+     [TA, TB], "0xfac", WALLET2, "sushiswap"),
+    ([-1.5, 1.0], P_BEN, "0xsb", 2, 7, "swap",
+     [6.0, 2.0], [0.3333333333333333, 3.0],
+     [TA, TB], "0xfac", WALLET1, "sushiswap_bento"),
+    ([1.0, 1.0], P_BEN, "0xsb", 3, 7, "mint",
+     [6.0, 2.0], [0.3333333333333333, 3.0],
+     [TA, TB], "0xfac", WALLET2, "sushiswap_bento"),
+    ([3.0, -4.0], P_TJ, "0xtj", 1, 7, "swap",
+     [0.0, 0.0], [1.3333333333333333, 0.75],
+     [TA, TB], "0xfac", WALLET2, "traderjoe_v2_1"),
+    ([1.5, 3.0], P_TJ, "0xtj", 2, 7, "mint",
+     [0.0, 0.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET2, "traderjoe_v2_1"),
+    ([3.0, -2.0], P_V3, "0xv3", 1, 7, "swap",
+     [0.0, 0.0], [4e-12, 250000000000.0],
+     [TA, TB], "0xfac", WALLET2, "uniswap_v3"),
+    ([1.5, 1.0], P_V3, "0xv3", 2, 7, "mint",
+     [0.0, 0.0], [4e-12, 250000000000.0],
+     [TA, TB], "0xfac", WALLET1, "uniswap_v3"),
+    ([0.4, 0.3], P_V3, "0xv3", 3, 7, "burn",
+     [0.0, 0.0], [4e-12, 250000000000.0],
+     [TA, TB], "0xfac", WALLET2, "uniswap_v3"),
+    ([0.1, 0.2], P_V3, "0xv3b", 1, 7, "burn",
+     [0.0, 0.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET1, "uniswap_v3"),
+    ([3.0, -2.0], WOM, "0xwo", 1, 7, "swap",
+     [0.0, 0.0], [0.6666666666666666, 1.5],
+     [TA, TB], WOM, WALLET2, "wombat"),
+    ([0.0, 2.0], WOM, "0xwo", 2, 7, "deposit",
+     [0.0, 0.0], [0.0, 0.0],
+     [TA, TB], "0xfac", WALLET2, "wombat"),
+]
+
+# the uniswap_v3 rows' token_reserves when the as-of pool_balances of
+# test_combined_with_v3_asof_reserves_golden_rows are supplied
+V3_ASOF_RESERVES = {
+    ("0xv3", 1): [12.0, 6.0],
+    ("0xv3", 2): [12.0, 6.0],
+    ("0xv3", 3): [12.0, 6.0],
+    ("0xv3b", 1): [12.0, 6.0],
+}
+
+
+def _golden(v3_reserves=None):
+    rows = [dict(zip(GOLDEN_COLUMNS, r)) for r in GOLDEN_ROWS]
+    for r in rows:
+        if v3_reserves and r["amm"] == "uniswap_v3":
+            r["token_reserves"] = v3_reserves[(r["transaction_hash"], r["log_index"])]
+    return [Row(**r) for r in rows]
 
 
 def _key(r):
@@ -360,31 +443,25 @@ def _rows_equal(a, b):
     return {k: norm(a[k]) for k in a.asDict()} == {k: norm(b[k]) for k in b.asDict()}
 
 
-def _assert_equivalent(combined, union, got=None):
-    """Collect each side EXACTLY once — these are the two largest plans in
-    the repo (12 families × windows × dim joins); every extra action pays
-    the full Catalyst analysis again (~30s driver-side at any data size)."""
-    got = sorted(combined.collect(), key=_key) if got is None else sorted(got, key=_key)
-    want = sorted(
-        union.select(*combined.columns).collect(), key=_key
-    )
+def _assert_rows(got, want):
+    got, want = sorted(got, key=_key), sorted(want, key=_key)
     assert [_key(r) for r in got] == [_key(r) for r in want]
     for g, w in zip(got, want):
         assert _rows_equal(g, w), (g, w)
     return got
 
 
-def test_combined_equals_union_all_families(spark, parsed):
+def test_combined_all_families_golden_rows(spark, parsed):
     pools, tokens = _dims(spark)
     combined = extract_dex_trades_combined(parsed, pools, tokens)
-    union = _union_of_individual(parsed, pools, tokens)
+    assert combined.columns == list(GOLDEN_COLUMNS)
     rows = combined.collect()
     assert len(rows) == 35  # every family present, drops applied
     assert len({r["amm"] for r in rows}) == 17  # incl. platypus/bancor_v2/saddle/dmm
-    _assert_equivalent(combined, union, got=rows)
+    _assert_rows(rows, _golden())
 
 
-def test_combined_equals_union_with_v3_asof_reserves(spark, parsed):
+def test_combined_with_v3_asof_reserves_golden_rows(spark, parsed):
     pools, tokens = _dims(spark)
     balances = spark.createDataFrame(
         [
@@ -395,8 +472,7 @@ def test_combined_equals_union_with_v3_asof_reserves(spark, parsed):
         "holder_address string, token_address string, block_number long, value double",
     )
     combined = extract_dex_trades_combined(parsed, pools, tokens, pool_balances=balances)
-    union = _union_of_individual(parsed, pools, tokens, pool_balances=balances)
-    rows = _assert_equivalent(combined, union)
+    rows = _assert_rows(combined.collect(), _golden(V3_ASOF_RESERVES))
     v3 = [r for r in rows if r["amm"] == "uniswap_v3"]
     assert all(r["token_reserves"][0] > 0 for r in v3)
 
@@ -439,12 +515,51 @@ def test_family_events_cover_every_abi_namespace():
     assert {a.namespace for a in ALL_ABIS} == set(FAMILY_EVENTS)
 
 
+# family → the harness query whose DuckDB oracle checks it, run through
+# extract_dex_trades_combined(families=[...]); "wombat_liquidity" is the
+# Deposit/Withdraw side branch of the wombat family
+FAMILY_ORACLES = {
+    "uniswap_v2": "q37_dex_trade_assembly",
+    "dmm": "q65_dmm_trades",
+    "meshswap": "q59_meshswap_trades",
+    "uniswap_v3": "q38_uniswap_v3_trades",
+    "balancer_v2": "q44_balancer_vault_swaps",
+    "curve": "q48_curve_trades",
+    "saddle": "q63_saddle_trades",
+    "dodo": "q53_dodo_trades",
+    "dodo_v2": "q54_dodo_v2_trades",
+    "traderjoe_v2_1": "q55_traderjoe_lb_trades",
+    "one_inch": "q56_multi_family_trades",
+    "sushiswap_bento": "q56_multi_family_trades",
+    "wombat": "q56_multi_family_trades",
+    "carbondefi": "q56_multi_family_trades",
+    "fjord": "q56_multi_family_trades",
+    "bancor_v2": "q62_bancor_v2_trades",
+    "wombat_liquidity": "q61_wombat_platypus_liquidity",
+}
+
+
+def test_family_oracle_coverage():
+    """Every family keeps an independent reference: a DuckDB oracle over a
+    harness query that runs the combined extractor for that family."""
+    import inspect
+
+    from ethereum_etl_spark.plans.harness_queries import ORACLES, QUERIES
+
+    assert set(FAMILY_ORACLES) == set(FAMILY_EVENTS) | {"wombat_liquidity"}
+    for fam, q in FAMILY_ORACLES.items():
+        assert q in ORACLES, (fam, q)
+        src = inspect.getsource(QUERIES[q])
+        assert "extract_dex_trades_combined" in src, (fam, q)
+        assert f'"{fam.removesuffix("_liquidity")}"' in src, (fam, q)
+
+
 def test_combined_plan_single_window_exchange_and_broadcast_dims(spark, parsed):
     """The scale property the combined extractor exists for: ALL families
     share one pools broadcast + one decimals broadcast pair, and the v2/bento
     exclusive-frame window and the v3 inclusive-frame window plan over a
-    SINGLE (contract_address, transaction_hash) shuffle — not one per family
-    as the 12-extractor union did (~30 exchanges)."""
+    SINGLE (contract_address, transaction_hash) shuffle — not one per
+    family."""
     pools, tokens = _dims(spark)
     plan = (
         extract_dex_trades_combined(parsed, pools, tokens)
@@ -464,8 +579,7 @@ def test_combined_plan_single_window_exchange_and_broadcast_dims(spark, parsed):
 def test_combined_v2_without_dmm_keeps_dmm_sync_reserves(spark, parsed):
     # uniswap_v2 requested ALONE: the v2-topic0 Mint on the DMM pool must
     # still read the dmm 4-word Sync's reserves through the mark-only
-    # pseudo-branch (extract_dex_trades admits those marks unconditionally,
-    # so the subset stays equivalent); dmm Swaps themselves must NOT emit.
+    # pseudo-branch, as in the all-family run; dmm Swaps must NOT emit.
     pools, tokens = _dims(spark)
     sub = extract_dex_trades_combined(
         parsed, pools, tokens, families=["uniswap_v2"]

@@ -22,9 +22,8 @@ from ethereum_etl_spark.operators.dex import (
     UNISWAP_V2_ABIS,
     UNISWAP_V3_ABIS,
     WOMBAT_ABIS,
-    extract_dex_trades_dodo_v2,
-    extract_dex_trades_traderjoe,
 )
+from ethereum_etl_spark.operators.dex_combined import extract_dex_trades_combined
 from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
 
 ALL_FAMILY_ABIS = (
@@ -79,7 +78,7 @@ def test_dodo_v2_swap_leg_order_follows_pool(spark):
     parsed = parse_logs(logs, build_inventory(spark, DODO_V2_ABIS), DODO_V2_ABIS)
     pools = spark.createDataFrame([(pool, "0xfac", [t0, t1], 0, [])], POOL_DDL)
     tokens = spark.createDataFrame([(t0, "A", 18), (t1, "B", 6)], TOKEN_DIM_DDL)
-    out = extract_dex_trades_dodo_v2(parsed, pools, tokens).collect()
+    out = extract_dex_trades_combined(parsed, pools, tokens, families=["dodo_v2"]).collect()
     assert len(out) == 1
     r = out[0]
     assert r["amm"] == "dodo_v2" and r["event_type"] == "swap"
@@ -104,7 +103,9 @@ def test_traderjoe_packed_swap_amounts(spark):
     parsed = parse_logs(logs, build_inventory(spark, TRADERJOE_ABIS), TRADERJOE_ABIS)
     pools = spark.createDataFrame([(pool, "0xfac", [t0, t1], 0, [])], POOL_DDL)
     tokens = spark.createDataFrame([(t0, "X", 6), (t1, "Y", 18)], TOKEN_DIM_DDL)
-    out = extract_dex_trades_traderjoe(parsed, pools, tokens).collect()
+    out = extract_dex_trades_combined(
+        parsed, pools, tokens, families=["traderjoe_v2_1"]
+    ).collect()
     assert len(out) == 1
     r = out[0]
     # x-leg: +3e6/1e6 = 3.0 in; y-leg: −4e18/1e18 = −4.0 out
@@ -131,7 +132,9 @@ def test_traderjoe_bin_deposit_fold(spark):
     parsed = parse_logs(logs, build_inventory(spark, TRADERJOE_ABIS), TRADERJOE_ABIS)
     pools = spark.createDataFrame([(pool, "0xfac", [t0, t1], 0, [])], POOL_DDL)
     tokens = spark.createDataFrame([(t0, "X", 6), (t1, "Y", 18)], TOKEN_DIM_DDL)
-    out = extract_dex_trades_traderjoe(parsed, pools, tokens).collect()
+    out = extract_dex_trades_combined(
+        parsed, pools, tokens, families=["traderjoe_v2_1"]
+    ).collect()
     assert len(out) == 1
     r = out[0]
     assert r["event_type"] == "mint"

@@ -85,6 +85,14 @@ def test_hex_to_dec38(spark):
         ("~0x", None),
         ("-42", Decimal(-42)),  # signed decimal string
         ("0xABCDEF", Decimal(0xABCDEF)),  # uppercase hex digits
+        # input contract: no whitespace or '_' inside hex or '_' grouping
+        # in decimals; Spark's cast trims whitespace around decimal strings
+        ("0x1f ", None),
+        (" 0x1f", None),
+        ("0x1_f", None),
+        ("1_000", None),
+        (" 42", Decimal(42)),
+        ("42 ", Decimal(42)),
     ]
     df = spark.createDataFrame([(c[0],) for c in cases], ["h"])
     vals = [r[0] for r in df.select(hex_to_dec38(F.col("h"))).collect()]
