@@ -249,7 +249,7 @@ class LakeTable:
         counts + prune-column min/max from Parquet footers. Footers are read
         in a thread pool — pyarrow releases the GIL on IO, and a serial walk
         was a measurable driver-side stall between stages (idle valleys in
-        the CPU profile) once salted writes raised file counts."""
+        the CPU profile) at high file counts."""
         from concurrent.futures import ThreadPoolExecutor
 
         targets: list[tuple[str, int]] = []
@@ -289,31 +289,30 @@ class LakeTable:
     def _write_partitioned(
         self, df: DataFrame, m: Manifest, version: int
     ) -> list[DataFile]:
-        """Write df (already aligned to schema) hive-partitioned by pt."""
-        out_rel = os.path.join(DATA_DIR, f"v{version:012d}")
-        out_abs = os.path.join(self.root, out_rel)
+        """Write df (already aligned to schema) hive-partitioned by pt,
+        straight from its own partitions: each task writes one file per
+        lake partition its rows fall in. No exchange — a shuffle here cost
+        a map job per merge, and the tail's merges are a handful of rows
+        that AQE coalesced back into one partition anyway. Callers shape
+        the partitioning: a dedup window or join has already shuffled by
+        key, a batch decode follows its scan, compaction coalesces.
+
+        Rows are sorted by (pt, key) within each task, so every file holds
+        its rows in key order (the reference's ORDER BY sort keys,
+        eth_streamer_adapter.py:80-102) and min/max file skipping on the key
+        stays tight. pt leads the sort because the planned write requires
+        that order; a key-only sort does not satisfy it, and the optimizer
+        then replaced it with a pt-only one."""
+        out_abs = os.path.join(self.root, DATA_DIR, f"v{version:012d}")
         pt = F.floor(F.col(m.prune_col).cast("double") / m.partition_size).cast("long")
-        # shuffle keyed by (pt, key-salt): write parallelism is not capped by
-        # the number of touched lake partitions (a micro-batch touches few
-        # pts but has plenty of rows); AQE coalesces the salted shuffle back
-        # down when the batch is small, so tiny tables don't fragment.
-        # sortWithinPartitions keeps the Iceberg-style sort order
-        # (eth_streamer_adapter.py:80-102) so min/max file skipping on the
-        # key stays tight at scale.
-        salt = F.pmod(
-            F.xxhash64(*[F.col(k) for k in m.key]),
-            F.lit(self.spark.sparkContext.defaultParallelism),
-        )
         (
             df.withColumn("pt", F.coalesce(pt, F.lit(-1)))
-            .repartition(F.col("pt"), salt)
-            .sortWithinPartitions(*m.key)
+            .sortWithinPartitions("pt", *m.key)
             .write.partitionBy("pt")
             .mode("overwrite")
             .parquet(out_abs)
         )
-        files = self._collect_stats(out_abs, m.prune_col)
-        return files
+        return self._collect_stats(out_abs, m.prune_col)
 
     def append(self, batch: DataFrame, batch_id: str | None = None) -> int:
         """Append-only fast path (errors/metrics tables — MergeTree analog,
@@ -429,8 +428,8 @@ class LakeTable:
                 # caller guarantees the batch carries at most one row per
                 # natural key (e.g. a reorg-free block range decoded from a
                 # seq-unique WAL) — drop the row_number window and its
-                # key-partitioned shuffle entirely, leaving the partitioning
-                # shuffle as the merge's only exchange
+                # key-partitioned shuffle: the merge then runs without an
+                # exchange, writing from the batch's own partitions
                 merged = aligned.drop("__precedence")
             else:
                 order = [F.col("__precedence").desc()]
@@ -512,7 +511,10 @@ class LakeTable:
         O(log(partition_rows / batch_rows)) times instead of once per batch
         (pure copy-on-write) or never (unbounded file counts). Appended file
         sets cover disjoint key ranges, so compaction is a concatenation —
-        no dedup window needed."""
+        no dedup window needed. The victims are coalesced to as many tasks
+        as partitions are compacted (one, at the chain tail): the scan
+        alone spreads small files over the cores, and the write leaves a
+        file per task and partition."""
         m = self.manifest()
         by_pt: dict[int, list[DataFile]] = {}
         for f in m.files:
@@ -533,7 +535,7 @@ class LakeTable:
             *[os.path.join(self.root, f.path) for f in victims]
         )
         new_version = m.version + 1
-        new_files = self._write_partitioned(df, m, new_version)
+        new_files = self._write_partitioned(df.coalesce(len(plan)), m, new_version)
         dead = {f.path for f in victims}
         old_dirs = {
             os.path.dirname(os.path.dirname(os.path.join(self.root, f.path)))

@@ -31,11 +31,24 @@ def _check(out: DataFrame, inp: DataFrame, strict: bool, what: str) -> DataFrame
     return out
 
 
-def enrich_transactions(transactions: DataFrame, receipts: DataFrame, strict: bool = False) -> DataFrame:
+def enrich_transactions(
+    transactions: DataFrame,
+    receipts: DataFrame,
+    strict: bool = False,
+    dedup: bool = True,
+) -> DataFrame:
     """J2 (enrich.py:71-117): tx × receipt 1:1 on hash, receipt fields
-    prefixed receipt_. Inputs deduped on key first (utils.py:165-173)."""
-    t = transactions.dropDuplicates(["hash"])
-    r = receipts.dropDuplicates(["transaction_hash"]).select(
+    prefixed receipt_.
+
+    With ``dedup`` (the default) both inputs are deduped on their key first
+    (utils.py:165-173): a batch carrying a reorg, or rows re-sent for a
+    forced block repair, can hold two rows per hash, and the 1:1 join would
+    multiply them. The streamer passes ``dedup=False`` for a reorg-free
+    batch of a seq-unique WAL, which holds one row per hash by
+    construction; the two dedup shuffles would then be no-ops."""
+    t = transactions.dropDuplicates(["hash"]) if dedup else transactions
+    r = receipts.dropDuplicates(["transaction_hash"]) if dedup else receipts
+    r = r.select(
         F.col("transaction_hash"),
         F.col("cumulative_gas_used").alias("receipt_cumulative_gas_used"),
         F.col("gas_used").alias("receipt_gas_used"),

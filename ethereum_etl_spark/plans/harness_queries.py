@@ -52,6 +52,15 @@ def _dec(c, p=18, s=4):
     return F.col(c).cast(f"decimal({p},{s})")
 
 
+def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` is within
+    spark.sql.autoBroadcastJoinThreshold (a negative threshold turns
+    broadcasting off) — the test the planner applies to unhinted joins."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    return 0 <= est <= limit
+
+
 # ---------------------------------------------------------------------------
 # CDC / warehouse core (SURVEY §2.4-2.8)
 # ---------------------------------------------------------------------------
@@ -503,9 +512,10 @@ def q19(spark, sf):
     plans/r06/q19_region_revenue_before.txt, node 20). Explicit broadcast
     hints on the DIM side of every join force the fact table to stay
     un-collected and un-shuffled (guide §3.1: estimates are often wrong —
-    hint the side you know is small). At larger scale the orders-side
-    broadcast stops fitting; drop that one hint and AQE picks a
-    sort-merge for the final join — the dims chain stays broadcast."""
+    hint the side you know is small). The orders-side hint is given only
+    while that side fits the broadcast threshold; past it the final join
+    is left unhinted, for AQE to choose — the dims chain stays
+    broadcast."""
     r = ld(spark, sf, "region")
     n = ld(spark, sf, "nation")
     c = ld(spark, sf, "customer")
@@ -520,8 +530,13 @@ def q19(spark, sf):
     ords = o.join(F.broadcast(dims), o.o_custkey == dims.c_custkey).select(
         "o_orderkey", "r_name"
     )
+    # an order has one customer, so ords holds at most one row per order:
+    # the orders scan pruned to two columns sizes it (the optimizer's
+    # estimate of the join itself multiplies the sizes of its inputs)
+    if _fits_broadcast(spark, o.select("o_orderkey", "o_custkey")):
+        ords = F.broadcast(ords)
     return (
-        li.join(F.broadcast(ords), li.l_orderkey == ords.o_orderkey)
+        li.join(ords, li.l_orderkey == ords.o_orderkey)
         .groupBy("r_name")
         .agg(
             F.round(F.sum(rev).cast("double"), 2).alias("revenue"),

@@ -13,8 +13,9 @@ driver:
 
 Exactly-once: the MERGE carries batch_id "{lo}-{hi}"; a crash after commit
 but before the watermark write replays the batch, which the LakeTable
-recognizes and skips. Decoded parents are cached per batch (the memoized
-thunk DAG of eth_streamer_adapter.py:246-258 → df.cache()).
+recognizes and skips. A decoded parent that two derivations read is cached
+per batch (the memoized thunk DAG of eth_streamer_adapter.py:246-258 →
+df.cache()).
 
 The same loop drives the north_rule repo-file CDC (entity='repo_file'),
 proving the engine is entity-agnostic: an entity is (schema, natural key,
@@ -349,6 +350,9 @@ class ChainStreamer:
             spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
             .METRIC_COMPILATION_TIME()
         )
+        # its nextJobId() is the count of jobs submitted so far in this
+        # JVM — the per-cycle delta goes to lineage as spark_jobs
+        self._dag = spark.sparkContext._jsc.sc().dagScheduler()
         # scratch spills are always rebuilt from the WAL — drop leftovers
         # from a crashed run before they accumulate
         shutil.rmtree(f"{cfg.warehouse}/_staging", ignore_errors=True)
@@ -601,19 +605,35 @@ class ChainStreamer:
     # ---------- one sync cycle ----------
 
     def _decode_batch(self, batch: DataFrame):
-        """Decode raw entities once, cached — the memoized thunk DAG."""
-        cache = {}
-        views = {}
+        """Decode raw entities once — the memoized thunk DAG. Returns the
+        memo and the list of decodes it cached.
+
+        A decode is cached only when a second derivation asks for it (the
+        log enrich re-reads the blocks, the tx enrich the receipts); with
+        one consumer the decode runs inside that consumer's merge job, and
+        a cache would only add a job to build it. Caching on the second
+        request still serves the first consumer: cached data is
+        substituted when a plan executes, and every merge executes after
+        _derive has built all the plans. A single-consumer decode carries
+        the null-key guard fused into its plan, where the guard re-parses
+        the required fields (see drop_null_keys)."""
+        decoded: dict[str, DataFrame] = {}
+        views: dict[str, DataFrame] = {}
+        cached: list[DataFrame] = []
+        lock = threading.Lock()  # the dex parse asks from a merge thread
 
         def get(entity):
-            if entity not in cache:
-                cache[entity] = self._decoders[entity](batch).cache()
-                # null-key guard sits ABOVE the cache boundary so the JSON
-                # parse runs exactly once (see drop_null_keys docstring)
-                views[entity] = drop_null_keys(cache[entity], entity)
-            return views[entity]
+            with lock:
+                if entity not in views:
+                    decoded[entity] = self._decoders[entity](batch)
+                    views[entity] = drop_null_keys(decoded[entity], entity)
+                elif not decoded[entity].is_cached:
+                    # null-key guard above the cache boundary: the JSON
+                    # parse of a shared decode runs exactly once
+                    cached.append(decoded[entity].cache())
+                return views[entity]
 
-        return get, cache
+        return get, cached
 
     def _derive(
         self,
@@ -622,6 +642,7 @@ class ChainStreamer:
         aux_cache: list | None = None,
         present_t0s: set | None = None,
         pre_parsed=None,
+        reorg_free: bool = False,
     ) -> dict[str, dict]:
         """Entity name → {df, merge opts} (decode + enrich + stamp).
 
@@ -629,7 +650,10 @@ class ChainStreamer:
         are computed once (cached), children reuse them. ``dex_cell``: the
         per-batch memo shared by dex discovery and trades, filled as merges
         demand its frames; the caller releases its checkpoints once the
-        batch is done.
+        batch is done. ``reorg_free``: the batch has no reorg rows and no
+        forced deletes, so a decoded entity holds one row per key (the
+        invariant behind _UNIQUE_BATCH_KEY_ENTITIES) and the tx enrich
+        skips its dedup.
         """
         from ethereum_etl_spark.operators.balances import (
             native_balances_from_transactions,
@@ -656,7 +680,8 @@ class ChainStreamer:
             add("blocks", stamp(get("block"), "block", ts_col="timestamp"))
         if "transaction" in want:
             enriched_tx = enrich_transactions(
-                get("transaction"), get("receipt"), self.cfg.strict_counts
+                get("transaction"), get("receipt"), self.cfg.strict_counts,
+                dedup=not reorg_free,
             )
             add("transactions", stamp(enriched_tx, "transaction", ts_col="block_timestamp"))
         if "receipt" in want:
@@ -1352,6 +1377,7 @@ class ChainStreamer:
     ) -> int | None:
         t0 = time.time()
         compiles0 = self._compiles.getCount()
+        jobs0 = self._dag.nextJobId()
         pre = self._take_prefetch(watermark)
         pre_srows = None
         pre_parsed = None
@@ -1410,6 +1436,9 @@ class ChainStreamer:
             # generated classes compiled during the cycle (the prefetch
             # thread's included): a steady cycle should hit the class cache
             codegen_compiles=self._compiles.getCount() - compiles0,
+            # Spark jobs submitted during the cycle, the prefetch thread's
+            # included (every thread's jobs share the one counter)
+            spark_jobs=self._dag.nextJobId() - jobs0,
             **info,
         )
         return target
@@ -1438,6 +1467,9 @@ class ChainStreamer:
             batch = _cluster_batch(batch)
         if staged_path is None and not batch.is_cached:
             batch = batch.cache()
+        # the cached frame itself: a reorg rebinds `batch` to its winner
+        # filter, whose unpersist would leave this cache pinned
+        cached_batch = batch
 
         # ONE stats pass over the batch, grouped by entity_type: block span
         # + reorg presence + PER-ENTITY row counts. The span becomes the
@@ -1502,7 +1534,7 @@ class ChainStreamer:
                 )
 
         __t = time.time()
-        get, cache = self._decode_batch(batch)
+        get, cached = self._decode_batch(batch)
         aux_cache: list = []
         # topic0 set extracted by the (possibly prefetched) stats pass —
         # _derive then builds pure plans, launching no executor jobs
@@ -1517,7 +1549,7 @@ class ChainStreamer:
         dex_cell: dict = {}
         derived = self._derive(
             get, dex_cell, aux_cache, present_t0s=present_t0s,
-            pre_parsed=pre_parsed,
+            pre_parsed=pre_parsed, reorg_free=not has_reorg,
         )
         phase_secs["plan"] = round(time.time() - __t, 3)
         __t = time.time()
@@ -1740,11 +1772,11 @@ class ChainStreamer:
                     "delay_s": round(indexed_at - ts, 3) if ts is not None else None,
                 }
 
-        for cdf in list(cache.values()) + aux_cache:
+        for cdf in cached + aux_cache:
             cdf.unpersist()
         _release_checkpoints(dex_cell)
         if staged_path is None:
-            batch.unpersist()
+            cached_batch.unpersist()
         else:
             shutil.rmtree(staged_path, ignore_errors=True)
         return {
@@ -1880,6 +1912,8 @@ class ChainStreamer:
         )
 
         min_rb = min(reorg_blocks)
+        # the affected-key checkpoints, released when the repair ends
+        pinned: list[DataFrame] = []
 
         def fix(hist_name, latest_name, key_cols, recompute, latest_of):
             if hist_name not in self.tables or latest_name not in self.tables:
@@ -1916,6 +1950,7 @@ class ChainStreamer:
                 )
                 akeys_all = akeys_all.unionByName(journaled)
             akeys = akeys_all.distinct().localCheckpoint(eager=True)
+            pinned.append(akeys)
             if akeys.isEmpty():
                 return
             base = None
@@ -2025,9 +2060,12 @@ class ChainStreamer:
             # concurrently (each is itself a serial chain of reads + merges)
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-                for f in [ex.submit(j) for j in jobs]:
-                    f.result()
+            try:
+                with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+                    for f in [ex.submit(j) for j in jobs]:
+                        f.result()
+            finally:
+                _release_checkpoints(pinned)
 
     def _reorg_fix_dex_prices(
         self,
@@ -2055,6 +2093,24 @@ class ChainStreamer:
             or not self.cfg.stablecoins
         ):
             return
+        pinned: list[DataFrame] = []  # its checkpoints, released at the end
+        try:
+            self._reprice_after_reorg(
+                reorg_blocks, hi_bn, batch_id, use_journal, pinned
+            )
+        finally:
+            _release_checkpoints(pinned)
+
+    def _reprice_after_reorg(
+        self,
+        reorg_blocks: list[int],
+        hi_bn: int,
+        batch_id: str,
+        use_journal: bool,
+        pinned: list[DataFrame],
+    ) -> None:
+        """The body of _reorg_fix_dex_prices; appends each eager
+        checkpoint it takes to ``pinned``."""
         min_rb, max_rb = min(reorg_blocks), max(reorg_blocks)
         marks_t = self.tables["price_marks"]
         toks = (
@@ -2077,6 +2133,7 @@ class ChainStreamer:
                 )
             )
         toks = toks.distinct().localCheckpoint(eager=True)
+        pinned.append(toks)
         if not toks.isEmpty() and "price_marks_latest" in self.tables:
             # rebuild the per-token mark head for affected tokens from the
             # repaired history (delete+upsert: a token whose every mark was
@@ -2150,6 +2207,7 @@ class ChainStreamer:
                 .distinct()
                 .localCheckpoint(eager=True)
             )
+            pinned.append(liq_txs)
         t.merge_upsert(
             re_enr,
             batch_id=f"{batch_id}/reprice",

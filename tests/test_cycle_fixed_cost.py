@@ -1,10 +1,13 @@
 """Per-cycle fixed cost of the tail loop: generated classes are reused
-across cycles, each entity's decode is built once and reused, and a
-prefetch that goes unused releases everything it pinned."""
+across cycles, each entity's decode is built once and reused, a steady
+cycle stays within its Spark-job budget, and a prefetch that goes unused
+or a reorg repair releases everything it pinned."""
 
 from __future__ import annotations
 
 import json
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
 
@@ -57,6 +60,51 @@ def test_steady_tail_cycles_reuse_generated_classes(spark, tmp_path):
     assert len(recorded) == warm + steady
     assert all(n >= 0 for n in recorded)
     assert sum(recorded[warm:]) <= 2 * (steady + 1)
+
+
+def test_steady_cycle_job_budget(spark, tmp_path):
+    """The Spark jobs of a steady reorg-free base-entity cycle, as lineage
+    counts them: the prefetch of the next range (head probe, batch cache,
+    stats pass), one write job per table merge and the exchanges of the two
+    enrich joins. 13 here; 22 when each lake write shuffled, every decode
+    was cached and the tx enrich deduped its inputs."""
+    wal = _parquet_wal(spark, tmp_path, ChainWalSpec(start_block=0, end_block=23))
+    cfg = StreamerConfig(
+        warehouse=str(tmp_path / "wh"), batch_size=2 * 16, partition_size=10,
+        entity_types=BASE,
+    )
+    s = ChainStreamer(spark, cfg)
+    tailer = WalTailer(wal, batch_size=cfg.batch_size)
+    wm = s.watermarks.init_resume(0)
+    for _ in range(7):
+        wm = s.sync_cycle(tailer, wm)
+    s._drop_prefetch()
+    jobs = [e["spark_jobs"] for e in s.lineage.entries()]
+    # the first cycle reads its own range and the next one
+    assert max(jobs[1:]) <= 15, jobs
+
+
+def test_decode_memo_caches_a_shared_decode_once(spark, tmp_path):
+    """The decode memo hands every caller the same frame and caches a
+    decode once, on its second request, also when many threads ask at
+    once."""
+    s = ChainStreamer(
+        spark, StreamerConfig(warehouse=str(tmp_path / "wh"), entity_types=BASE)
+    )
+    batch = generate_chain_wal(spark, ChainWalSpec(start_block=0, end_block=3))
+    get, cached = s._decode_batch(batch)
+    first = get("log")
+    assert cached == []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            views = list(ex.map(lambda _: get("log"), range(64), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(v is first for v in views)
+    assert len(cached) == 1 and cached[0].is_cached
+    cached[0].unpersist()
 
 
 def _tx_event(seq, value, **extra):
@@ -148,3 +196,66 @@ def test_unused_prefetch_releases_its_checkpoints(spark, tmp_path):
     counts.append(persisted().size())
     assert any(p is not None for p in prebuilt), "no prefetch built a parse"
     assert max(counts[1:]) <= counts[0], counts
+
+
+def test_reorg_repair_releases_its_checkpoints(spark, tmp_path, monkeypatch):
+    """The balance repair's affected-key checkpoints are released when the
+    repair ends: the persisted RDD count stays flat over a WAL whose
+    batches carry reorgs."""
+    # keep every checkpoint reachable, so one left persisted stays in the
+    # count instead of waiting for the JVM to collect it
+    taken = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *a, **k):
+        out = checkpoint(self, *a, **k)
+        taken.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    wal = _parquet_wal(
+        spark, tmp_path,
+        ChainWalSpec(start_block=0, end_block=31, reorg_blocks=(5, 13, 21), reorg_lag=4),
+    )
+    cfg = StreamerConfig(
+        warehouse=str(tmp_path / "wh"), batch_size=4 * 16, partition_size=8,
+        entity_types=BASE + ("token_transfer", "token_balance", "native_balance"),
+    )
+    s = ChainStreamer(spark, cfg)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    tailer = WalTailer(wal, batch_size=cfg.batch_size)
+    counts = []
+    for _ in range(8):
+        s.run(tailer, max_cycles=1)
+        counts.append(persisted().size())
+    assert sum(bool(e.get("reorg")) for e in s.lineage.entries()) >= 2
+    assert taken, "no repair took a checkpoint"
+    assert max(counts[1:]) <= counts[0], counts
+
+
+def test_reorg_batch_dedups_a_duplicated_transaction(spark, tmp_path):
+    """A reorg batch that carries one transaction row twice commits the
+    same tables as the batch without the copy: the tx enrich keeps its
+    dedup for reorg batches, so the native balances debit the tx once."""
+    spec = ChainWalSpec(start_block=0, end_block=19, reorg_blocks=(18, 19), reorg_lag=0)
+    wal = _parquet_wal(spark, tmp_path, spec)
+    dup = wal.filter(
+        (F.col("entity_type") == "transaction") & (F.col("block_number") == 3)
+    ).limit(1)
+    assert dup.count() == 1
+    tables = ("transactions", "native_balances", "native_balances_latest")
+    got = {}
+    for name, w in (("plain", wal), ("dup", wal.unionByName(dup))):
+        cfg = StreamerConfig(
+            warehouse=str(tmp_path / name), batch_size=1000, partition_size=10,
+            entity_types=BASE + ("native_balance",),
+        )
+        s = ChainStreamer(spark, cfg)
+        s.run(WalTailer(w, batch_size=1000))
+        assert any(e.get("reorg") for e in s.lineage.entries())
+        got[name] = {t: s.tables[t].read() for t in tables}
+    for t in tables:
+        _same_rows(got["dup"][t], got["plain"][t])
+    txs = got["dup"]["transactions"]
+    assert txs.count() == txs.select("hash").distinct().count()

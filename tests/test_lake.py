@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import random
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -132,6 +134,33 @@ def test_append_and_gc(spark, tmp_path):
     data_dirs = os.listdir(os.path.join(t.root, "data"))
     live = {os.path.relpath(f.path, "data").split(os.sep)[0] for f in t.manifest().files}
     assert set(data_dirs) >= live
+
+
+def test_written_files_sorted_by_key(spark, tmp_path):
+    """Every file a multi-partition merge writes holds its rows in key
+    order: an append of shuffled rows, then an overlapping read-modify-
+    write over the same partitions."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "sorted"), SCHEMA, key=["number", "hash"],
+        prune_col="number", partition_size=500,
+    )
+    rows = [(i, f"0x{i % 7}", "m") for i in range(2000)]
+    random.Random(7).shuffle(rows)
+    t.merge_upsert(
+        spark.createDataFrame(rows, SCHEMA).repartition(4), batch_id="b1",
+        touched_range=(0, 1999),
+    )
+    overlap = [(i, f"0x{i % 7}", "m2") for i in range(900, 1600)]
+    random.Random(8).shuffle(overlap)
+    t.merge_upsert(spark.createDataFrame(overlap, SCHEMA).repartition(4), batch_id="b2")
+    files = t.manifest().files
+    assert len({f.pt for f in files}) == 4
+    for f in files:
+        got = pq.read_table(os.path.join(t.root, f.path), columns=["number", "hash"])
+        keys = list(zip(got["number"].to_pylist(), got["hash"].to_pylist()))
+        assert keys == sorted(keys), f.path
+    got = {r["number"]: r["miner"] for r in t.read().collect()}
+    assert got == {i: "m2" if 900 <= i < 1600 else "m" for i in range(2000)}
 
 
 def test_watermark_store(tmp_path):
