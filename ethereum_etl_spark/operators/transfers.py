@@ -181,11 +181,12 @@ def extract_token_transfers(logs: DataFrame) -> DataFrame:
         # sign/decimal-string branches (r6 — see word_to_dec38)
         return word_to_dec38(word_col)
 
-    value = u256(F.col("x.value_w"))
-    # ERC-721 value-decode fallback to 0 on garbage data (:99-105)
-    value = F.when(
-        (F.col("x.std") == "ERC-721") & value.isNull(), F.lit(0).cast("decimal(38,0)")
-    ).otherwise(value)
+    # ERC-721 value-decode fallback to 0 on garbage data (:99-105); the
+    # decode appears once in the tree, so its generated code is not copied
+    value = F.coalesce(
+        u256(F.col("x.value_w")),
+        F.when(F.col("x.std") == "ERC-721", F.lit(0).cast("decimal(38,0)")),
+    )
 
     return exploded.select(
         "token_address",

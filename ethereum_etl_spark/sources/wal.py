@@ -806,9 +806,12 @@ class WalTailer:
         """Current WAL head (max seq). Cached between sync cycles only —
         ``compute_target`` refreshes it every cycle, so a long-lived tailer
         observes rows appended while it runs (a memoized head would stop the
-        loop at the first head it ever saw)."""
+        loop at the first head it ever saw). A top-1 sort runs one Spark
+        job where ``agg(max)`` runs two (partial aggregate, then its
+        exchange); an empty WAL's head is 0."""
         if refresh or self._head is None:
-            self._head = self.wal.agg(F.max("seq")).first()[0] or 0
+            top = self.wal.select("seq").orderBy(F.desc("seq")).first()
+            self._head = (top[0] if top else None) or 0
         return self._head
 
     def compute_target(self, watermark: int, allow_skip: bool = False) -> int | None:

@@ -615,8 +615,9 @@ class ChainStreamer:
         request still serves the first consumer: cached data is
         substituted when a plan executes, and every merge executes after
         _derive has built all the plans. A single-consumer decode carries
-        the null-key guard fused into its plan, where the guard re-parses
-        the required fields (see drop_null_keys)."""
+        the null-key guard fused into its plan; the guard stays above the
+        decode's JSON parse, so each payload is parsed once (see
+        drop_null_keys)."""
         decoded: dict[str, DataFrame] = {}
         views: dict[str, DataFrame] = {}
         cached: list[DataFrame] = []

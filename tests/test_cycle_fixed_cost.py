@@ -1,5 +1,6 @@
 """Per-cycle fixed cost of the tail loop: generated classes are reused
-across cycles, each entity's decode is built once and reused, a steady
+across cycles, each entity's decode is built once and reused, the decodes
+generate code within their budget and parse each payload once, a steady
 cycle stays within its Spark-job budget, and a prefetch that goes unused
 or a reorg repair releases everything it pinned."""
 
@@ -11,8 +12,9 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
 
+from ethereum_etl_spark.functions.hex import hex_to_dec38, word_to_dec38
 from ethereum_etl_spark.schemas import BLOCK_EVOLUTION_COLUMNS
-from ethereum_etl_spark.sources.decode import EntityDecoder, decode_entity
+from ethereum_etl_spark.sources.decode import EntityDecoder, decode_entity, drop_null_keys
 from ethereum_etl_spark.sources.wal import ChainWalSpec, WalTailer, generate_chain_wal
 from ethereum_etl_spark.streaming import ChainStreamer, StreamerConfig
 
@@ -23,6 +25,15 @@ def _compiles(spark) -> int:
     """Generated classes compiled so far in this JVM (class-cache misses)."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _codegen_chars(spark, df) -> int:
+    """Characters of Java that whole-stage codegen generates for ``df``'s
+    executed plan. A tail cycle regenerates this source for every plan it
+    builds, also when the compiled class comes from the cache."""
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package")
+    stages = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return sum(len(stages.apply(i)._2()) for i in range(stages.size()))
 
 
 def _parquet_wal(spark, tmp_path, spec):
@@ -66,8 +77,9 @@ def test_steady_cycle_job_budget(spark, tmp_path):
     """The Spark jobs of a steady reorg-free base-entity cycle, as lineage
     counts them: the prefetch of the next range (head probe, batch cache,
     stats pass), one write job per table merge and the exchanges of the two
-    enrich joins. 13 here; 22 when each lake write shuffled, every decode
-    was cached and the tx enrich deduped its inputs."""
+    enrich joins. 12 here; 13 when the head probe ran an aggregate, 22 when
+    each lake write shuffled, every decode was cached and the tx enrich
+    deduped its inputs."""
     wal = _parquet_wal(spark, tmp_path, ChainWalSpec(start_block=0, end_block=23))
     cfg = StreamerConfig(
         warehouse=str(tmp_path / "wh"), batch_size=2 * 16, partition_size=10,
@@ -81,7 +93,52 @@ def test_steady_cycle_job_budget(spark, tmp_path):
     s._drop_prefetch()
     jobs = [e["spark_jobs"] for e in s.lineage.entries()]
     # the first cycle reads its own range and the next one
-    assert max(jobs[1:]) <= 15, jobs
+    assert max(jobs[1:]) <= 14, jobs
+
+
+def test_wal_head_probe_runs_one_job(spark, tmp_path):
+    """Reading the WAL head, which every cycle does, is one Spark job; an
+    empty WAL's head is 0."""
+    wal = _parquet_wal(spark, tmp_path, ChainWalSpec(start_block=0, end_block=3))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    tailer = WalTailer(wal)
+    j0 = dag.nextJobId()
+    head = tailer.head(refresh=True)
+    assert dag.nextJobId() - j0 == 1
+    assert head == wal.agg(F.max("seq")).first()[0]
+    assert WalTailer(wal.filter(F.col("seq") < 0)).head(refresh=True) == 0
+
+
+def test_base_decodes_codegen_budget(spark, tmp_path):
+    """The four base decodes, as the tail plans them, generate at most
+    300,000 characters of Java. Each uint256 column decodes in stacked
+    projections that Catalyst keeps apart; collapsed into one CASE tree per
+    column (one copy of the digit expression per reference) they generated
+    605,088."""
+    wal = _parquet_wal(spark, tmp_path, ChainWalSpec(start_block=0, end_block=3))
+    total = 0
+    for e in BASE:
+        decoded = EntityDecoder(e, ops=("upsert", "reorg"))(wal)
+        total += _codegen_chars(spark, drop_null_keys(decoded, e))
+    assert total <= 300_000, total
+
+
+def test_hex_function_codegen_pins(spark):
+    """The one-column hex decodes generate no more Java than the single
+    CASE trees they replaced (105,659 and 24,171 characters)."""
+    h = spark.createDataFrame([("0x10",)], "h string")
+    assert _codegen_chars(spark, h.select(hex_to_dec38(F.col("h")))) <= 105_659
+    assert _codegen_chars(spark, h.select(word_to_dec38(F.col("h")))) <= 24_171
+
+
+def test_null_key_guard_parses_once(spark, tmp_path):
+    """The null-key guard over an uncached decode parses each payload once:
+    the optimizer cannot copy the JSON parse into the guard's filter."""
+    wal = _parquet_wal(spark, tmp_path, ChainWalSpec(start_block=0, end_block=3))
+    for e in BASE:
+        guarded = drop_null_keys(EntityDecoder(e, ops=("upsert", "reorg"))(wal), e)
+        plan = guarded._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("from_json") == 1, (e, plan)
 
 
 def test_decode_memo_caches_a_shared_decode_once(spark, tmp_path):

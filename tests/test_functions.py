@@ -49,51 +49,57 @@ def test_hex_to_long(spark):
     assert vals == [16, 0, None, None, 10**18]
 
 
+# (input, hex_to_dec38 value) — also the inputs of the staged-decode
+# equivalence test below
+HEX_TO_DEC38_CASES = [
+    ("0xde0b6b3a7640000", Decimal(10**18)),  # 15 hex digits: one conv
+    (hex(10**40), None),  # overflows Decimal(38,0) -> NULL
+    (None, None),
+    ("junk", None),
+    # boundaries: 16 significant hex digits are one unsigned conv, 17–32
+    # two chunks, 33 or more always overflow (16^32 > 10^38)
+    (hex(2**60 - 1), Decimal(2**60 - 1)),
+    (hex(2**60), Decimal(2**60)),
+    (hex(2**64 - 1), Decimal(2**64 - 1)),
+    (hex(2**64), Decimal(2**64)),
+    ("0x1" + "0" * 32, None),
+    # 64-char ABI word with leading-zero padding → still one conv
+    ("0x" + "0" * 61 + "fff", Decimal(0xFFF)),
+    ("0x" + "0" * 64, Decimal(0)),
+    # decimal string (no 0x): parsed as base-10 (dex parsed_event contract)
+    ("123456", Decimal(123456)),
+    ("0x", None),
+    ("0xzz", None),
+    (str(10**38 - 1), Decimal(10**38 - 1)),
+    (str(10**38), None),  # decimal-string overflow
+    # the conv-chunk arithmetic and the '~0x' two's-complement
+    # translate path
+    (hex(10**38 - 1), Decimal(10**38 - 1)),  # max representable
+    (hex(10**38), None),  # exact overflow boundary
+    (hex(2**126), Decimal(2**126)),  # 32 hex digits, fits
+    ("0x" + "f" * 32, None),  # 3.4e38 > Decimal(38,0)
+    ("0x" + "f" * 64, None),  # uint256 max → overflow NULL
+    ("~0x" + "f" * 64, Decimal(-1)),  # int256 -1 (64-char width)
+    ("~0x" + "f" * 63 + "e", Decimal(-2)),
+    ("~0x" + "8" + "0" * 63, None),  # int256 min → overflow NULL
+    ("~0xff", Decimal(-1)),  # narrow width: 255 - 2^8
+    ("~0x80", Decimal(-128)),
+    ("~0x", None),
+    ("-42", Decimal(-42)),  # signed decimal string
+    ("0xABCDEF", Decimal(0xABCDEF)),  # uppercase hex digits
+    # input contract: no whitespace or '_' inside hex or '_' grouping
+    # in decimals; Spark's cast trims whitespace around decimal strings
+    ("0x1f ", None),
+    (" 0x1f", None),
+    ("0x1_f", None),
+    ("1_000", None),
+    (" 42", Decimal(42)),
+    ("42 ", Decimal(42)),
+]
+
+
 def test_hex_to_dec38(spark):
-    big = hex(10**40)  # overflows Decimal(38,0) -> NULL
-    cases = [
-        ("0xde0b6b3a7640000", Decimal(10**18)),  # 15 hex digits: JVM path
-        (big, None),
-        (None, None),
-        ("junk", None),
-        # boundary: 15 vs 16 significant hex digits (JVM vs UDF path)
-        (hex(2**60 - 1), Decimal(2**60 - 1)),
-        (hex(2**60), Decimal(2**60)),
-        (hex(2**64), Decimal(2**64)),
-        # 64-char ABI word with leading-zero padding → still JVM path
-        ("0x" + "0" * 61 + "fff", Decimal(0xFFF)),
-        ("0x" + "0" * 64, Decimal(0)),
-        # decimal string (no 0x): parsed as base-10 (dex parsed_event contract)
-        ("123456", Decimal(123456)),
-        ("0x", None),
-        ("0xzz", None),
-        (str(10**38 - 1), Decimal(10**38 - 1)),
-        (str(10**38), None),  # decimal-string overflow
-        # r6 all-JVM chunked path (the pandas UDF slow tier is gone): pins
-        # for the 16–39-significant-digit conv-chunk arithmetic and the
-        # '~0x' two's-complement translate path
-        (hex(10**38 - 1), Decimal(10**38 - 1)),  # max representable
-        (hex(10**38), None),  # exact overflow boundary
-        (hex(2**126), Decimal(2**126)),  # 32 hex digits, fits
-        ("0x" + "f" * 32, None),  # 3.4e38 > Decimal(38,0)
-        ("0x" + "f" * 64, None),  # uint256 max → overflow NULL
-        ("~0x" + "f" * 64, Decimal(-1)),  # int256 -1 (64-char width)
-        ("~0x" + "f" * 63 + "e", Decimal(-2)),
-        ("~0x" + "8" + "0" * 63, None),  # int256 min → overflow NULL
-        ("~0xff", Decimal(-1)),  # narrow width: 255 - 2^8
-        ("~0x80", Decimal(-128)),
-        ("~0x", None),
-        ("-42", Decimal(-42)),  # signed decimal string
-        ("0xABCDEF", Decimal(0xABCDEF)),  # uppercase hex digits
-        # input contract: no whitespace or '_' inside hex or '_' grouping
-        # in decimals; Spark's cast trims whitespace around decimal strings
-        ("0x1f ", None),
-        (" 0x1f", None),
-        ("0x1_f", None),
-        ("1_000", None),
-        (" 42", Decimal(42)),
-        ("42 ", Decimal(42)),
-    ]
+    cases = HEX_TO_DEC38_CASES
     df = spark.createDataFrame([(c[0],) for c in cases], ["h"])
     vals = [r[0] for r in df.select(hex_to_dec38(F.col("h"))).collect()]
     assert vals == [c[1] for c in cases]
@@ -129,6 +135,61 @@ def test_word_to_dec38_matches_general(spark):
     ]
     for a, b in got:
         assert a == b
+
+
+# the uint256 columns of the base entities' payloads
+_UINT256_FIELDS = {
+    "transaction": ("value", "gas_price"),
+    "block": ("difficulty", "total_difficulty"),
+    "receipt": ("effective_gas_price",),
+}
+
+
+def test_staged_decode_matches_hex_to_dec38(spark):
+    """EntityDecoder decodes uint256 columns in stacked projections (digits,
+    then magnitude and sign); on every hex_to_dec38 case each such column
+    equals the column-level hex_to_dec38, with and without the sidecar."""
+    import json
+
+    from ethereum_etl_spark.sources.decode import EntityDecoder
+
+    ddl = (
+        "seq long, block_number long, block_hash string, entity_type string,"
+        " op string, payload string"
+    )
+    raw = spark.createDataFrame(
+        [(i, c[0]) for i, c in enumerate(HEX_TO_DEC38_CASES)], "i long, raw string"
+    )
+    want = [c[1] for c in HEX_TO_DEC38_CASES]
+    for entity, fields in _UINT256_FIELDS.items():
+        rows = [
+            (
+                i, i, "0xb", entity, "upsert",
+                json.dumps({f: c[0] for f in fields}),
+            )
+            for i, c in enumerate(HEX_TO_DEC38_CASES)
+        ]
+        wal = spark.createDataFrame(rows, ddl)
+        for sidecar in (False, True):
+            out = (
+                EntityDecoder(entity, uint256_sidecar=sidecar)(wal)
+                .join(raw, F.col("_ingest_seq") == F.col("i"))
+                .orderBy("i")
+            )
+            has_raw = "value_raw" in out.columns
+            assert has_raw == (sidecar and entity == "transaction")
+            got = out.select(
+                "raw", *fields, hex_to_dec38(F.col("raw")).alias("__col"),
+                *(["value_raw"] if has_raw else []),
+            ).collect()
+            assert len(got) == len(want), (entity, sidecar)
+            for r, w in zip(got, want):
+                assert r["__col"] == w, (entity, r["raw"])
+                for f in fields:
+                    assert r[f] == r["__col"], (entity, sidecar, f, r["raw"])
+                if has_raw:
+                    lost = r["value"] is None and r["raw"] is not None
+                    assert r["value_raw"] == (r["raw"] if lost else None)
 
 
 def test_hex_to_double(spark):

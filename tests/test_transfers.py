@@ -81,6 +81,9 @@ def test_all_standards_and_skip_rules(spark):
              "0x" + "0" * 49 + "f" * 15 + _word_int(0xA0)
              + _word_int(2) + _word_int(1) + _word_int(2)
              + _word_int(2) + _word_int(10) + _word_int(20)),
+        # 13: ERC-721 whose value word is not hex → value 0 (:99-105)
+        _log(13, [TRANSFER_EVENT_TOPIC, _word_addr(A1), _word_addr(A2), _word_int(779)],
+             "0x" + "z" * 64),
     ]
     df = spark.createDataFrame(rows, LOG_SCHEMA)
     out = sorted(
@@ -97,6 +100,7 @@ def test_all_standards_and_skip_rules(spark):
         [4, "ERC-1155", "0x" + A1, "0x" + A2, Decimal(4), Decimal(9), "0x" + OP, token],
         [5, "ERC-1155", "0x" + A1, "0x" + A2, Decimal(10), Decimal(1), "0x" + OP, token],
         [5, "ERC-1155", "0x" + A1, "0x" + A2, Decimal(20), Decimal(2), "0x" + OP, token],
+        [13, "ERC-721", "0x" + A1, "0x" + A2, Decimal(0), Decimal(779), None, token],
     ]
 
 
