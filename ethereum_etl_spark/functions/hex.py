@@ -31,14 +31,25 @@ def _strip0x(c: Column) -> Column:
 
 
 def hex_to_long(c: Column) -> Column:
-    """0x-hex → long. JVM-side (``conv``), safe for < 2^63 only.
+    """0x-hex → long, JVM-side (``conv``). Use for gas/indexes/timestamps/
+    block numbers.
 
-    Use for gas/indexes/timestamps/block numbers. Empty/'0x'/NULL → NULL.
+    Empty/'0x'/NULL → NULL. A value of 2^63 or more → NULL: ``conv`` and
+    the long cast raise on it under ANSI mode, which would fail the whole
+    decode job. The bound is checked on the significant digits, so a
+    zero-padded ABI word decodes like its short form.
+
+    Input contract: an optional lowercase '0x' followed by hex digits
+    (either case). Anything else is NULL: '0xzz', '0x1z', '0X10' and '-1'
+    all yield NULL (``conv`` alone would read the leading digits and give
+    0, 1 and 0, and wrap '-1' past the long range).
     """
     h = _strip0x(c)
-    return F.when(
-        c.isNull() | (F.length(h) == 0), F.lit(None).cast(LongType())
-    ).otherwise(F.conv(h, 16, 10).cast(LongType()))
+    d = _sig(h)
+    fits = (F.length(d) < 16) | (
+        (F.length(d) == 16) & F.substring(d, 1, 1).isin(*"1234567")
+    )
+    return F.when(_is_hex(h) & fits, F.conv(h, 16, 10).cast(LongType()))
 
 
 _HEX_DIGITS = "0123456789abcdefABCDEF"

@@ -160,6 +160,14 @@ def latest_token_balances(balances: DataFrame) -> DataFrame:
     ).drop("__tid")
 
 
+def latest_native_balances(balances: DataFrame) -> DataFrame:
+    """Latest native balance per address — max_by block."""
+    return balances.groupBy("address").agg(
+        F.max_by("value", F.col("block_number")).alias("value"),
+        F.max("block_number").alias("block_number"),
+    ).select("block_number", "address", "value")
+
+
 def native_balances_from_transactions(
     transactions: DataFrame,
     internal_transfers: DataFrame | None = None,

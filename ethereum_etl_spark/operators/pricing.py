@@ -63,6 +63,24 @@ def stable_price_marks(trades: DataFrame, stablecoins: list[str]) -> DataFrame:
     return m0.unionByName(m1)
 
 
+def latest_price_marks(marks: DataFrame) -> DataFrame:
+    """Latest mark per token — max_by (block_number, log_index). Output:
+    (token_address, block_number, log_index, price_stable), the shape of
+    the price_marks_latest head."""
+    return (
+        marks.groupBy("token_address")
+        .agg(
+            F.max_by(
+                F.struct("block_number", "log_index", "price_stable"),
+                F.struct("block_number", "log_index"),
+            ).alias("__m")
+        )
+        .select(
+            "token_address", "__m.block_number", "__m.log_index", "__m.price_stable",
+        )
+    )
+
+
 def enrich_trades_usd(
     trades: DataFrame,
     stablecoins: list[str],

@@ -1970,7 +1970,8 @@ def q47(spark, sf):
     """The STREAMED dex_trades shape (VERDICT r3 item 2): one composition of
     assembly → USD pricing (as-of marks) → swap-owner detection — exactly
     what ChainStreamer persists when configured with stablecoins
-    (streamer.py _trades; reference jobs/enrich_dex_trades_job.py:38-108).
+    (streaming/batch.py DexBatch.enriched_trades; reference
+    jobs/enrich_dex_trades_job.py:38-108).
     Fabrication: q39's stable-paired v2 swaps for the pricing half, q43's
     three analytically-known transfer-graph shapes for the owner half."""
     from ethereum_etl_spark.operators.dex import (
@@ -3157,9 +3158,9 @@ def q57(spark, sf):
 def q58(spark, sf):
     """A1 at 5-minute resolution (VERDICT r3 item 9): the reference keeps
     FOUR candle MVs — 1m/5m/1h/1d (schema.sql:147-169 is the 5m one) — and
-    the streamer's default candle_buckets now carries all four; this pins
-    the 5m bucket arithmetic the candles_5m table rides on (q09 pins 1h,
-    q52 pins 1d)."""
+    the streamer maintains all four (streaming.streamer.CANDLE_BUCKETS);
+    this pins the 5m bucket arithmetic the candles_5m table rides on (q09
+    pins 1h, q52 pins 1d)."""
     e = ld(spark, sf, "events").withColumn("v", _dec("value", 18, 6))
     out = ohlcv(
         e, key_col="event_type", ts_col="ts", value_col="v",

@@ -13,9 +13,28 @@ driver:
 
 Exactly-once: the MERGE carries batch_id "{lo}-{hi}"; a crash after commit
 but before the watermark write replays the batch, which the LakeTable
-recognizes and skips. A decoded parent that two derivations read is cached
-per batch (the memoized thunk DAG of eth_streamer_adapter.py:246-258 →
-df.cache()).
+recognizes and skips.
+
+One batch is the demand-driven DAG of eth_streamer_adapter.py:184-260.
+``_derive`` dispatches to one builder per family, each returning merge
+specs (table → frame or deferred ``df_fn``):
+
+- ``_base_specs``: blocks, enriched transactions, receipts, logs, token
+  transfers;
+- ``_trace_specs``: geth traces, and one tree flatten shared by traces,
+  internal transfers and contracts;
+- ``_balance_specs``: token/native balance history and their latest heads;
+- ``DexBatch.specs`` (streaming/batch.py): pools, price marks, trades and
+  liquidity events;
+- ``_candle_specs``: OHLCV per resolution, recomputed from the committed
+  transfers.
+
+A decoded parent that two derivations read is cached per batch
+(``_decode_batch``). Frames built lazily inside the merge threads — the DEX
+subgraph and the candle bucket discovery — go through one thread-safe,
+timed per-batch memo (``BatchMemo``), whose build seconds reach lineage as
+``dex_step_secs``. The merges run on one thread pool in the topological
+order of ``DEPS``.
 
 The same loop drives the north_rule repo-file CDC (entity='repo_file'),
 proving the engine is entity-agnostic: an entity is (schema, natural key,
@@ -24,10 +43,13 @@ prune column) — nothing else.
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 import shutil
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +67,9 @@ from ethereum_etl_spark.schemas import (
 )
 from ethereum_etl_spark.sources.decode import EntityDecoder, drop_null_keys
 from ethereum_etl_spark.sources.wal import WalTailer
+from ethereum_etl_spark.streaming.batch import BatchMemo, DexBatch, release_checkpoints
 
+_log = logging.getLogger(__name__)
 
 DEFAULT_ENTITIES = (
     "block", "transaction", "receipt", "log", "token_transfer",
@@ -94,6 +118,9 @@ CANDLE_SCHEMA_DDL = (
 )
 
 # resolution tag → (Spark window duration, seconds) — schema.sql's four MVs
+# (schema.sql:38-60,147-169,228-250,309-331), each its own candles_{b}
+# table. Every width is a multiple of the finest, so one bucket discovery
+# serves all four (_candle_specs).
 CANDLE_BUCKETS = {
     "1m": ("1 minute", 60),
     "5m": ("5 minutes", 300),
@@ -101,10 +128,60 @@ CANDLE_BUCKETS = {
     "1d": ("1 day", 86_400),
 }
 
+# merge order: table → the tables whose commit it waits for (tables absent
+# from a batch are skipped). Per-entity MERGEs are otherwise independent
+# (separate tables) and run concurrently; the Spark scheduler interleaves
+# their stages (the reference's thread-pool job parallelism,
+# batch_work_executor.py, done the Spark way). Derived full_touch tables
+# don't wait for ALL of phase 1 — only for their specific upstream commit
+# (candles need the committed transfers table; latest-balance projections
+# need the cached balance plan materialized by their history merge, which
+# also guards the carry-file GC race).
+DEPS: dict[str, list[str]] = {
+    **{f"candles_{b}": ["token_transfers"] for b in CANDLE_BUCKETS},
+    # head tables (latest-state projections) merge AFTER every consumer of
+    # their PRE-batch state: the balance heads feed the v3 reserve as-of
+    # and the mark head feeds trade pricing — both inside the shared
+    # DexBatch raw/priced trades build — so those heads wait for
+    # price_marks/dex_trades. On crash replay the recompute then reads the
+    # same pre-batch head the first attempt saw, and the already-committed
+    # downstream merges no-op on batch_id.
+    "token_balances_latest": [
+        "token_balances", "price_marks", "dex_trades", "liquidity_events",
+    ],
+    "native_balances_latest": ["native_balances"],
+    "price_marks": ["dex_pools", "tokens"],
+    "dex_trades": ["dex_pools", "tokens"],
+    "price_marks_latest": ["price_marks", "dex_trades", "liquidity_events"],
+    "liquidity_events": ["dex_pools", "tokens"],
+}
+
+
+def _merge_order(names) -> list[str]:
+    """``names`` in topological DEPS order: every upstream present in
+    ``names`` comes before its dependents (token_balances_latest's dep on
+    dex_trades points at a table derived later, so derivation order alone
+    would not do)."""
+    order: list[str] = []
+    seen: set[str] = set()
+
+    def visit(n):
+        if n in seen:
+            return
+        seen.add(n)
+        for dep in DEPS.get(n, []):
+            if dep in names:
+                visit(dep)
+        order.append(n)
+
+    for n in names:
+        visit(n)
+    return order
+
 
 # raw WAL entity → the configured entities whose derivation decodes it (the
-# ``get(...)`` calls of _derive): ChainStreamer builds one decoder per raw
-# entity that any configured entity needs
+# ``get(...)`` calls of the builders): ChainStreamer builds one decoder per
+# raw entity that any configured entity needs
 _DECODED_FOR = {
     "block": {"block", "log", "token_transfer"},
     "transaction": {"transaction", "native_balance"},
@@ -115,33 +192,17 @@ _DECODED_FOR = {
 }
 
 
-def _release_checkpoints(*frames) -> None:
-    """Unpersist the RDDs behind eager ``localCheckpoint`` frames, found in
-    any nesting of tuples, lists and dicts. A checkpointed frame's plan is a
-    LogicalRDD leaf over its RDD, which ``df.unpersist()`` does not reach
-    (that only drops CacheManager entries); other frames are left alone."""
-    for f in frames:
-        if isinstance(f, (tuple, list)):
-            _release_checkpoints(*f)
-        elif isinstance(f, dict):
-            _release_checkpoints(*f.values())
-        elif isinstance(f, DataFrame):
-            plan = f._jdf.logicalPlan()
-            if plan.nodeName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-
-
 def _batch_stats_aggs() -> list:
     """The batch-stats aggregates, grouped by entity_type: block span, row
     count, reorg row count, the distinct log topic0 set and the block rows'
     (block_number, seq, timestamp).
 
     The topic0 set rides the same scan via a JSON-prefix probe on the raw
-    payload (no full log decode): it gates the entire dex subgraph in
-    _derive, and extracting it here removes the last executor job from the
-    plan phase — the first full log decode then happens inside the merge
-    threads, overlapped with the independent entity merges. The block rows
-    give etl_delay its block timestamps (_block_timestamps) without a
+    payload (no full log decode): it gates the entire dex subgraph
+    (DexBatch), and extracting it here removes the last executor job from
+    the plan phase — the first full log decode then happens inside the
+    merge threads, overlapped with the independent entity merges. The block
+    rows give etl_delay its block timestamps (_block_timestamps) without a
     lookup job of its own."""
     block_row = (F.col("entity_type") == "block") & F.col("op").isin("upsert", "reorg")
     return [
@@ -169,6 +230,11 @@ def _batch_stats_aggs() -> list:
     ]
 
 
+def _present_t0s(srows) -> set[str]:
+    """The batch's distinct log topic0 set, from the stats pass."""
+    return {t for r in srows for t in r["t0s"] if t}
+
+
 def _block_timestamps(srows) -> dict[int, int | None]:
     """Block number → timestamp of its latest-seq block row in the batch:
     the reorg winner, the same row the block decode keeps."""
@@ -179,6 +245,29 @@ def _block_timestamps(srows) -> dict[int, int | None]:
             if bn not in latest or b["seq"] > latest[bn][0]:
                 latest[bn] = (b["seq"], b["ts"])
     return {bn: ts for bn, (_seq, ts) in latest.items()}
+
+
+def _etl_delay(srows) -> dict[str, dict]:
+    """etl_delay (A5, reference etl_delay MVs schema.sql:769-799): one
+    metrics row per entity per batch — indexed_at − block timestamp of the
+    entity's highest merged block, the indexation-delay stream a monitoring
+    UI reads. The timestamps come from the stats pass; a batch without
+    block rows has none."""
+    hi_by_entity = {r["entity_type"]: int(r["hi"]) for r in srows}
+    if "block" not in hi_by_entity:
+        return {}
+    ts_by_block = _block_timestamps(srows)
+    indexed_at = time.time()
+    out: dict[str, dict] = {}
+    for e, hi in hi_by_entity.items():
+        ts = ts_by_block.get(hi)
+        out[e] = {
+            "block_number": hi,
+            "timestamp": ts,
+            "indexed_at": round(indexed_at, 3),
+            "delay_s": round(indexed_at - ts, 3) if ts is not None else None,
+        }
+    return out
 
 
 def _cluster_batch(batch: DataFrame) -> DataFrame:
@@ -235,11 +324,9 @@ def _stage_batch(spark, batch: DataFrame, path: str) -> DataFrame | None:
 class StreamerConfig:
     warehouse: str
     batch_size: int = 100  # WAL seq units per cycle
-    lag: int = 0
     entity_types: tuple[str, ...] = DEFAULT_ENTITIES
     partition_size: int = 100_000  # block numbers per lake partition
     strict_counts: bool = False
-    parallel_merges: bool = True
     collect_errors: bool = False  # dead-letter malformed payloads → errors table
     # §1.4 query-pattern projections (logs_address / transactions_address
     # MVs, schema.sql:1099-1533): same rows re-keyed for point lookups by
@@ -260,19 +347,12 @@ class StreamerConfig:
     # additive schema evolution: entity → extra StructFields appearing in
     # late payloads (SURVEY §1.3; LakeTable widens the table on first sight)
     extra_entity_fields: dict = field(default_factory=dict)
-    extra_merge_opts: dict = field(default_factory=dict)
     # J7 in the loop (enrich_dex_trades_job.py:38-108): when set, dex_trades
     # are persisted ENRICHED — prices_stable/amount_stable from an
     # accumulating price_marks table (as-of, replay-deterministic) and
     # owner/owner_type from the per-tx transfer-flow graph. Empty = raw
     # assembly shape (the r2 behavior).
     stablecoins: tuple[str, ...] = ()
-    # multi-resolution candles (reference maintains 1m/5m/1h/1d MVs,
-    # schema.sql:38-60,147-169,228-250,309-331). Each bucket is its own
-    # candles_{b} table maintained by the same deferred replay-safe
-    # recompute; default now matches the reference's FOUR resolutions
-    # (schema.sql:38-60,147-169,228-250,309-331 — VERDICT r3 item 9).
-    candle_buckets: tuple[str, ...] = ("1m", "5m", "1h", "1d")
     # batches spanning at least this many blocks are SPILLED to
     # entity-partitioned parquet instead of cached in-heap (see
     # _stage_batch). Micro-batch tail mode stays on the cache path;
@@ -284,17 +364,6 @@ class StreamerConfig:
     # so fork pools are labeled at DISCOVERY time and trade attribution
     # inherits the namespace from the pool dimension.
     factory_amm: dict = field(default_factory=dict)
-
-
-# which raw entities each derived/enriched entity needs —
-# EXPORT_DEPENDENCIES analog (eth_streamer_adapter.py:122-147)
-DEPENDENCIES: dict[str, set[str]] = {
-    "block": set(),
-    "transaction": {"receipt"},  # enrich j2
-    "receipt": set(),
-    "log": {"block"},
-    "token_transfer": {"log", "block"},
-}
 
 
 def _enriched_tx_schema():
@@ -313,6 +382,43 @@ def _enriched_tx_schema():
     }
     extra = [StructField(ren[f.name], f.dataType, True) for f in rec.fields if f.name in ren]
     return StructType(list(base.fields) + extra)
+
+
+def _spec(df, **opts) -> dict:
+    """A merge spec: the frame (None when ``df_fn`` builds it in the merge
+    thread) plus merge_upsert options."""
+    return {"df": df, **opts}
+
+
+# the spec options of a latest-state head: last-write-wins by block over a
+# single partition, rewritten whole
+_HEAD = {"version_col": "block_number", "full_touch": True}
+
+
+@dataclass
+class _Frames:
+    """The frames one family's builder hands the next, for one batch."""
+
+    get: object  # the decode memo (_decode_batch)
+    aux_cache: list  # caches the builders made, unpersisted after the batch
+    reorg_free: bool
+    token_transfers: DataFrame | None = None  # enriched (carries block_timestamp)
+    enriched_tx: DataFrame | None = None
+    trace_frames: DataFrame | None = None  # flattened, without internal cols
+    token_balances: DataFrame | None = None  # this batch's balance rows
+
+
+@dataclass
+class _Batch:
+    """One batch as its merges see it: id, stats-pass span and counts, and
+    the reorged blocks whose keys the merges delete."""
+
+    batch_id: str
+    raw_counts: dict[str, int]  # raw entity → rows in the batch
+    lo_bn: int
+    hi_bn: int
+    has_reorg: bool
+    reorg_blocks: list[int]
 
 
 class ChainStreamer:
@@ -379,8 +485,6 @@ class ChainStreamer:
             df.unpersist()
 
     def _prefetch_next(self, tailer: WalTailer, after_target: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         if self._prefetch_pool is None:
             self._prefetch_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="wal-prefetch"
@@ -401,57 +505,31 @@ class ChainStreamer:
             # → pricing → owner), and building it in-loop serialized ~6 s
             # per batch behind the merge phase (r6 event-log profile)
             try:
-                pre["parsed"] = self._prebuild_parsed(df, srows)
+                pre["memo"] = self._prebuild_parsed(df, srows)
             except Exception:  # noqa: BLE001 — fall back to the in-loop build
-                pre["parsed"] = None
+                pre["memo"] = None
             return pre
 
         self._prefetch = self._prefetch_pool.submit(task)
 
-    def _prebuild_parsed(self, batch: DataFrame, srows) -> dict | None:
-        """The exact parsed (and, when trades are maintained, marked)
-        frames _derive would build for this batch, eagerly checkpointed —
-        or None when the batch needs no parse (no dex entities wanted / no
-        dex topics present) or when it carries reorg rows (the in-loop
-        decode then runs over the winner-filtered batch, which this
-        pre-build cannot reproduce)."""
+    def _prebuild_parsed(self, batch: DataFrame, srows) -> BatchMemo | None:
+        """A batch memo holding the parsed (and, when trades are
+        maintained, marked) frames the cycle's DexBatch would build for
+        this batch, eagerly checkpointed — or None when the batch needs no
+        parse (no dex entities wanted / no dex topics present) or when it
+        carries reorg rows (the in-loop decode then runs over the
+        winner-filtered batch, which this pre-build cannot reproduce)."""
         want = set(self.cfg.entity_types)
-        if "dex_pool" not in want and "dex_trade" not in want:
+        if not want & {"dex_pool", "dex_trade"} or any(int(r["nr"]) > 0 for r in srows):
             return None
-        if any(int(r["nr"]) > 0 for r in srows):
+        get, _cached = self._decode_batch(batch)  # one request: caches nothing
+        dex = DexBatch(self, BatchMemo(), _present_t0s(srows), get)
+        if not (dex.factory_hit or dex.families):
             return None
-        from ethereum_etl_spark.operators.dex import FACTORY_ABIS
-        from ethereum_etl_spark.operators.dex_combined import FAMILY_ABIS
-        from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
-
-        present_t0s = {
-            t for r in srows for t in (r["t0s"] if "t0s" in r.asDict() else []) if t
-        }
-        factory_hit = bool({a.topic0 for a in FACTORY_ABIS} & present_t0s)
-        present_families = [
-            f for f, abis in FAMILY_ABIS.items()
-            if {a.topic0 for a in abis} & present_t0s
-        ]
-        if not factory_hit and not present_families:
-            return None
-        logs = drop_null_keys(self._decoders["log"](batch), "log")
-        all_abis = list(FACTORY_ABIS) + [
-            a for f in present_families for a in FAMILY_ABIS[f]
-        ]
-        inv = build_inventory(self.spark, all_abis)
-        parsed = parse_logs(logs, inv, all_abis).localCheckpoint(eager=True)
-        marked = None
-        if present_families and "dex_trade" in want:
-            # the pools-independent half of the combined extract (family
-            # dispatch + Sync/sqrtPrice window) — see prepare_marked; built
-            # here so its window exchange and dispatch codegen run
-            # overlapped with the previous batch's merges too
-            from ethereum_etl_spark.operators.dex_combined import prepare_marked
-
-            marked = prepare_marked(parsed, present_families).localCheckpoint(
-                eager=True
-            )
-        return {"parsed": parsed, "marked": marked}
+        dex.parsed()
+        if dex.families and "dex_trade" in want:
+            dex.marked()
+        return dex.memo
 
     def _take_prefetch(self, watermark: int):
         """Consume a matching prefetch; release a stale one."""
@@ -470,7 +548,8 @@ class ChainStreamer:
         """Free everything an unused prefetch pins: the batch (cache or
         spill) and the eager parsed/marked checkpoints."""
         self._discard_batch(pre["df"])
-        _release_checkpoints(pre.get("parsed"))
+        if pre["memo"] is not None:
+            pre["memo"].release()
 
     def _batch_stats(self, batch: DataFrame):
         """One pass over the raw batch (see _batch_stats_aggs)."""
@@ -588,8 +667,7 @@ class ChainStreamer:
                 tbl("transactions_by_address", _enriched_tx_schema(),
                     ["from_address", "block_number", "hash"])
         if "candle" in want and "token_transfer" in want:
-            for b in self.cfg.candle_buckets:
-                secs = CANDLE_BUCKETS[b][1]
+            for b, (_duration, secs) in CANDLE_BUCKETS.items():
                 tbl(
                     f"candles_{b}",
                     StructType.fromDDL(CANDLE_SCHEMA_DDL),
@@ -636,30 +714,88 @@ class ChainStreamer:
 
         return get, cached
 
+    # ---------- per-family builders ----------
+
     def _derive(
         self,
         get,
-        dex_cell: dict,
-        aux_cache: list | None = None,
-        present_t0s: set | None = None,
-        pre_parsed=None,
+        memo: BatchMemo,
+        aux_cache: list,
+        present_t0s: set[str],
         reorg_free: bool = False,
     ) -> dict[str, dict]:
-        """Entity name → {df, merge opts} (decode + enrich + stamp).
+        """Entity table → merge spec (decode + enrich + stamp), one builder
+        per family in derivation order: later families read the frames
+        earlier ones left in ``_Frames``. ``memo``: the per-batch memo the
+        deferred frames are built through; the caller releases its
+        checkpoints once the batch is done. ``reorg_free``: the batch has no
+        reorg rows and no forced deletes, so a decoded entity holds one row
+        per key (the invariant behind _UNIQUE_BATCH_KEY_ENTITIES) and the tx
+        enrich skips its dedup."""
+        want = set(self.cfg.entity_types)
+        fr = _Frames(get, aux_cache, reorg_free)
+        out = self._base_specs(fr, want)
+        out.update(self._trace_specs(fr, want))
+        if "token" in want:
+            from ethereum_etl_spark.operators.tokens import normalize_token_metadata
 
-        The demand-driven DAG of eth_streamer_adapter.py:184-260: parents
-        are computed once (cached), children reuse them. ``dex_cell``: the
-        per-batch memo shared by dex discovery and trades, filled as merges
-        demand its frames; the caller releases its checkpoints once the
-        batch is done. ``reorg_free``: the batch has no reorg rows and no
-        forced deletes, so a decoded entity holds one row per key (the
-        invariant behind _UNIQUE_BATCH_KEY_ENTITIES) and the tx enrich
-        skips its dedup.
-        """
-        from ethereum_etl_spark.operators.balances import (
-            native_balances_from_transactions,
-            token_balances_from_transfers,
-        )
+            out["tokens"] = _spec(stamp(normalize_token_metadata(get("token")), "token"))
+        if self.cfg.projections:
+            if "logs" in out:
+                out["logs_by_address"] = _spec(out["logs"]["df"])
+            if "transactions" in out:
+                out["transactions_by_address"] = _spec(out["transactions"]["df"])
+        out.update(self._balance_specs(fr, want))
+        if want & {"dex_pool", "dex_trade"}:
+            dex = DexBatch(
+                self, memo, present_t0s, get,
+                trace_frames=fr.trace_frames,
+                transfers=fr.token_transfers,
+                token_balances=fr.token_balances,
+            )
+            out.update(dex.specs())
+        if "candle" in want and fr.token_transfers is not None:
+            out.update(self._candle_specs(fr.token_transfers, memo))
+        return out
+
+    def _base_specs(self, fr: _Frames, want: set[str]) -> dict[str, dict]:
+        """Blocks, transactions (receipt-enriched), receipts, logs and token
+        transfers (block-enriched)."""
+        get = fr.get
+        out: dict[str, dict] = {}
+        if "block" in want:
+            out["blocks"] = _spec(stamp(get("block"), "block", ts_col="timestamp"))
+        if "transaction" in want:
+            fr.enriched_tx = enrich_transactions(
+                get("transaction"), get("receipt"), self.cfg.strict_counts,
+                dedup=not fr.reorg_free,
+            )
+            out["transactions"] = _spec(
+                stamp(fr.enriched_tx, "transaction", ts_col="block_timestamp")
+            )
+        if "receipt" in want:
+            out["receipts"] = _spec(stamp(get("receipt"), "receipt"))
+        if "log" in want:
+            logs = enrich_with_blocks(get("log"), get("block"), self.cfg.strict_counts)
+            out["logs"] = _spec(stamp(logs, "log", ts_col="block_timestamp"))
+        if "token_transfer" in want:
+            tt = extract_token_transfers(get("log"))
+            tt = enrich_with_blocks(tt, get("block")).cache()
+            # the ERC decode feeds BOTH the transfers merge and the balance
+            # cumsum build — cache it or the whole extract runs twice
+            # (measured ~2x the costliest non-Python stage)
+            fr.aux_cache.append(tt)
+            fr.token_transfers = tt
+            out["token_transfers"] = _spec(
+                stamp(tt, "token_transfer", ts_col="block_timestamp")
+            )
+        return out
+
+    def _trace_specs(self, fr: _Frames, want: set[str]) -> dict[str, dict]:
+        """Geth traces, and the traces/internal transfers/contracts derived
+        from ONE tree-flatten pass (the mapInPandas walk is the costliest
+        Python stage in the cycle; it used to run a second time for internal
+        transfers)."""
         from ethereum_etl_spark.operators.contracts import extract_contracts
         from ethereum_etl_spark.operators.traces import (
             INTERNAL_COLS,
@@ -669,780 +805,210 @@ class ChainStreamer:
         )
 
         out: dict[str, dict] = {}
-
-        def add(name, df, **opts):
-            out[name] = {"df": df, **opts}
-
-        want = set(self.cfg.entity_types)
-        token_transfers = None
-        enriched_tx = None
-        batch_token_balances = None  # this batch's balance rows (v3 reserves)
-        if "block" in want:
-            add("blocks", stamp(get("block"), "block", ts_col="timestamp"))
-        if "transaction" in want:
-            enriched_tx = enrich_transactions(
-                get("transaction"), get("receipt"), self.cfg.strict_counts,
-                dedup=not reorg_free,
-            )
-            add("transactions", stamp(enriched_tx, "transaction", ts_col="block_timestamp"))
-        if "receipt" in want:
-            add("receipts", stamp(get("receipt"), "receipt"))
-        if "log" in want:
-            logs = enrich_with_blocks(get("log"), get("block"), self.cfg.strict_counts)
-            add("logs", stamp(logs, "log", ts_col="block_timestamp"))
-        if "token_transfer" in want:
-            tt = extract_token_transfers(get("log"))
-            tt = enrich_with_blocks(tt, get("block")).cache()
-            if aux_cache is not None:
-                # the ERC decode feeds BOTH the transfers merge and the
-                # balance cumsum build — cache it or the whole extract runs
-                # twice (measured ~2x the costliest non-Python stage)
-                aux_cache.append(tt)
-            token_transfers = tt  # enriched (carries block_timestamp)
-            add("token_transfers", stamp(tt, "token_transfer", ts_col="block_timestamp"))
-        flat_frames = None
         if "geth_trace" in want:
-            add("geth_traces", stamp(get("geth_trace"), "geth_trace"))
-        if "trace" in want or "contract" in want or "internal_transfer" in want:
-            # ONE tree-flatten pass shared by traces, contracts AND internal
-            # transfers (the mapInPandas walk is the costliest Python stage
-            # in the cycle; it used to run a second time for internal
-            # transfers)
-            flat_frames = flatten_geth_traces(
-                get("geth_trace"), include_internal="internal_transfer" in want
-            ).cache()
-            if aux_cache is not None:
-                aux_cache.append(flat_frames)
-        trace_frames = (
-            flat_frames.drop(*INTERNAL_COLS) if flat_frames is not None else None
-        )
+            out["geth_traces"] = _spec(stamp(fr.get("geth_trace"), "geth_trace"))
+        if not want & {"trace", "contract", "internal_transfer"}:
+            return out
+        flat = flatten_geth_traces(
+            fr.get("geth_trace"), include_internal="internal_transfer" in want
+        ).cache()
+        fr.aux_cache.append(flat)
+        fr.trace_frames = flat.drop(*INTERNAL_COLS)
         if "trace" in want:
-            add("traces", stamp(assign_trace_index(trace_frames), "trace"))
+            out["traces"] = _spec(stamp(assign_trace_index(fr.trace_frames), "trace"))
         if "internal_transfer" in want:
-            itr = internal_transfers_from_frames(flat_frames)
-            add("internal_transfers", stamp(itr, "internal_transfer"))
+            itr = internal_transfers_from_frames(flat)
+            out["internal_transfers"] = _spec(stamp(itr, "internal_transfer"))
         if "contract" in want:
-            add("contracts", stamp(extract_contracts(frames=trace_frames), "contract"))
-        if "token" in want:
-            from ethereum_etl_spark.operators.tokens import normalize_token_metadata
+            contracts = extract_contracts(frames=fr.trace_frames)
+            out["contracts"] = _spec(stamp(contracts, "contract"))
+        return out
 
-            add("tokens", stamp(normalize_token_metadata(get("token")), "token"))
-        if self.cfg.projections:
-            if "logs" in out:
-                add("logs_by_address", out["logs"]["df"])
-            if "transactions" in out:
-                add("transactions_by_address", out["transactions"]["df"])
-        if "token_balance" in want and token_transfers is not None:
+    def _balance_specs(self, fr: _Frames, want: set[str]) -> dict[str, dict]:
+        """Token and native balance history, carried in from each family's
+        latest-state head, plus the head projections. Each balance frame is
+        cached: its history AND latest merges both read it."""
+        from ethereum_etl_spark.operators.balances import (
+            latest_native_balances,
+            latest_token_balances,
+            native_balances_from_transactions,
+            token_balances_from_transfers,
+        )
+
+        out: dict[str, dict] = {}
+        if "token_balance" in want and fr.token_transfers is not None:
             carry = self.tables["token_balances_latest"].read()
-            tb = token_balances_from_transfers(token_transfers, carry_in=carry).cache()
-            batch_token_balances = tb
-            if aux_cache is not None:
-                aux_cache.append(tb)  # consumed by BOTH history and latest merges
-            add("token_balances", stamp(tb, "token_balance"))
-            from ethereum_etl_spark.operators.balances import latest_token_balances
-
-            add(
-                "token_balances_latest",
-                latest_token_balances(tb),
-                version_col="block_number",
-                full_touch=True,
-                stamped=False,
-            )
+            tb = token_balances_from_transfers(fr.token_transfers, carry_in=carry).cache()
+            fr.aux_cache.append(tb)
+            fr.token_balances = tb  # the v3 reserves as-of reads them too
+            out["token_balances"] = _spec(stamp(tb, "token_balance"))
+            out["token_balances_latest"] = _spec(latest_token_balances(tb), **_HEAD)
         if "native_balance" in want:
             carry = self.tables["native_balances_latest"].read()
             # the ENRICHED tx frame (receipt gas fields joined) turns on the
             # fee debit; blocks provide the miner tip credit — same formula
             # the reorg recompute applies over the committed tables
             nb = native_balances_from_transactions(
-                enriched_tx if enriched_tx is not None else get("transaction"),
+                fr.enriched_tx if fr.enriched_tx is not None else fr.get("transaction"),
                 carry_in=carry,
-                blocks=get("block") if "block" in want else None,
+                blocks=fr.get("block") if "block" in want else None,
             ).cache()
-            if aux_cache is not None:
-                aux_cache.append(nb)
-            add("native_balances", stamp(nb, "native_balance"))
-            from pyspark.sql import functions as SF
+            fr.aux_cache.append(nb)
+            out["native_balances"] = _spec(stamp(nb, "native_balance"))
+            out["native_balances_latest"] = _spec(latest_native_balances(nb), **_HEAD)
+        return out
 
-            latest_nb = nb.groupBy("address").agg(
-                SF.max_by("value", SF.col("block_number")).alias("value"),
-                SF.max("block_number").alias("block_number"),
-            ).select("block_number", "address", "value")
-            add(
-                "native_balances_latest",
-                latest_nb,
-                version_col="block_number",
-                full_touch=True,
-                stamped=False,
-            )
-        present_families: list = []
-        if pre_parsed is not None:
-            # parse (+ marked window frame) pre-built and checkpointed by
-            # the prefetch thread, overlapped with the previous batch's
-            # merges — seed the memo so they are free on the critical path
-            dex_cell["parsed"] = pre_parsed["parsed"]
-            if pre_parsed.get("marked") is not None:
-                dex_cell["marked"] = pre_parsed["marked"]
-        dex_lock = threading.RLock()
-        # per-step build seconds → lineage dex_step_secs (the dict object is
-        # shared with the lineage writer and filled lazily as merges demand
-        # the frames — merges complete before the lineage row is built)
-        dex_secs: dict = {}
-        self._dex_secs = dex_secs
+    def _candle_specs(self, transfers: DataFrame, memo: BatchMemo) -> dict[str, dict]:
+        """Deferred: recompute OHLCV for the buckets this batch touches,
+        FROM the committed token_transfers table (after its merge, DEPS),
+        then MERGE keyed (token, bucket), once per resolution. This is the
+        deterministic replay-safe alternative to streaming-state candles
+        (SURVEY §7 'reorg vs streaming state').
 
-        def _dex_memo(key, build):
-            """Thread-safe per-batch memo. The price_marks and dex_trades
-            merges run in CONCURRENT threads (parallel_merges) and both
-            demand the parsed/dims/raw-trades/marks frames; a bare dict
-            check-then-set races, so each thread ran the eager-checkpoint
-            job independently — the duplicated combined-extract execution
-            was the dominant avoidable cost of the dex critical path.
-            RLock, not Lock: builders nest (_raw_trades → _dims → _parsed)
-            on one thread."""
-            if key not in dex_cell:
-                with dex_lock:
-                    if key not in dex_cell:
-                        __t0 = time.time()
-                        dex_cell[key] = build()
-                        dex_secs[key] = round(time.time() - __t0, 3)
-            return dex_cell[key]
-        if "dex_pool" in want or "dex_trade" in want:
-            from ethereum_etl_spark.operators.dex import (
-                DISCOVERED_POOL_DDL,
-                FACTORY_ABIS,
-                discover_pools,
-            )
-            from ethereum_etl_spark.operators.dex_combined import FAMILY_ABIS
-            from ethereum_etl_spark.operators.parsed_logs import build_inventory, parse_logs
+        ONE bucket-discovery job shared by every resolution: the finest
+        bucket set is collected once (through the batch memo) and coarser
+        sets are derived by integer flooring driver-side — exact, as every
+        width is a multiple of the finest, so floor(fine_bucket/secs)*secs
+        == floor(ts/secs)*secs. The four per-resolution distinct+collect
+        jobs this replaces were pure serial latency in the candle merge
+        threads (r6)."""
+        fine = min(secs for _duration, secs in CANDLE_BUCKETS.values())
 
-            # The batch's distinct topic0 set gates the whole dex subgraph.
-            # A batch with no factory events must not pay for the discovery
-            # plan at all (the dex_pools isEmpty merge-skip used to EXECUTE
-            # the full parse+join plan just to find out — measured
-            # 5-80 s/batch), and a family's CASE branches only enter the
-            # combined extractor when one of its event topics actually
-            # occurs in the batch — at the tail most batches touch a few
-            # families, and a non-dex chain pays nothing. Normally supplied
-            # by the stats pass (one scan, prefetched in tail mode); the
-            # collect fallback covers direct _derive callers.
-            if present_t0s is None:
-                present_t0s = {
-                    (r["t0"] or "").lower()
-                    for r in get("log")
-                    .select(F.element_at("topics", 1).alias("t0"))
+        def fine_buckets():
+            return memo.get(
+                "candle_buckets",
+                lambda: [
+                    r[0]
+                    for r in transfers.select(
+                        (F.floor(F.col("block_timestamp") / fine) * fine).alias("b")
+                    )
                     .distinct()
                     .collect()
-                    if r["t0"]
-                }
-            factory_hit = bool({a.topic0 for a in FACTORY_ABIS} & present_t0s)
-            present_families = [
-                f for f, abis in FAMILY_ABIS.items()
-                if {a.topic0 for a in abis} & present_t0s
-            ]
-
-            def _parsed():
-                # ONE parse pass shared by pool discovery AND trade
-                # assembly: combined inventory = factory ABIs + the
-                # batch's present families (factory ABIs always in so
-                # the inventory is never empty; topic0s are disjoint).
-                # EAGER localCheckpoint, not cache: discovery + probes +
-                # the extractor + marks all reference this frame — a
-                # cache memoizes execution but Catalyst still re-analyzes
-                # the parse tree per reference; the checkpoint cuts it
-                # to a leaf once per batch.
-                def build():
-                    all_abis = list(FACTORY_ABIS) + [
-                        a for f in present_families for a in FAMILY_ABIS[f]
-                    ]
-                    inv = build_inventory(self.spark, all_abis)
-                    return parse_logs(
-                        get("log"), inv, all_abis
-                    ).localCheckpoint(eager=True)
-
-                return _dex_memo("parsed", build)
-
-            def _discovery():
-                """Discovered-pool rows, built lazily INSIDE the dex_pools
-                merge thread (df_fn) so the parse + probe jobs overlap the
-                independent entity merges instead of serializing in the
-                plan phase (the eager build was a large slice of plan wall
-                in the whole-WAL replay — scaling eff 0.40 on that phase)."""
-
-                def build():
-                    if not factory_hit:
-                        return self.spark.createDataFrame([], DISCOVERED_POOL_DDL)
-                    parsed_factory = _parsed()
-                    # curve deployment events carry coins but not the pool
-                    # address — the pool is the contract the SAME tx
-                    # CREATEd. The batch's trace creations resolve it
-                    # (VERDICT r3 item 1: without this, curve/DODO
-                    # extractors starve in a real stream); metapool
-                    # underlying coins resolve against the COMMITTED dim.
-                    creations = None
-                    if trace_frames is not None:
-                        creations = trace_frames.filter(
-                            (F.size("trace_address") == 0)
-                            & (F.col("trace_type") == "create")
-                            & F.col("to_address").isNotNull()
-                            & F.col("error").isNull()
-                        ).select(
-                            "transaction_hash", F.col("to_address").alias("address")
-                        )
-                    known = None
-                    if "dex_pools" in self.tables:
-                        known = self._dim_snapshot(
-                            "dex_pools", ["address", "token_addresses"]
-                        )
-                    return discover_pools(
-                        parsed_factory,
-                        factory_amm=self.cfg.factory_amm or None,
-                        contracts=creations,
-                        known_pools=known,
-                    )
-
-                return _dex_memo("discovery", build)
-
-        if "dex_pool" in want:
-            add(
-                "dex_pools", None,
-                df_fn=lambda: (stamp(_discovery(), "dex_pool"), {}),
-            )
-        if "dex_trade" in want:
-            # J6 trade assembly inside the CDC loop. Deferred behind the
-            # dex_pools merge (DEPS): the pools dim is then simply the
-            # COMMITTED table — it already contains pools discovered in this
-            # very batch (a pool's first swap can share a batch with its
-            # PairCreated), and reading post-commit avoids racing that
-            # merge's snapshot GC.
-            from ethereum_etl_spark.operators.dex_combined import (
-                extract_dex_trades_combined,
+                    if r[0] is not None
+                ],
             )
 
-            batch_tokens = get("token") if "token" in want else None
-            batch_transfers = token_transfers
-            stables = [s.lower() for s in self.cfg.stablecoins]
-
-            def _dims_build():
-                """(pools, tokens) dims, KEY-FILTERED to the batch's probe
-                sets before broadcast (VERDICT r2 'what's wrong #2': mainnet
-                has ~3M pools / ~1M tokens — broadcasting the full dims every
-                cycle rebuilds a few hundred MB at the tail; the batch only
-                ever probes the handful of addresses its logs touch). The
-                full-dim reads behind the filter come from the cross-cycle
-                snapshot cache (_dim_snapshot)."""
-                parsed = _parsed()
-                pool_cols = ["address", "factory_address", "token_addresses", "amm"]
-                if "dex_pools" in self.tables:
-                    # metapools carry their underlying coin array (curve
-                    # TokenExchangeUnderlying resolves legs through it)
-                    if "underlying_token_addresses" in [
-                        f.name for f in self.tables["dex_pools"].manifest().schema.fields
-                    ]:
-                        pool_cols = pool_cols + ["underlying_token_addresses"]
-                    pools_dim = self._dim_snapshot("dex_pools", pool_cols)
-                else:
-                    batch_pools = _discovery()
-                    if "underlying_token_addresses" in batch_pools.columns:
-                        pool_cols = pool_cols + ["underlying_token_addresses"]
-                    pools_dim = batch_pools.select(*pool_cols).dropDuplicates(["address"])
-                tok_cols = ["address", "decimals"]
-                if "tokens" in self.tables:
-                    tokens_dim = self._dim_snapshot("tokens", tok_cols)
-                elif batch_tokens is not None:
-                    tokens_dim = batch_tokens.select(*tok_cols).dropDuplicates(["address"])
-                else:
-                    tokens_dim = self.spark.createDataFrame([], "address string, decimals int")
-                probe = parsed.select(F.col("contract_address").alias("address")).distinct()
-                pools_f = pools_dim.join(F.broadcast(probe), on="address", how="left_semi")
-                pe = F.col("parsed_event")
-                # families whose traded pair is IN the event (no pool-dim
-                # indirection) probe the token dim by those addresses:
-                # balancer Swap, wombat Swap, carbondefi TokensTraded
-                bal_toks = parsed.filter(
-                    (
-                        F.array_contains(F.col("namespace"), "balancer_v2")
-                        | F.array_contains(F.col("namespace"), "wombat")
-                    )
-                    & (F.col("event_name") == "Swap")
-                ).select(
-                    F.explode(
-                        F.array(
-                            F.lower(F.coalesce(pe["tokenIn"], pe["fromToken"])),
-                            F.lower(F.coalesce(pe["tokenOut"], pe["toToken"])),
-                        )
-                    ).alias("address")
-                ).unionByName(
-                    parsed.filter(F.col("event_name") == "TokensTraded").select(
-                        F.explode(
-                            F.array(
-                                F.lower(pe["sourceToken"]),
-                                F.lower(pe["targetToken"]),
-                            )
-                        ).alias("address")
-                    )
-                )
-                # tokens the batch can actually join: the filtered pools'
-                # legs (+ underlying coins for metapools — ADVICE r3: a
-                # TokenExchangeUnderlying leg would otherwise be semi-join
-                # filtered out and silently fall back to 18 decimals)
-                # + balancer's in-event token addresses
-                tok_probe = pools_f.select(
-                    F.explode("token_addresses").alias("address")
-                )
-                if "underlying_token_addresses" in pools_f.columns:
-                    tok_probe = tok_probe.unionByName(
-                        pools_f.filter(
-                            F.col("underlying_token_addresses").isNotNull()
-                        ).select(
-                            F.explode("underlying_token_addresses").alias("address")
-                        )
-                    )
-                tok_probe = tok_probe.unionByName(bal_toks).distinct()
-                tokens_f = tokens_dim.join(F.broadcast(tok_probe), on="address", how="left_semi")
-                # each extractor BROADCASTS these frames — every broadcast
-                # exchange re-executes its subplan (dim scan + semi-join +
-                # probe distinct), ~40 re-runs per batch across the family
-                # union before this cut (measured as the dominant cost of
-                # the in-loop trade path). They are batch-probe-sized, so
-                # pinning them is cheap.
-                pools_f = pools_f.localCheckpoint(eager=True)
-                tokens_f = tokens_f.localCheckpoint(eager=True)
-                return (pools_f, tokens_f, pools_dim)
-
-            def _dims():
-                return _dex_memo("dims", _dims_build)
-
-            def _pool_balances():
-                """ERC-20 balance view for the batch's emitting pools — the
-                v3 reserves as-of source (VERDICT r3 item 7; the reference
-                point-calls balanceOf(pool) per trade block,
-                uniswap_v3.py:123-132). Input = this batch's balance rows +
-                the PRE-batch latest balance per key (token_balances_latest
-                — its merge waits on dex_trades/price_marks via DEPS, so
-                this read is the pre-batch head even on crash replay). For
-                any probe inside the batch the as-of result equals scanning
-                full history: every earlier row is dominated by its key's
-                latest. r4: the previous history semi-join re-scanned every
-                committed balance row each cycle — cost grew linearly with
-                chain history, turning the replay quadratic. None when
-                balances aren't maintained — reserves fall back to 0, the
-                reference's RPC-error default."""
-                def build():
-                    if "token_balances_latest" not in self.tables:
-                        return None
-                    pools_f, _, _ = _dims()
-                    pool_keys = F.broadcast(
-                        pools_f.select(F.col("address").alias("holder_address"))
-                    )
-                    cols = [
-                        "holder_address", "token_address",
-                        "block_number", "value",
-                    ]
-
-                    # ERC-20 rows only (token_id NULL): an ERC-1155
-                    # balance shares (holder, token, block) across ids
-                    # and would make the as-of pick nondeterministic
-                    def pool_rows(df):
-                        return (
-                            df.filter(F.col("token_id").isNull())
-                            .join(pool_keys, on="holder_address", how="left_semi")
-                            .select(*cols)
-                        )
-
-                    pb = pool_rows(self.tables["token_balances_latest"].read())
-                    if batch_token_balances is not None:
-                        pb = pb.unionByName(pool_rows(batch_token_balances))
-                    return pb
-
-                return _dex_memo("pb", build)
-
-            def _raw_trades():
-                def build():
-                    from ethereum_etl_spark.operators.dex import TRADE_SHAPE_DDL
-
-                    if not present_families:
-                        return self.spark.createDataFrame([], TRADE_SHAPE_DDL)
-                    pools_f, tokens_f, _ = _dims()
-                    # ONE join tree for every present family (dex_combined:
-                    # one pools broadcast + two decimals broadcasts + one
-                    # window shuffle + per-family CASE arithmetic) — replaces
-                    # the per-family extractor union, whose ~30 broadcast
-                    # exchanges and 12-branch Catalyst tree were the dominant
-                    # per-cycle fixed cost of the dex path (profiled: the
-                    # union shape added ~95 s/cycle at local[32] bench scale)
-                    trades = extract_dex_trades_combined(
-                        _parsed(),
-                        pools_f,
-                        tokens_f,
-                        pool_balances=(
-                            _pool_balances()
-                            if "uniswap_v3" in present_families
-                            else None
-                        ),
-                        families=present_families,
-                        # prefetched window/dispatch half when available
-                        # (reorg-free batches) — else the extractor fuses it
-                        marked=dex_cell.get("marked"),
-                    ).select(
-                        "block_number", "transaction_hash",
-                        F.col("log_index").cast("int").alias("log_index"),
-                        "pool_address", "event_type", "token_amounts",
-                        "token_reserves", "token_prices", "token_addresses",
-                        "factory_address", "wallet_address", "amm",
-                    )
-                    if stables:
-                        # EAGER localCheckpoint, not cache: the USD/owner
-                        # enrichment references this frame many times and a
-                        # cache only memoizes EXECUTION — Catalyst would
-                        # re-ANALYZE the tree per reference; the checkpoint
-                        # cuts the logical plan to a leaf.
-                        trades = trades.localCheckpoint(eager=True)
-                    return trades
-
-                return _dex_memo("raw", build)
-
-            if stables:
-                from ethereum_etl_spark.operators.pricing import stable_price_marks
-
-                def _marks_frame():
-                    """This batch's stable-price marks, materialized once —
-                    shared by the price_marks merge, the head projection AND
-                    the trade pricing below (the eager checkpoint cuts the
-                    raw-trades plan to a leaf for all three consumers)."""
-                    return _dex_memo(
-                        "marks",
-                        lambda: (
-                            stable_price_marks(_raw_trades(), stables)
-                            .select(
-                                "token_address", "block_number",
-                                F.col("log_index").cast("int").alias("log_index"),
-                                "price_stable",
-                            )
-                            .localCheckpoint(eager=True)
-                        ),
-                    )
-
-                add(
-                    "price_marks", None,
-                    df_fn=lambda: (_marks_frame(), {"version_col": None}),
-                )
-
-                def _marks_latest():
-                    # latest mark per token from THIS batch; version_col
-                    # keeps the stored head when a replayed/older batch
-                    # carries a lower block (same idiom as the balance heads)
-                    lat = (
-                        _marks_frame()
-                        .groupBy("token_address")
-                        .agg(
-                            F.max_by(
-                                F.struct("block_number", "log_index", "price_stable"),
-                                F.struct("block_number", "log_index"),
-                            ).alias("__m")
-                        )
-                        .select(
-                            "token_address", "__m.block_number",
-                            "__m.log_index", "__m.price_stable",
-                        )
-                    )
-                    return lat, {"version_col": "block_number", "full_touch": True}
-
-                add("price_marks_latest", None, df_fn=_marks_latest)
-
-            def _build_priced_trades():
-                # J7 in the loop (enrich_dex_trades_job.py:38-108), stage 1:
-                # the priced (pre-owner) shape — shared by the dex_trades
-                # merge AND the liquidity_events merge (which needs prices
-                # but not owner attribution, so it must not re-execute the
-                # owner joins). Pricing input = this batch's marks ∪ the
-                # pre-batch latest mark per token (price_marks_latest —
-                # merged AFTER this table by DEPS, so the read is the
-                # pre-batch head even on crash replay). For every probe in
-                # this batch the as-of equals a full-history scan: all
-                # earlier marks are dominated by their token's latest. r4:
-                # reading the accumulated price_marks table here grew
-                # linearly with chain history per cycle (quadratic replay —
-                # profiled as the dominant tail cost of the dex-inclusive
-                # bench).
-                raw = _raw_trades()
-                if not stables:
-                    return raw
-                from ethereum_etl_spark.operators.pricing import enrich_trades_usd
-
-                carry = self.tables["price_marks_latest"].read().select(
-                    "token_address", "block_number", "log_index", "price_stable"
-                )
-                priced = enrich_trades_usd(
-                    raw, stables, marks=_marks_frame().unionByName(carry)
-                )
-                # plan cut (same rationale as _raw_trades): owner detection
-                # and the liquidity fan-out each join this frame several
-                # times
-                return priced.localCheckpoint(eager=True)
-
-            def _priced_trades():
-                return _dex_memo("priced_trades", _build_priced_trades)
-
-            def _build_enriched_trades():
-                # stage 2: + owner attribution (persisted dex_trades shape)
-                priced = _priced_trades()
-                if not stables:
-                    return priced
-                from ethereum_etl_spark.operators.swap_owner import detect_swap_owners
-
-                if batch_transfers is not None:
-                    _, _, pools_dim = _dims()
-                    # owner detection must exclude EVERY known pool wallet,
-                    # not just the batch's emitting pools — semi-join the
-                    # full dim on the batch's transfer endpoints instead of
-                    # broadcasting 3M pool addresses
-                    wallets = batch_transfers.select(
-                        F.explode(
-                            F.array("from_address", "to_address")
-                        ).alias("address")
-                    ).distinct()
-                    pools_owner = pools_dim.join(wallets, on="address", how="left_semi")
-                    out = detect_swap_owners(priced, batch_transfers, pools_owner)
-                else:
-                    out = priced.withColumn(
-                        "owner", F.lower(F.col("pool_address"))
-                    ).withColumn("owner_type", F.lit("pool"))
-                return out
-
-            def _enriched_trades():
-                # shared by the dex_trades merge AND the liquidity_events
-                # merge (concurrent threads) — memoized like the other
-                # multi-consumer dex frames
-                return _dex_memo("enriched_trades", _build_enriched_trades)
-
-            def _trades():
-                return stamp(_enriched_trades(), "dex_trade"), {}
-
-            add("dex_trades", None, df_fn=_trades)
-            # liquidity topic0s present in THIS batch? (free — from the
-            # stats pass): mint/burn events are rare relative to swaps, so
-            # most cycles skip the cogroup + merge entirely
-            _LIQ_EVENTS = {
-                "Mint", "Burn", "Collect", "AddLiquidity", "RemoveLiquidity",
-                "DepositedToBins", "WithdrawnFromBins",
-                "LiquidityAdded", "LiquidityRemoved",
-            }
-            liq_hit = bool(
-                {
-                    a.topic0
-                    for abis in FAMILY_ABIS.values()
-                    for a in abis
-                    if a.name in _LIQ_EVENTS
-                }
-                & present_t0s
+        return {
+            f"candles_{b}": _spec(
+                None,
+                df_fn=functools.partial(self._candles, fine_buckets, duration, secs),
+                full_touch=True,
             )
-            if (
-                "liquidity_event" in want
-                and batch_transfers is not None
-                and liq_hit
-            ):
+            for b, (duration, secs) in CANDLE_BUCKETS.items()
+        }
 
-                def _liquidity():
-                    # enrich_dex_trades_job.py:141-263 in the loop: one row
-                    # per (lp token, resolved LP-transfer terminal wallet).
-                    # The operator semi-join-filters both dims to the batch's
-                    # pools before broadcasting (same tail-scaling discipline
-                    # as the trade-assembly dims). Transfer set =
-                    # this batch's token_transfers (the reference also counts
-                    # native pseudo-transfers toward its 500-cap when those
-                    # streams are enabled; LP chains themselves are always
-                    # ERC-20, so only the cap/first-transfer tiebreak can
-                    # differ on native-heavy transactions).
-                    from ethereum_etl_spark.operators.liquidity import (
-                        enrich_liquidity_events,
-                    )
+    def _candles(self, fine_buckets, duration: str, secs: int):
+        """One resolution's candles over the committed transfers in the
+        buckets this batch touched, or None when it touched none."""
+        from ethereum_etl_spark.operators.candles import ohlcv
 
-                    trades_f = _priced_trades()
-                    pools_dim = self._dim_snapshot(
-                        "dex_pools", ["address", "lp_token_addresses"]
-                    )
-                    toks = self._dim_snapshot(
-                        "tokens", ["address", "decimals", "total_supply"]
-                    )
-                    out = enrich_liquidity_events(
-                        trades_f, batch_transfers, pools_dim, toks
-                    )
-                    return stamp(out, "liquidity_event"), {}
+        buckets = sorted({b // secs * secs for b in fine_buckets()})
+        if not buckets:
+            return None, {}
+        lo_b, hi_b = min(buckets), max(buckets)
+        stored = self.tables["token_transfers"].read()
+        src = stored.filter(
+            F.col("block_timestamp").between(lo_b, hi_b + secs - 1)
+        ).withColumn("bucket_epoch", F.floor(F.col("block_timestamp") / secs) * secs)
+        if len(buckets) <= 256:
+            # sparse-bucket prune; a dense set (whole-WAL replay at 1m
+            # resolution = 10^4 buckets) would plan a 10^4-literal isin for
+            # nothing — the range filter already bounds the scan, and
+            # recomputing an untouched in-range bucket is an idempotent no-op
+            src = src.filter(F.col("bucket_epoch").isin(buckets))
+        src = src.withColumn("ts", F.to_timestamp("block_timestamp")).withColumn(
+            "tb", F.struct(F.col("block_number"), F.col("log_index"))
+        )
+        cand = ohlcv(
+            src, key_col="token_address", ts_col="ts",
+            value_col="value", tiebreak_col="tb", bucket=duration,
+        ).withColumn("bucket_epoch", F.unix_timestamp("bucket_start"))
+        cand = cand.select(
+            "token_address", "bucket_epoch", "bucket_start",
+            "open", "high", "low", "close",
+            F.col("volume").cast("decimal(38,0)").alias("volume"),
+            "trades",
+        )
+        return cand, {"touched_range": (lo_b, hi_b), "version_col": None}
 
-                add("liquidity_events", None, df_fn=_liquidity)
-        if "candle" in want and token_transfers is not None:
-            # deferred: recompute OHLCV for the buckets this batch touches,
-            # FROM the committed token_transfers table (phase 2 — after its
-            # merge), then MERGE keyed (token, bucket), once per configured
-            # resolution. This is the deterministic replay-safe alternative
-            # to streaming-state candles (SURVEY §7 'reorg vs streaming
-            # state').
-            batch_tt = token_transfers
-            # ONE bucket-discovery job shared by every resolution: collect
-            # the FINEST configured bucket set once, derive coarser sets by
-            # integer flooring driver-side (exact — every configured
-            # coarser width is a multiple of the finest, so
-            # floor(fine_bucket/secs)*secs == floor(ts/secs)*secs). The
-            # four per-resolution distinct+collect jobs this replaces were
-            # pure serial latency in the candle merge threads (r6).
-            candle_cell: dict = {}
-            candle_lock = threading.Lock()
-            fine_secs = min(CANDLE_BUCKETS[b][1] for b in self.cfg.candle_buckets)
-
-            def _fine_buckets():
-                with candle_lock:
-                    if "fine" not in candle_cell:
-                        from pyspark.sql import functions as SF
-
-                        candle_cell["fine"] = [
-                            r[0]
-                            for r in batch_tt.select(
-                                (
-                                    SF.floor(SF.col("block_timestamp") / fine_secs)
-                                    * fine_secs
-                                ).alias("b")
-                            )
-                            .distinct()
-                            .collect()
-                            if r[0] is not None
-                        ]
-                return candle_cell["fine"]
-
-            def _candles(duration, secs):
-                from pyspark.sql import functions as SF
-
-                from ethereum_etl_spark.operators.candles import ohlcv
-
-                if secs % fine_secs == 0:
-                    buckets = sorted({b // secs * secs for b in _fine_buckets()})
-                else:  # non-multiple custom bucket: per-resolution discovery
-                    buckets = [
-                        r[0]
-                        for r in batch_tt.select(
-                            (SF.floor(SF.col("block_timestamp") / secs) * secs).alias("b")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                if not buckets:
-                    return None, {}
-                lo_b, hi_b = min(buckets), max(buckets)
-                stored = self.tables["token_transfers"].read()
-                src = (
-                    stored.filter(
-                        SF.col("block_timestamp").between(lo_b, hi_b + secs - 1)
-                    )
-                    .withColumn(
-                        "bucket_epoch", SF.floor(SF.col("block_timestamp") / secs) * secs
-                    )
-                )
-                if len(buckets) <= 256:
-                    # sparse-bucket prune; a dense set (whole-WAL replay at
-                    # 1m resolution = 10^4 buckets) would plan a 10^4-literal
-                    # isin for nothing — the range filter already bounds the
-                    # scan, and recomputing an untouched in-range bucket is
-                    # an idempotent no-op
-                    src = src.filter(SF.col("bucket_epoch").isin(buckets))
-                src = (
-                    src
-                    .withColumn("ts", SF.to_timestamp("block_timestamp"))
-                    .withColumn(
-                        "tb", SF.struct(SF.col("block_number"), SF.col("log_index"))
-                    )
-                )
-                cand = ohlcv(
-                    src, key_col="token_address", ts_col="ts",
-                    value_col="value", tiebreak_col="tb", bucket=duration,
-                ).withColumn("bucket_epoch", SF.unix_timestamp("bucket_start"))
-                cand = cand.select(
-                    "token_address", "bucket_epoch", "bucket_start",
-                    "open", "high", "low", "close",
-                    SF.col("volume").cast("decimal(38,0)").alias("volume"),
-                    "trades",
-                )
-                return cand, {"touched_range": (lo_b, hi_b), "version_col": None}
-
-            import functools
-
-            for b in self.cfg.candle_buckets:
-                duration, secs = CANDLE_BUCKETS[b]
-                add(
-                    f"candles_{b}",
-                    None,
-                    df_fn=functools.partial(_candles, duration, secs),
-                    full_touch=True,
-                )
-        return out
+    # ---------- one sync cycle ----------
 
     def sync_cycle(
         self, tailer: WalTailer, watermark: int, allow_skip: bool = False
     ) -> int | None:
-        t0 = time.time()
-        compiles0 = self._compiles.getCount()
-        jobs0 = self._dag.nextJobId()
-        pre = self._take_prefetch(watermark)
-        pre_srows = None
-        pre_parsed = None
-        # crash-replay pinning: a persisted intent for THIS watermark means a
-        # previous attempt planned (and possibly partially committed) the
-        # batch — reuse its exact range so the batch_id matches and every
-        # already-committed per-table merge replays as a no-op, even if the
-        # WAL head advanced in between (see WatermarkStore.set_intent)
-        intent = self.watermarks.get_intent()
-        pinned = intent[1] if intent is not None and intent[0] == watermark else None
-        if pinned is not None:
-            target = pinned
-            if pre is not None and pre["hi"] == target:
-                batch, pre_srows = pre["df"], pre["srows"]
-                pre_parsed = pre.get("parsed")
+        """Plan, merge and commit one batch from ``watermark``. Returns the
+        new watermark, or None when there is nothing to read. A failing
+        cycle is logged with its batch before the exception propagates; the
+        watermark stays put and the intent pins the range for the retry."""
+        batch_id = None
+        try:
+            t0 = time.time()
+            compiles0 = self._compiles.getCount()
+            jobs0 = self._dag.nextJobId()
+            pre = self._take_prefetch(watermark)
+            # crash-replay pinning: a persisted intent for THIS watermark
+            # means a previous attempt planned (and possibly partially
+            # committed) the batch — reuse its exact range so the batch_id
+            # matches and every already-committed per-table merge replays as
+            # a no-op, even if the WAL head advanced in between (see
+            # WatermarkStore.set_intent)
+            intent = self.watermarks.get_intent()
+            pinned = intent[1] if intent is not None and intent[0] == watermark else None
+            if pinned is not None:
+                target = pinned
+            elif pre is not None and not allow_skip:
+                # prefetched while the previous cycle merged: range, cached
+                # df and stats are already in hand (a stale head only
+                # shrinks the range — correct, the next cycle catches the
+                # rest)
+                target = pre["hi"]
             else:
-                if pre is not None:
-                    self._release_prefetch(pre)
-                batch = self._prepare_batch(
-                    tailer.read_range(watermark, target), watermark, target
-                )
-        elif pre is not None and not allow_skip:
-            # prefetched while the previous cycle merged: range + cached df
-            # + stats are already in hand (a stale head only shrinks the
-            # range — correct, the next cycle catches the rest)
-            target, batch, pre_srows = pre["hi"], pre["df"], pre["srows"]
-            pre_parsed = pre.get("parsed")
-        else:
-            target = tailer.compute_target(watermark, allow_skip=allow_skip)
-            if pre is not None and target == pre["hi"]:
-                batch, pre_srows = pre["df"], pre["srows"]
-                pre_parsed = pre.get("parsed")
-            elif pre is not None:
+                target = tailer.compute_target(watermark, allow_skip=allow_skip)
+            if pre is not None and pre["hi"] != target:
                 self._release_prefetch(pre)
+                pre = None
             if target is None:
                 return None
-            if pre_srows is None:
+            batch_id = f"{watermark}-{target}"
+            if pre is None:
                 batch = self._prepare_batch(
                     tailer.read_range(watermark, target), watermark, target
                 )
-        if pinned is None:
-            self.watermarks.set_intent(watermark, target)
-        # predict + read + stat the NEXT range while this batch processes
-        self._prefetch_next(tailer, target)
-        batch_id = f"{watermark}-{target}"
-        info = self._apply_batch(
-            batch, batch_id, pre_srows=pre_srows, pre_parsed=pre_parsed
-        )
-        # watermark AFTER sink commit (streamer.py:128-132)
-        self.watermarks.set(target)
-        self.lineage.record(
-            batch_id=batch_id,
-            lo=watermark,
-            hi=target,
-            duration_s=round(time.time() - t0, 3),
-            # generated classes compiled during the cycle (the prefetch
-            # thread's included): a steady cycle should hit the class cache
-            codegen_compiles=self._compiles.getCount() - compiles0,
-            # Spark jobs submitted during the cycle, the prefetch thread's
-            # included (every thread's jobs share the one counter)
-            spark_jobs=self._dag.nextJobId() - jobs0,
-            **info,
-        )
-        return target
+                pre_srows = pre_memo = None
+            else:
+                batch, pre_srows, pre_memo = pre["df"], pre["srows"], pre["memo"]
+            if pinned is None:
+                self.watermarks.set_intent(watermark, target)
+            # predict + read + stat the NEXT range while this batch processes
+            self._prefetch_next(tailer, target)
+            info = self._apply_batch(
+                batch, batch_id, pre_srows=pre_srows, pre_memo=pre_memo
+            )
+            # watermark AFTER sink commit (streamer.py:128-132)
+            self.watermarks.set(target)
+            self.lineage.record(
+                batch_id=batch_id,
+                lo=watermark,
+                hi=target,
+                duration_s=round(time.time() - t0, 3),
+                # generated classes compiled during the cycle (the prefetch
+                # thread's included): a steady cycle should hit the class
+                # cache
+                codegen_compiles=self._compiles.getCount() - compiles0,
+                # Spark jobs submitted during the cycle, the prefetch
+                # thread's included (every thread's jobs share the one
+                # counter)
+                spark_jobs=self._dag.nextJobId() - jobs0,
+                **info,
+            )
+            return target
+        except Exception:
+            # a caller may swallow the exception; the cause stays on record
+            _log.exception(
+                "sync cycle failed at watermark %s (batch %s)",
+                watermark, batch_id or "not planned",
+            )
+            raise
 
     def _apply_batch(
         self,
@@ -1450,23 +1016,21 @@ class ChainStreamer:
         batch_id: str,
         force_delete_blocks: list[int] | None = None,
         pre_srows=None,
-        pre_parsed=None,
+        pre_memo: BatchMemo | None = None,
     ) -> dict:
         """Decode → enrich → MERGE one batch of WAL rows. Returns lineage
         info. ``force_delete_blocks``: treat these block numbers as reorged
         regardless of op (the verifier repair path). ``pre_srows``: batch
-        stats already computed by the prefetch thread; ``pre_parsed``: the
-        parsed-log checkpoint pre-built by the same thread (only for
-        reorg-free batches — see _prebuild_parsed)."""
+        stats already computed by the prefetch thread; ``pre_memo``: the
+        batch memo holding the parsed-log checkpoint pre-built by the same
+        thread (only for reorg-free batches — see _prebuild_parsed)."""
         phase_secs: dict[str, float] = {}
         __t = time.time()
-        # a staged batch (entity-partitioned parquet spill) is its own
-        # storage — no in-heap cache; `batch` is rebound below (reorg winner
-        # filter), so capture the spill path for cleanup now
-        staged_path = getattr(batch, "_ees_staged", None)
         if not getattr(batch, "_ees_clustered", False):
             batch = _cluster_batch(batch)
-        if staged_path is None and not batch.is_cached:
+        # a staged batch (entity-partitioned parquet spill) is its own
+        # storage — no in-heap cache
+        if getattr(batch, "_ees_staged", None) is None and not batch.is_cached:
             batch = batch.cache()
         # the cached frame itself: a reorg rebinds `batch` to its winner
         # filter, whose unpersist would leave this cache pinned
@@ -1481,316 +1045,227 @@ class ChainStreamer:
         # previous cycle predicted this range.
         srows = pre_srows if pre_srows is not None else self._batch_stats(batch)
         if not srows:  # empty range
-            if staged_path is None:
-                batch.unpersist()
-            else:
-                shutil.rmtree(staged_path, ignore_errors=True)
+            self._discard_batch(cached_batch)
             return {"entities": [], "reorg": False, "rows": 0}
         raw_counts = {r["entity_type"]: int(r["n"]) for r in srows}
-        lo_bn = min(int(r["lo"]) for r in srows)
-        hi_bn = max(int(r["hi"]) for r in srows)
-        n_events = sum(raw_counts.values())
         n_reorg = sum(int(r["nr"]) for r in srows)
+        b = _Batch(
+            batch_id=batch_id,
+            raw_counts=raw_counts,
+            lo_bn=min(int(r["lo"]) for r in srows),
+            hi_bn=max(int(r["hi"]) for r in srows),
+            has_reorg=n_reorg > 0 or bool(force_delete_blocks),
+            reorg_blocks=list(force_delete_blocks or []),
+        )
         phase_secs["stats"] = round(time.time() - __t, 3)
-        has_reorg = n_reorg > 0 or bool(force_delete_blocks)
 
-        reorg_blocks: list[int] = list(force_delete_blocks or [])
         pre_keys_captured = False
-        if has_reorg:
-            # winning (latest-seq) hash per superseded block
-            # (clickhouse_eth_streamer_adapter.py:815-890)
-            contested = F.col("op") == "reorg"
-            if force_delete_blocks:
-                contested = contested | F.col("block_number").isin(force_delete_blocks)
-            winners = (
-                batch.filter(contested)
-                .groupBy("block_number")
-                .agg(F.max_by("block_hash", "seq").alias("__winning_hash"))
-                .collect()
-            )
-            reorg_blocks = sorted(
-                {int(r["block_number"]) for r in winners} | set(reorg_blocks)
-            )
-            wdf = self.spark.createDataFrame(
-                [(r["block_number"], r["__winning_hash"]) for r in winners],
-                "block_number long, __winning_hash string",
-            )
-            # drop in-batch rows superseded by a same-batch reorg
-            batch = (
-                batch.join(F.broadcast(wdf), on="block_number", how="left")
-                .filter(
-                    F.col("__winning_hash").isNull()
-                    | (F.col("block_hash") == F.col("__winning_hash"))
-                )
-                .drop("__winning_hash")
-            )
+        if b.has_reorg:
+            batch, b.reorg_blocks = self._reorg_winners(batch, b.reorg_blocks)
             # BEFORE the merges delete the orphaned rows: journal the balance
             # keys that currently have history AT the reorged blocks. A key
             # touched only by an orphaned transaction (the dropped-tx case)
             # leaves no post-merge trace there, yet its carry-forward rows
             # are poisoned — the repair below must still find it (ADVICE r2).
-            if reorg_blocks:
+            if b.reorg_blocks:
                 pre_keys_captured = self._journal_pre_reorg_keys(
-                    reorg_blocks, batch_id
+                    b.reorg_blocks, batch_id
                 )
+            # the pre-parse reads the unfiltered batch; the reorg path
+            # parses the winner-filtered one instead
+            if pre_memo is not None:
+                pre_memo.release()
+                pre_memo = None
+        memo = pre_memo or BatchMemo()
 
         __t = time.time()
         get, cached = self._decode_batch(batch)
         aux_cache: list = []
         # topic0 set extracted by the (possibly prefetched) stats pass —
         # _derive then builds pure plans, launching no executor jobs
-        present_t0s = {
-            t for r in srows for t in (r["t0s"] if "t0s" in r.asDict() else []) if t
-        }
-        if has_reorg:
-            # the pre-parse reads the unfiltered batch; the reorg path
-            # parses the winner-filtered one instead
-            _release_checkpoints(pre_parsed)
-            pre_parsed = None
-        dex_cell: dict = {}
         derived = self._derive(
-            get, dex_cell, aux_cache, present_t0s=present_t0s,
-            pre_parsed=pre_parsed, reorg_free=not has_reorg,
+            get, memo, aux_cache, _present_t0s(srows), reorg_free=not b.has_reorg
         )
         phase_secs["plan"] = round(time.time() - __t, 3)
         __t = time.time()
-
-        merge_secs: dict[str, float] = {}
-
-        def _merge_one(name: str, spec: dict) -> None:
-            __t0 = time.time()
-            # one FAIR-scheduler pool per entity merge: jobs share executor
-            # slots round-robin instead of FIFO-queueing behind each other
-            self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"merge-{name}")
-            t = self.tables[name]
-            if spec.get("df_fn") is not None:
-                df, overrides = spec["df_fn"]()
-                if df is None:
-                    return
-                spec = {**spec, **overrides, "df": df}
-            df = spec["df"]
-            full_touch = spec.get("full_touch", False)
-            block_keyed = "touched_range" not in spec and not full_touch
-            dk = None
-            dkc = None
-            if has_reorg and block_keyed:
-                prune = t.manifest().prune_col
-                dk = self.spark.createDataFrame(
-                    [(b,) for b in reorg_blocks], f"{prune} long"
-                )
-                dkc = [prune]
-            # skip merges with provably nothing to do: source entity absent
-            # from the batch (free — from the stats pass), or — for the two
-            # dimension tables whose VERSION gates the cross-cycle snapshot
-            # cache — an isEmpty probe on the (cached) derived frame. The
-            # version staying put is what lets _dim_snapshot serve pools/
-            # tokens from memory at the chain tail. Replay safety: an empty
-            # batch replays to an empty batch.
-            src_ent = _SOURCE_ENTITY.get(name)
-            if dk is None and (
-                (src_ent is not None and raw_counts.get(src_ent, 0) == 0)
-                or (name in ("dex_pools", "tokens") and df.isEmpty())
-            ):
-                merge_secs[name] = round(time.time() - __t0, 3)
-                return
-            version_col = spec.get(
-                "version_col",
-                "_ingest_seq" if "_ingest_seq" in df.columns else None,
-            )
-            # full_touch tables (latest-state projections) always rewrite
-            # their single partition; deferred specs carry their own range
-            touched = spec.get(
-                "touched_range", (0, 0) if full_touch else (lo_bn, hi_bn)
-            )
-            t.merge_upsert(
-                df,
-                batch_id=batch_id,
-                version_col=version_col,
-                delete_keys=dk,
-                delete_key_cols=dkc,
-                touched_range=touched,
-                extra_touched_values=reorg_blocks if block_keyed else None,
-                # these entities carry at most one row per key within a
-                # reorg-free batch (the WAL is seq-unique and the key embeds
-                # the block) — the in-batch dedup window is provably a no-op
-                # on the append path. token_transfers and internal_transfers
-                # are NOT listed: an ERC-1155 batch log can repeat a
-                # token_id, and the reference's depth-string id can collide
-                # past 10 siblings — both need the last-write-wins collapse.
-                skip_batch_dedup=(
-                    block_keyed
-                    and not has_reorg
-                    and name in _UNIQUE_BATCH_KEY_ENTITIES
-                ),
-            )
-            for fmt, out_dir in self.cfg.fanout.get(name, []):
-                out = df
-                if fmt == "csv":
-                    for fld in out.schema.fields:
-                        if fld.dataType.typeName() in ("array", "map", "struct"):
-                            out = out.withColumn(fld.name, F.to_json(fld.name))
-                (
-                    out.write.mode("overwrite")
-                    .format(fmt)
-                    .option("header", "true")
-                    .save(f"{out_dir}/batch={batch_id}")
-                )
-            merge_secs[name] = round(time.time() - __t0, 3)
-
-        # per-entity MERGEs are independent (separate tables) → submit
-        # concurrently; the Spark scheduler interleaves their stages (the
-        # reference's thread-pool job parallelism, batch_work_executor.py,
-        # done the Spark way). Derived full_touch tables don't wait for ALL
-        # of phase 1 — only for their specific upstream commit (candles need
-        # the committed transfers table; latest-balance projections need the
-        # cached balance plan materialized by their history merge, which also
-        # guards the carry-file GC race).
-        DEPS = {
-            **{f"candles_{b}": ["token_transfers"] for b in CANDLE_BUCKETS},
-            # head tables (latest-state projections) merge AFTER every
-            # consumer of their PRE-batch state: the balance heads feed the
-            # v3 reserve as-of and the mark head feeds trade pricing — both
-            # inside the shared _raw_trades/_trades build — so those heads
-            # wait for price_marks/dex_trades. On crash replay the recompute
-            # then reads the same pre-batch head the first attempt saw, and
-            # the already-committed downstream merges no-op on batch_id.
-            # (Deps naming tables absent from this batch are skipped.)
-            "token_balances_latest": [
-                "token_balances", "price_marks", "dex_trades", "liquidity_events",
-            ],
-            "native_balances_latest": ["native_balances"],
-            "price_marks": ["dex_pools", "tokens"],
-            "dex_trades": ["dex_pools", "tokens"],
-            "price_marks_latest": ["price_marks", "dex_trades", "liquidity_events"],
-            "liquidity_events": ["dex_pools", "tokens"],
-        }
-        if self.cfg.parallel_merges and len(derived) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(derived)) as ex:
-                futures: dict[str, object] = {}
-
-                def _submit(name, spec):
-                    deps = DEPS.get(name, [])
-
-                    def task():
-                        for dep in deps:
-                            if dep in futures:
-                                futures[dep].result()  # wait for upstream commit
-                        _merge_one(name, spec)
-
-                    futures[name] = ex.submit(task)
-
-                # topological submission: a task() only waits on deps whose
-                # futures exist when it RUNS, so every dep must be submitted
-                # before its dependents (token_balances_latest's dep on
-                # dex_trades points at a table added later in _derive —
-                # plain dict-order submission would skip that wait)
-                order: list[str] = []
-                seen: set[str] = set()
-
-                def visit(n):
-                    if n in seen:
-                        return
-                    seen.add(n)
-                    for dep in DEPS.get(n, []):
-                        if dep in derived:
-                            visit(dep)
-                    order.append(n)
-
-                for n in derived:
-                    visit(n)
-                for n in order:
-                    _submit(n, derived[n])
-                for f in futures.values():
-                    f.result()  # propagate failures
-        else:
-            # same topological discipline as the concurrent path: heads
-            # merge only after every consumer of their pre-batch state
-            ordered: list[str] = []
-            seen_s: set[str] = set()
-
-            def visit_s(n):
-                if n in seen_s:
-                    return
-                seen_s.add(n)
-                for dep in DEPS.get(n, []):
-                    if dep in derived:
-                        visit_s(dep)
-                ordered.append(n)
-
-            for n in derived:
-                visit_s(n)
-            for name in ordered:
-                _merge_one(name, derived[name])
+        merge_secs = self._run_merges(derived, b)
         phase_secs["merges"] = round(time.time() - __t, 3)
         __t = time.time()
-
-        if has_reorg and reorg_blocks:
-            # balances are running sums — a reorg invalidates every row of an
-            # affected key from the reorged block forward (the carry-in had
-            # already absorbed the orphaned deltas). Recompute those keys
-            # from the now-committed transfer/transaction tables (the same
-            # deferred-recompute pattern candles use). The balance repair and
-            # the trade re-pricing touch disjoint tables (token/native
-            # balances vs price_marks_latest/dex_trades) and each is a serial
-            # chain of small jobs — run them concurrently (the repair phase
-            # is a fixed per-reorg latency cost that does not shrink with
-            # cores, so halving its chain is a direct scaling-efficiency win)
-            from concurrent.futures import ThreadPoolExecutor as _RTPE
-
-            with _RTPE(max_workers=2) as rex:
-                f_bal = rex.submit(
-                    self._reorg_fix_balances,
-                    reorg_blocks, hi_bn, batch_id, pre_keys_captured,
-                )
-                f_dex = rex.submit(
-                    self._reorg_fix_dex_prices,
-                    reorg_blocks, hi_bn, batch_id, pre_keys_captured,
-                )
-                f_bal.result()
-                f_dex.result()
+        if b.has_reorg and b.reorg_blocks:
+            self._repair_after_reorg(b, pre_keys_captured)
         phase_secs["reorg_fix"] = round(time.time() - __t, 3)
 
         if self.cfg.collect_errors:
             self._append_decode_errors(batch, batch_id)
-
-        # etl_delay (A5, reference etl_delay MVs schema.sql:769-799): one
-        # metrics row per entity per batch — indexed_at − block timestamp of
-        # the entity's highest merged block, the indexation-delay stream a
-        # monitoring UI reads. The timestamps come from the stats pass.
-        etl_delay: dict[str, dict] = {}
-        hi_by_entity = {r["entity_type"]: int(r["hi"]) for r in srows}
-        if "block" in raw_counts and hi_by_entity:
-            ts_by_block = _block_timestamps(srows)
-            indexed_at = time.time()
-            for e, hi in hi_by_entity.items():
-                ts = ts_by_block.get(hi)
-                etl_delay[e] = {
-                    "block_number": hi,
-                    "timestamp": ts,
-                    "indexed_at": round(indexed_at, 3),
-                    "delay_s": round(indexed_at - ts, 3) if ts is not None else None,
-                }
-
+        etl_delay = _etl_delay(srows)
         for cdf in cached + aux_cache:
             cdf.unpersist()
-        _release_checkpoints(dex_cell)
-        if staged_path is None:
-            cached_batch.unpersist()
-        else:
-            shutil.rmtree(staged_path, ignore_errors=True)
+        memo.release()
+        self._discard_batch(cached_batch)
         return {
             "entities": list(derived),
-            "reorg": bool(has_reorg),
-            "lo_block": lo_bn,
-            "hi_block": hi_bn,
-            "n_events": n_events,
+            "reorg": bool(b.has_reorg),
+            "lo_block": b.lo_bn,
+            "hi_block": b.hi_bn,
+            "n_events": sum(raw_counts.values()),
             "merge_secs": merge_secs,
             "phase_secs": phase_secs,
-            "dex_step_secs": getattr(self, "_dex_secs", {}),
+            "dex_step_secs": memo.secs,
             "etl_delay": etl_delay,
         }
+
+    def _reorg_winners(self, batch: DataFrame, force_delete_blocks: list[int]):
+        """The batch without in-batch rows superseded by a same-batch reorg,
+        and the sorted reorged blocks (contested ones ∪ the forced ones).
+        The winner is the latest-seq hash per superseded block
+        (clickhouse_eth_streamer_adapter.py:815-890)."""
+        contested = F.col("op") == "reorg"
+        if force_delete_blocks:
+            contested = contested | F.col("block_number").isin(force_delete_blocks)
+        winners = (
+            batch.filter(contested)
+            .groupBy("block_number")
+            .agg(F.max_by("block_hash", "seq").alias("__winning_hash"))
+            .collect()
+        )
+        reorg_blocks = sorted(
+            {int(r["block_number"]) for r in winners} | set(force_delete_blocks)
+        )
+        wdf = self.spark.createDataFrame(
+            [(r["block_number"], r["__winning_hash"]) for r in winners],
+            "block_number long, __winning_hash string",
+        )
+        kept = (
+            batch.join(F.broadcast(wdf), on="block_number", how="left")
+            .filter(
+                F.col("__winning_hash").isNull()
+                | (F.col("block_hash") == F.col("__winning_hash"))
+            )
+            .drop("__winning_hash")
+        )
+        return kept, reorg_blocks
+
+    def _run_merges(self, derived: dict[str, dict], b: _Batch) -> dict[str, float]:
+        """MERGE every derived table, concurrently on one thread pool, each
+        after the commits it waits for (DEPS). Returns seconds per table."""
+        merge_secs: dict[str, float] = {}
+        futures: dict[str, object] = {}
+
+        def task(name, upstream):
+            for f in upstream:
+                f.result()  # wait for the upstream commit
+            secs = self._merge_one(name, derived[name], b)
+            if secs is not None:
+                merge_secs[name] = secs
+
+        with ThreadPoolExecutor(max_workers=max(1, len(derived))) as ex:
+            # _merge_order submits every upstream before its dependents, so
+            # each task finds the futures it waits on
+            for name in _merge_order(derived):
+                upstream = [futures[d] for d in DEPS.get(name, []) if d in futures]
+                futures[name] = ex.submit(task, name, upstream)
+            for f in futures.values():
+                f.result()  # propagate failures
+        return merge_secs
+
+    def _merge_one(self, name: str, spec: dict, b: _Batch) -> float | None:
+        """MERGE one derived table; returns its seconds, or None when a
+        deferred spec built no frame."""
+        __t0 = time.time()
+        # one FAIR-scheduler pool per entity merge: jobs share executor
+        # slots round-robin instead of FIFO-queueing behind each other
+        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"merge-{name}")
+        t = self.tables[name]
+        if spec.get("df_fn") is not None:
+            df, overrides = spec["df_fn"]()
+            if df is None:
+                return None
+            spec = {**spec, **overrides, "df": df}
+        df = spec["df"]
+        full_touch = spec.get("full_touch", False)
+        block_keyed = "touched_range" not in spec and not full_touch
+        dk = None
+        dkc = None
+        if b.has_reorg and block_keyed:
+            prune = t.manifest().prune_col
+            dk = self.spark.createDataFrame(
+                [(blk,) for blk in b.reorg_blocks], f"{prune} long"
+            )
+            dkc = [prune]
+        # skip merges with provably nothing to do: source entity absent
+        # from the batch (free — from the stats pass), or — for the two
+        # dimension tables whose VERSION gates the cross-cycle snapshot
+        # cache — an isEmpty probe on the (cached) derived frame. The
+        # version staying put is what lets _dim_snapshot serve pools/
+        # tokens from memory at the chain tail. Replay safety: an empty
+        # batch replays to an empty batch.
+        src_ent = _SOURCE_ENTITY.get(name)
+        if dk is None and (
+            (src_ent is not None and b.raw_counts.get(src_ent, 0) == 0)
+            or (name in ("dex_pools", "tokens") and df.isEmpty())
+        ):
+            return round(time.time() - __t0, 3)
+        version_col = spec.get(
+            "version_col",
+            "_ingest_seq" if "_ingest_seq" in df.columns else None,
+        )
+        # full_touch tables (latest-state projections) always rewrite
+        # their single partition; deferred specs carry their own range
+        touched = spec.get(
+            "touched_range", (0, 0) if full_touch else (b.lo_bn, b.hi_bn)
+        )
+        t.merge_upsert(
+            df,
+            batch_id=b.batch_id,
+            version_col=version_col,
+            delete_keys=dk,
+            delete_key_cols=dkc,
+            touched_range=touched,
+            extra_touched_values=b.reorg_blocks if block_keyed else None,
+            # these entities carry at most one row per key within a
+            # reorg-free batch (the WAL is seq-unique and the key embeds the
+            # block) — the in-batch dedup window is provably a no-op on the
+            # append path. token_transfers and internal_transfers are NOT
+            # listed: an ERC-1155 batch log can repeat a token_id, and the
+            # reference's depth-string id can collide past 10 siblings —
+            # both need the last-write-wins collapse.
+            skip_batch_dedup=(
+                block_keyed
+                and not b.has_reorg
+                and name in _UNIQUE_BATCH_KEY_ENTITIES
+            ),
+        )
+        for fmt, out_dir in self.cfg.fanout.get(name, []):
+            out = df
+            if fmt == "csv":
+                for fld in out.schema.fields:
+                    if fld.dataType.typeName() in ("array", "map", "struct"):
+                        out = out.withColumn(fld.name, F.to_json(fld.name))
+            (
+                out.write.mode("overwrite")
+                .format(fmt)
+                .option("header", "true")
+                .save(f"{out_dir}/batch={b.batch_id}")
+            )
+        return round(time.time() - __t0, 3)
+
+    def _repair_after_reorg(self, b: _Batch, use_journal: bool) -> None:
+        """Balances are running sums — a reorg invalidates every row of an
+        affected key from the reorged block forward (the carry-in had
+        already absorbed the orphaned deltas). Recompute those keys from the
+        now-committed transfer/transaction tables (the same
+        deferred-recompute pattern candles use). The balance repair and the
+        trade re-pricing touch disjoint tables (token/native balances vs
+        price_marks_latest/dex_trades) and each is a serial chain of small
+        jobs — run them concurrently (the repair phase is a fixed per-reorg
+        latency cost that does not shrink with cores, so halving its chain
+        is a direct scaling-efficiency win)."""
+        args = (b.reorg_blocks, b.hi_bn, b.batch_id, use_journal)
+        with ThreadPoolExecutor(max_workers=2) as rex:
+            f_bal = rex.submit(self._reorg_fix_balances, *args)
+            f_dex = rex.submit(self._reorg_fix_dex_prices, *args)
+            f_bal.result()
+            f_dex.result()
 
     # ---------- reorg balance repair ----------
 
@@ -1907,6 +1382,7 @@ class ChainStreamer:
         from pyspark.sql.types import StructType
 
         from ethereum_etl_spark.operators.balances import (
+            latest_native_balances,
             latest_token_balances,
             native_balances_from_transactions,
             token_balances_from_transfers,
@@ -1973,9 +1449,7 @@ class ChainStreamer:
             # the history and latest-projection merges touch different
             # tables and share only the materialized cache — run them
             # concurrently (halves the repair's small-job latency chain)
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as ex2:
+            with ThreadPoolExecutor(max_workers=2) as ex2:
                 f_hist = ex2.submit(
                     t.merge_upsert,
                     recomputed,
@@ -2038,35 +1512,23 @@ class ChainStreamer:
                     "native_balance",
                 )
 
-            def latest_native(df):
-                return (
-                    df.groupBy("address")
-                    .agg(
-                        F.max_by("value", F.col("block_number")).alias("value"),
-                        F.max("block_number").alias("block_number"),
-                    )
-                    .select("block_number", "address", "value")
-                )
-
             jobs.append(lambda: fix(
                 "native_balances",
                 "native_balances_latest",
                 ["address"],
                 recompute_native,
-                latest_native,
+                latest_native_balances,
             ))
 
         if jobs:
             # the two balance families touch disjoint tables — repair them
             # concurrently (each is itself a serial chain of reads + merges)
-            from concurrent.futures import ThreadPoolExecutor
-
             try:
                 with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
                     for f in [ex.submit(j) for j in jobs]:
                         f.result()
             finally:
-                _release_checkpoints(pinned)
+                release_checkpoints(pinned)
 
     def _reorg_fix_dex_prices(
         self,
@@ -2100,7 +1562,7 @@ class ChainStreamer:
                 reorg_blocks, hi_bn, batch_id, use_journal, pinned
             )
         finally:
-            _release_checkpoints(pinned)
+            release_checkpoints(pinned)
 
     def _reprice_after_reorg(
         self,
@@ -2140,20 +1602,10 @@ class ChainStreamer:
             # repaired history (delete+upsert: a token whose every mark was
             # orphaned leaves the head entirely, so future carries can't
             # resurrect an orphaned price)
-            new_head = (
-                marks_t.read()
-                .join(toks, on="token_address", how="left_semi")
-                .groupBy("token_address")
-                .agg(
-                    F.max_by(
-                        F.struct("block_number", "log_index", "price_stable"),
-                        F.struct("block_number", "log_index"),
-                    ).alias("__m")
-                )
-                .select(
-                    "token_address", "__m.block_number",
-                    "__m.log_index", "__m.price_stable",
-                )
+            from ethereum_etl_spark.operators.pricing import latest_price_marks
+
+            new_head = latest_price_marks(
+                marks_t.read().join(toks, on="token_address", how="left_semi")
             )
             self.tables["price_marks_latest"].merge_upsert(
                 new_head,
@@ -2416,20 +1868,15 @@ class ChainStreamer:
         (streamer.py:136-149 catch-up guard)."""
         wm = self.watermarks.init_resume(start)
         cycles = 0
-        while True:
+        while max_cycles is None or cycles < max_cycles:
             nxt = self.sync_cycle(tailer, wm, allow_skip=allow_catchup_skip)
             if nxt is None:
-                self._drop_prefetch()
-                return wm
+                break
             wm = nxt
             cycles += 1
-            if max_cycles is not None and cycles >= max_cycles:
-                self._drop_prefetch()
-                return wm
+        self._drop_prefetch()
+        return wm
 
     def _drop_prefetch(self) -> None:
-        pf, self._prefetch = self._prefetch, None
-        if pf is not None:
-            pre = pf.result()
-            if pre is not None:
-                self._release_prefetch(pre)
+        """Wait for the in-flight prefetch and release what it holds."""
+        self._take_prefetch(watermark=None)  # no prefetch starts at None

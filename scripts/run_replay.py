@@ -40,7 +40,6 @@ def main():
     cfg = StreamerConfig(
         warehouse=args.warehouse,
         batch_size=args.batch,
-        lag=args.lag,
         partition_size=args.partition_size,
         entity_types=tuple(args.entities.split(",")) if args.entities else DEFAULT_ENTITIES,
         collect_errors=args.collect_errors,

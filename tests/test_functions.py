@@ -47,6 +47,19 @@ def test_hex_to_long(spark):
     )
     vals = [r[0] for r in df.select(hex_to_long(F.col("h"))).collect()]
     assert vals == [16, 0, None, None, 10**18]
+    # the long range ends at 2^63 - 1: larger values are NULL instead of
+    # raising under ANSI mode; the bound counts significant digits only
+    cases = [
+        (hex(2**63 - 1), 2**63 - 1),
+        (hex(2**63), None),
+        (hex(2**64 - 1), None),
+        ("0x1" + "0" * 16, None),  # 17 digits
+        ("0x" + "0" * 62 + "10", 16),  # zero-padded 64-digit word
+        ("0xzz", None),  # not hex
+    ]
+    df = spark.createDataFrame([(h,) for h, _ in cases], "h string")
+    vals = [r[0] for r in df.select(hex_to_long(F.col("h"))).collect()]
+    assert vals == [v for _, v in cases]
 
 
 # (input, hex_to_dec38 value) — also the inputs of the staged-decode
